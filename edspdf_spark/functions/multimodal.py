@@ -540,7 +540,9 @@ def image_dhash(
                             from edspdf_spark.kernel.webp import decode_webp
 
                             hi, lo = dhash_bits(decode_webp(b))
-                    except ValueError:
+                    except Exception:
+                        # zlib.error / struct.error from corrupt bytes too:
+                        # a bad image is a NULL hash, never a dead task
                         hi = lo = None
                 his.append(hi)
                 los.append(lo)

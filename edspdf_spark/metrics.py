@@ -7,7 +7,9 @@ bytes and wall time, tagged with the run id and the partition's length
 bucket. The metrics rows travel IN-BAND (single pass over the data — no
 second job, no accumulator loss on retry) in a union-typed frame and are
 split into two DataFrames by the caller; ``persist()`` on the union keeps
-it one pass when both sides are consumed.
+it one pass when both sides are consumed. The bloc rows come from the
+same Arrow walker as ``extract_blocs`` (``extract_bloc_batch``), so both
+faces emit identical rows.
 """
 
 from __future__ import annotations
@@ -15,13 +17,15 @@ from __future__ import annotations
 import time
 from typing import Iterator, Tuple
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark import TaskContext
 
-from edspdf_spark.kernel.payload import extract_doc
+from edspdf_spark.operators.extract import extract_bloc_batch
 from edspdf_spark.schemas import BLOC_SCHEMA, METRICS_SCHEMA
 
 # bloc columns + nullable metrics columns; `_kind` discriminates
@@ -39,53 +43,41 @@ _UNION_SCHEMA = T.StructType(
         T.StructField("wall_ms", T.LongType(), True),
     ]
 )
+_UNION_ARROW_SCHEMA = to_arrow_schema(_UNION_SCHEMA)
+_METRIC_FIELDS = list(_UNION_ARROW_SCHEMA)[len(BLOC_SCHEMA.fields) + 1 :]
 
 _BLOC_COLS = [f.name for f in BLOC_SCHEMA.fields]
 _METRIC_COLS = [f.name for f in METRICS_SCHEMA.fields]
 
 
 def extract_blocs_with_metrics(
-    pages: DataFrame, run_id: str, extract_style: bool = True
+    pages: DataFrame, run_id: str
 ) -> Tuple[DataFrame, DataFrame, DataFrame]:
     """pages → (blocs, metrics, cached_union) in a single pass — callers
     materialize both faces then ``cached_union.unpersist()``."""
 
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def work(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         t0 = time.perf_counter()
         pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        n_docs = n_blocs = n_errors = bytes_in = 0
-        max_bucket = 0
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf["url"].to_numpy(), pdf["html"].to_numpy()):
-                n_docs += 1
-                nbytes = len(html) if html is not None else 0
-                bytes_in += nbytes
-                max_bucket = max(max_bucket, nbytes.bit_length())
-                blocs, _pages, error = extract_doc(html, extract_style=extract_style)
-                if error:
-                    n_errors += 1
-                    rows.append(
-                        dict.fromkeys(_BLOC_COLS, None)
-                        | {"url": url, "props": [], "error": True, "_kind": "bloc"}
-                    )
-                    continue
-                n_blocs += len(blocs)
-                for b in blocs:
-                    rows.append(
-                        {
-                            "url": url,
-                            **b,
-                            "label": None,
-                            "error": False,
-                            "_kind": "bloc",
-                        }
-                    )
-            out = pd.DataFrame(rows, columns=[f.name for f in _UNION_SCHEMA.fields])
-            yield out
-        wall_ms = int((time.perf_counter() - t0) * 1000)
-        metric = dict.fromkeys([f.name for f in _UNION_SCHEMA.fields], None)
-        metric.update(
+        n_docs = n_blocs = n_errors = bytes_in = max_bucket = 0
+        for batch in batches:
+            blocs = extract_bloc_batch(batch)
+            n = blocs.num_rows
+            # one sentinel row per failed document
+            errors = blocs.column("error").true_count
+            lengths = pc.binary_length(batch.column("html"))
+            n_docs += batch.num_rows
+            n_errors += errors
+            n_blocs += n - errors
+            bytes_in += pc.sum(lengths).as_py() or 0
+            max_bucket = max(max_bucket, (pc.max(lengths).as_py() or 0).bit_length())
+            yield pa.RecordBatch.from_arrays(
+                blocs.columns
+                + [pa.array(["bloc"] * n, pa.string())]
+                + [pa.nulls(n, f.type) for f in _METRIC_FIELDS],
+                schema=_UNION_ARROW_SCHEMA,
+            )
+        metric = dict(
             _kind="metric",
             url="",
             props=[],
@@ -97,11 +89,11 @@ def extract_blocs_with_metrics(
             n_blocs=n_blocs,
             n_errors=n_errors,
             bytes_in=bytes_in,
-            wall_ms=wall_ms,
+            wall_ms=int((time.perf_counter() - t0) * 1000),
         )
-        yield pd.DataFrame([metric], columns=[f.name for f in _UNION_SCHEMA.fields])
+        yield pa.RecordBatch.from_pylist([metric], schema=_UNION_ARROW_SCHEMA)
 
-    union = pages.select("url", "html").mapInPandas(work, schema=_UNION_SCHEMA)
+    union = pages.select("url", "html").mapInArrow(work, schema=_UNION_SCHEMA)
     union = union.persist()
     blocs = union.filter(F.col("_kind") == "bloc").select(*_BLOC_COLS)
     metrics = union.filter(F.col("_kind") == "metric").select(*_METRIC_COLS)

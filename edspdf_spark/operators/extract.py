@@ -1,4 +1,4 @@
-"""P1+P2 — payload → text-bloc rows, as a vectorized ``mapInPandas`` stage.
+"""P1+P2 — payload → text-bloc rows, as a vectorized ``mapInArrow`` stage.
 
 Spark-first re-expression of the reference extractor
 (``edspdf/pipes/extractors/pdfminer.py:117-194``): the binary parse cannot be
@@ -6,7 +6,11 @@ SQL, but everything around it is batch-vectorized — one Arrow batch of pages
 in, one Arrow batch of bloc rows out; normalization, bounds filter, style
 fold and the per-page fuzzy reading-order sort all happen inside the same
 batch with zero extra shuffles. Catalyst still prunes/pushes the scan below
-this stage (only ``url`` and ``html`` are read).
+this stage (only ``url`` and ``html`` are read). The worker reads and writes
+RecordBatches directly: the kernel's bloc tuples and ``fold_runs`` style
+tuples are already in ``BLOC_SCHEMA`` / ``PROPS_FIELD`` order, so they go
+into the Arrow arrays as they are, with no pandas block manager on either
+side.
 
 Error containment: a document that fails to parse emits one sentinel row
 with ``error=true`` (reference sets ``doc.error=True`` and zero boxes,
@@ -21,52 +25,35 @@ executors provided partitions are size-balanced, which is the job of
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from edspdf_spark.kernel.payload import extract_doc_raw
 from edspdf_spark.schemas import BLOC_SCHEMA
 
-_BLOC_COLS = [f.name for f in BLOC_SCHEMA.fields]
+_BLOC_ARROW_SCHEMA = to_arrow_schema(BLOC_SCHEMA)
 
 
-def _extract_batches(
-    batches: Iterator[pd.DataFrame], extract_style: bool
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        urls = pdf["url"].to_numpy()
-        htmls = pdf["html"].to_numpy()
-        for url, html in zip(urls, htmls):
-            # tuple-native kernel; only the props structs stay dicts (the
-            # Arrow struct converter consumes mappings)
-            blocs, _pages, error = extract_doc_raw(html)
-            if error:
-                rows.append(
-                    (url, None, None, None, None, None, None, None, [], None, True)
-                )
-                continue
-            for b in blocs:
-                props = (
-                    [
-                        {
-                            "italic": s[0],
-                            "bold": s[1],
-                            "begin": s[2],
-                            "end": s[3],
-                            "fontname": s[4],
-                        }
-                        for s in b[7]
-                    ]
-                    if extract_style
-                    else []
-                )
-                rows.append(
-                    (url, b[0], b[1], b[2], b[3], b[4], b[5], b[6], props, None, False)
-                )
-        yield pd.DataFrame(rows, columns=_BLOC_COLS)
+def extract_bloc_batch(
+    batch: pa.RecordBatch, extract_style: bool = True
+) -> pa.RecordBatch:
+    """One RecordBatch of pages (url, html) → its bloc rows (BLOC_SCHEMA)."""
+    rows = []
+    urls = batch.column("url").to_pylist()
+    for url, html in zip(urls, batch.column("html").to_pylist()):
+        blocs, _pages, error = extract_doc_raw(html)
+        if error:
+            rows.append((url, None, None, None, None, None, None, None, [], None, True))
+        elif extract_style:
+            rows.extend((url, *b, None, False) for b in blocs)
+        else:
+            rows.extend((url, *b[:7], [], None, False) for b in blocs)
+    cols = zip(*rows) if rows else [()] * len(_BLOC_ARROW_SCHEMA)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, _BLOC_ARROW_SCHEMA)],
+        schema=_BLOC_ARROW_SCHEMA,
+    )
 
 
 def extract_blocs(pages: DataFrame, extract_style: bool = True) -> DataFrame:
@@ -75,8 +62,7 @@ def extract_blocs(pages: DataFrame, extract_style: bool = True) -> DataFrame:
     Narrows the input to (url, html) first so Catalyst prunes every other
     column at the scan (``ReadSchema`` shows only the two columns).
     """
-    narrowed = pages.select("url", "html")
-    return narrowed.mapInPandas(
-        lambda it: _extract_batches(it, extract_style),
+    return pages.select("url", "html").mapInArrow(
+        lambda batches: (extract_bloc_batch(b, extract_style) for b in batches),
         schema=BLOC_SCHEMA,
     )

@@ -14,14 +14,12 @@ per-document pipeline into the extract stage:
       → mapInArrow(extract → NumPy overlap-argmax align → aggregate)
       → aggregates(url, label, text, properties)
 
-(``mapInArrow`` rather than ``mapInPandas``: the kernel consumes the
-RecordBatch and emits pyarrow arrays directly — no pandas block manager
-on either side of the worker; measured ~8% end-to-end at 240k docs /
-local[32], identical bytes. ``arrow=False`` keeps the pandas face.)
+(``mapInArrow``: the kernel consumes the RecordBatch and emits pyarrow
+arrays directly — no pandas block manager on either side of the worker.)
 
 Zero shuffles (the optional skew repartition upstream is the only
 exchange). Semantics are byte-identical to the composed path — all three
-per-document kernels are the same code (`kernel.payload.extract_doc`,
+per-document kernels are the same code (`kernel.payload.extract_doc_raw`,
 `kernel.overlap.align_labels_kernel`, `kernel.aggregate.aggregate_doc`),
 and tests assert fused == composed on the synthetic corpus, while the
 driver oracle checks the fused output against DuckDB SQL.
@@ -37,8 +35,9 @@ from __future__ import annotations
 from typing import Dict, Iterator, List, Optional, Sequence, Tuple, Union
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from edspdf_spark.kernel.aggregate import aggregate_doc
 from edspdf_spark.kernel.overlap import align_labels_kernel
@@ -47,82 +46,7 @@ from edspdf_spark.operators.aggregate import to_markdown
 from edspdf_spark.operators.classify import MASK_INF
 from edspdf_spark.schemas import AGG_SCHEMA
 
-_AGG_COLS = [f.name for f in AGG_SCHEMA.fields]
-
-
-def _doc_pipeline(
-    masks: Sequence[Tuple[Optional[str], float, float, float, float]],
-    threshold: float,
-    markdown: bool,
-    extract_style: bool,
-    sort: bool,
-    new_line_threshold: float,
-    new_paragraph_threshold: float,
-    label_map: Optional[Dict[str, Union[str, List[str]]]],
-):
-    """Per-document kernel closure shared by the pandas and arrow faces:
-    (url, html) pairs in, AGG_SCHEMA column lists out."""
-    # classify_mask's stack: user masks + the ±1e4 pollution catch-all; the
-    # align kernel appends its own ±1e5 None-label catch-all last.
-    src = np.array(
-        [[m[1], m[3], m[2], m[4]] for m in masks]  # (x0, x1, y0, y1)
-        + [[-MASK_INF, MASK_INF, -MASK_INF, MASK_INF]],
-        dtype=np.float64,
-    )
-    src_labels: List[Optional[str]] = [m[0] for m in masks] + ["pollution"]
-
-    def run_docs(pairs) -> Dict[str, list]:
-        out: Dict[str, list] = {c: [] for c in _AGG_COLS}
-        for url, html in pairs:
-            # tuple-native extract — the dict view exists for the
-            # composed operator's schema; materializing it here just to
-            # unpack it again cost ~15% of the kernel
-            blocs, _pages, error = extract_doc_raw(html)
-            if error or not blocs:
-                continue
-            dst = np.array(
-                [[b[2], b[4], b[3], b[5]] for b in blocs],
-                dtype=np.float64,
-            )
-            idx = align_labels_kernel(src, dst, threshold)
-            lines = [
-                (
-                    b[0],
-                    b[2],
-                    b[3],
-                    b[4],
-                    b[5],
-                    b[6],
-                    b[7] if extract_style else [],
-                    src_labels[i] if i < len(src_labels) else None,
-                )
-                for b, i in zip(blocs, idx)
-            ]
-            agg = aggregate_doc(
-                lines,
-                sort=sort,
-                new_line_threshold=new_line_threshold,
-                new_paragraph_threshold=new_paragraph_threshold,
-                label_map=label_map,
-            )
-            for label, (text, styles) in agg.items():
-                props = [
-                    {
-                        "italic": s[0],
-                        "bold": s[1],
-                        "begin": s[2],
-                        "end": s[3],
-                        "fontname": s[4],
-                    }
-                    for s in styles
-                ]
-                out["url"].append(url)
-                out["label"].append(label)
-                out["text"].append(to_markdown(text, props) if markdown else text)
-                out["properties"].append(props)
-        return out
-
-    return run_docs
+_AGG_ARROW_SCHEMA = to_arrow_schema(AGG_SCHEMA)
 
 
 def run_pipeline_fused(
@@ -135,61 +59,76 @@ def run_pipeline_fused(
     new_line_threshold: float = 0.2,
     new_paragraph_threshold: float = 1.5,
     label_map: Optional[Dict[str, Union[str, List[str]]]] = None,
-    arrow: bool = True,
 ) -> DataFrame:
-    """pages(url, html, …) → aggregates, one fused Arrow-batched stage.
+    """pages(url, html, …) → aggregates, one fused ``mapInArrow`` stage.
 
-    ``arrow=True`` (default) rides ``mapInArrow`` — the kernel reads the
-    RecordBatch columns and emits pyarrow arrays directly, skipping the
-    pandas block-manager round-trip on both sides of the worker (the
-    output side otherwise builds object Series only for Spark to convert
-    them straight back to Arrow). ``arrow=False`` keeps the mapInPandas
-    face; both run the identical per-document kernel and tests assert
-    byte-identical output.
+    The worker reads the RecordBatch columns and emits pyarrow arrays
+    directly, skipping the pandas block-manager round-trip on both sides.
     """
-    run_docs = _doc_pipeline(
-        masks,
-        threshold,
-        markdown,
-        extract_style,
-        sort,
-        new_line_threshold,
-        new_paragraph_threshold,
-        label_map,
+    # classify_mask's stack: user masks + the ±1e4 pollution catch-all; the
+    # align kernel appends its own ±1e5 None-label catch-all last.
+    src = np.array(
+        [[m[1], m[3], m[2], m[4]] for m in masks]  # (x0, x1, y0, y1)
+        + [[-MASK_INF, MASK_INF, -MASK_INF, MASK_INF]],
+        dtype=np.float64,
     )
+    src_labels: List[Optional[str]] = [m[0] for m in masks] + ["pollution"]
 
-    if arrow:
-        import pyarrow as pa
-
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        arrow_schema = to_arrow_schema(AGG_SCHEMA)
-        fields = [arrow_schema.field(c) for c in _AGG_COLS]
-
-        def work_arrow(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-            for batch in batches:
-                out = run_docs(
-                    zip(
-                        batch.column("url").to_pylist(),
-                        batch.column("html").to_pylist(),
+    def work(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            urls, labels, texts, properties = out = ([], [], [], [])
+            for url, html in zip(
+                batch.column("url").to_pylist(), batch.column("html").to_pylist()
+            ):
+                # tuple-native extract — materializing the dict view
+                # (extract_doc) just to unpack it again cost ~15% of the
+                # kernel
+                blocs, _pages, error = extract_doc_raw(html)
+                if error or not blocs:
+                    continue
+                dst = np.array(
+                    [[b[2], b[4], b[3], b[5]] for b in blocs],
+                    dtype=np.float64,
+                )
+                idx = align_labels_kernel(src, dst, threshold)
+                lines = [
+                    (
+                        b[0],
+                        b[2],
+                        b[3],
+                        b[4],
+                        b[5],
+                        b[6],
+                        b[7] if extract_style else [],
+                        src_labels[i] if i < len(src_labels) else None,
                     )
+                    for b, i in zip(blocs, idx)
+                ]
+                agg = aggregate_doc(
+                    lines,
+                    sort=sort,
+                    new_line_threshold=new_line_threshold,
+                    new_paragraph_threshold=new_paragraph_threshold,
+                    label_map=label_map,
                 )
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(out[c], type=f.type) for c, f in zip(_AGG_COLS, fields)],
-                    schema=pa.schema(fields),
-                )
-
-        return pages.select("url", "html").mapInArrow(work_arrow, schema=AGG_SCHEMA)
-
-    def work(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = run_docs(zip(pdf["url"].to_numpy(), pdf["html"].to_numpy()))
-            # explicit object dtype: a zero-row batch (e.g. all-corrupt
-            # documents) would otherwise default to float64 columns, which
-            # Arrow cannot cast to string / list<struct>
-            yield pd.DataFrame(
-                {c: pd.Series(out[c], dtype=object) for c in _AGG_COLS},
-                columns=_AGG_COLS,
+                for label, (text, styles) in agg.items():
+                    props = [
+                        {
+                            "italic": s[0],
+                            "bold": s[1],
+                            "begin": s[2],
+                            "end": s[3],
+                            "fontname": s[4],
+                        }
+                        for s in styles
+                    ]
+                    urls.append(url)
+                    labels.append(label)
+                    texts.append(to_markdown(text, props) if markdown else text)
+                    properties.append(props)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(out, _AGG_ARROW_SCHEMA)],
+                schema=_AGG_ARROW_SCHEMA,
             )
 
-    return pages.select("url", "html").mapInPandas(work, schema=AGG_SCHEMA)
+    return pages.select("url", "html").mapInArrow(work, schema=AGG_SCHEMA)

@@ -9,6 +9,8 @@ argmax, groupBy url, Arrow struct round-trips — not just the math.
 
 from __future__ import annotations
 
+from collections import Counter
+
 import numpy as np
 import pytest
 
@@ -19,6 +21,7 @@ from edspdf_spark.kernel.payload import extract_doc
 from edspdf_spark.operators.aggregate import aggregate_simple
 from edspdf_spark.operators.classify import classify_mask
 from edspdf_spark.operators.extract import extract_blocs
+from edspdf_spark.schemas import BLOC_SCHEMA
 
 N_DOCS = 120
 MASKS = [("body", 0.2, 0.3, 0.9, 0.6)]
@@ -90,18 +93,52 @@ def test_byte_identical_text_per_url(spark_result):
     assert n_checked > 100  # the corpus really produced aggregates
 
 
-def test_extract_counts_and_errors(spark):
-    pages = build_pages_df(spark, N_DOCS, partitions=8)
-    blocs = extract_blocs(pages).cache()
-    try:
-        total = blocs.count()
-        n_err_docs = blocs.filter("error").select("url").distinct().count()
-        expected_err = sum(1 for i in range(N_DOCS) if i % 501 == 500)
-        assert n_err_docs == expected_err
-        # independent count from the oracle
-        expected_blocs = sum(
-            len(extract_doc(gen_doc(i)["html"])[0]) for i in range(N_DOCS)
+def _oracle_bloc_rows(url, html, extract_style):
+    """All 11 BLOC_SCHEMA columns of one document, from the dict view."""
+    blocs, _pages, error = extract_doc(html, extract_style=extract_style)
+    if error:
+        return [(url, None, None, None, None, None, None, None, (), None, True)]
+    return [
+        (
+            url,
+            b["page_num"],
+            b["bloc_ord"],
+            b["x0"],
+            b["y0"],
+            b["x1"],
+            b["y1"],
+            b["text"],
+            tuple((p["italic"], p["bold"], p["begin"], p["end"], p["fontname"]) for p in b["props"]),
+            None,
+            False,
         )
-        assert total - n_err_docs == expected_blocs
-    finally:
-        blocs.unpersist()
+        for b in blocs
+    ]
+
+
+def test_extract_counts_and_errors(spark):
+    """Row-level differential: every extract_blocs row, all 11 columns,
+    equals the driver-local extract_doc view, with and without style runs
+    — doc 500's corrupt payload and a NULL html each yield one error
+    sentinel row."""
+    docs = [(d["url"], d["html"]) for d in map(gen_doc, [*range(N_DOCS), 500])]
+    docs.append(("https://synth.test/null-html", None))
+    pages = (
+        build_pages_df(spark, N_DOCS, partitions=8)
+        .select("url", "html")
+        .union(spark.createDataFrame(docs[N_DOCS:], "url string, html binary"))
+    )
+    for extract_style in (True, False):
+        blocs = extract_blocs(pages, extract_style=extract_style)
+        assert blocs.columns == [f.name for f in BLOC_SCHEMA.fields]
+        got = Counter(
+            tuple(r[:8]) + (tuple(tuple(p) for p in r.props), r.label, r.error)
+            for r in blocs.collect()
+        )
+        expected = Counter(
+            row for url, html in docs for row in _oracle_bloc_rows(url, html, extract_style)
+        )
+        assert got == expected, extract_style
+        assert sum(n for row, n in got.items() if row[-1]) == 2
+        # style runs really reached the rows
+        assert any(row[8] for row in got) == extract_style

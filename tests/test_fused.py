@@ -90,6 +90,7 @@ def test_fused_plan_has_no_exchange(spark, tmp_path):
     assert "Exchange" not in plan
     scan_line = next(l for l in plan.splitlines() if "ReadSchema" in l)
     assert "url" in scan_line and "html" in scan_line and "warc_ts" not in scan_line
+    assert "MapInArrow" in plan and "MapInPandas" not in plan
 
 
 def test_all_corrupt_corpus_yields_zero_rows(spark):

@@ -245,9 +245,11 @@ def _dhash_replica(w, h, c, payload, hash_w=8, hash_h=8):
 
 
 def test_image_dhash_matches_replica_and_nulls(spark):
+    import struct
+
     import numpy as np
 
-    from edspdf_spark.functions.multimodal import encode_image, image_dhash
+    from edspdf_spark.functions.multimodal import _PNG_SIG, encode_image, encode_png, image_dhash
 
     rng = np.random.default_rng(7)
     rows = []
@@ -259,11 +261,16 @@ def test_image_dhash_matches_replica_and_nulls(spark):
     rows.append((90, encode_image(4, 4, 1, b"\x00" * 16)))  # too small -> NULL
     rows.append((91, b"JUNK"))                               # corrupt -> NULL
     rows.append((92, encode_image(36, 24, 3, b"\x01" * 10)))  # truncated -> NULL
+    # corrupt PNGs raise zlib.error / struct.error, not ValueError
+    png = encode_png(rng.integers(0, 256, size=(24, 36), dtype=np.uint8))
+    idat = png.index(b"IDAT") + 4
+    rows.append((93, png[:idat] + b"\xff" * 8 + png[idat + 8 :]))  # corrupt IDAT
+    rows.append((94, _PNG_SIG + struct.pack(">I", 13) + b"IHDR" + b"\x00" * 4))  # IHDR cut short
     df = spark.createDataFrame(rows, "doc_id long, media binary")
     got = {r.doc_id: (r.dhash_hi, r.dhash_lo) for r in image_dhash(df).collect()}
     for did, hl in expect.items():
         assert got[did] == hl, did
-    for did in (90, 91, 92):
+    for did in (90, 91, 92, 93, 94):
         assert got[did] == (None, None)
 
 

@@ -32,6 +32,7 @@ def test_extract_scan_prunes_to_url_html(spark, pages_parquet):
     scan_line = next(l for l in plan.splitlines() if "ReadSchema" in l)
     assert "url" in scan_line and "html" in scan_line
     assert "warc_ts" not in scan_line and "lang" not in scan_line
+    assert "MapInArrow" in plan and "MapInPandas" not in plan
 
 
 def test_literal_mask_classify_adds_no_shuffle(spark, pages_parquet):
