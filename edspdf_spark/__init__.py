@@ -11,6 +11,9 @@ anywhere.
 
 __version__ = "0.1.0"
 
+# installs the stat-checked zipimporter.invalidate_caches in every process
+# that imports the engine (drivers and Python workers alike)
+from edspdf_spark import _zipimport  # noqa: F401
 from edspdf_spark.session import get_spark
 from edspdf_spark.schemas import (
     PAGES_SCHEMA,

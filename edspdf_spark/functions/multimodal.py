@@ -113,6 +113,11 @@ def _parse_one(blob: Optional[bytes]) -> dict:
             pos = 2
             while pos + 9 < len(b) and b[pos] == 0xFF:
                 marker = b[pos + 1]
+                if marker == 0xFF:  # fill byte before a marker
+                    pos += 1
+                    continue
+                if marker in (0xD9, 0xDA):  # EOI / SOS: no frame header
+                    break
                 if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
                     pos += 2
                     continue

@@ -428,6 +428,15 @@ def _argb_planes(flat: np.ndarray, xsize: int, ysize: int) -> np.ndarray:
     ).astype(np.uint8)
 
 
+def _argb_flat(img: np.ndarray) -> np.ndarray:
+    """(h, w, 4) uint8 [a, r, g, b] planes → flat uint64 argb (the
+    inverse of :func:`_argb_planes`)."""
+    a = img.astype(np.uint64)
+    return (
+        (a[:, :, 0] << 24) | (a[:, :, 1] << 16) | (a[:, :, 2] << 8) | a[:, :, 3]
+    ).ravel()
+
+
 def _inv_subtract_green(img: np.ndarray) -> None:
     g = img[:, :, 2].astype(np.uint16)
     img[:, :, 1] = ((img[:, :, 1].astype(np.uint16) + g) & 0xFF).astype(np.uint8)
@@ -632,6 +641,8 @@ def decode_vp8l(payload: bytes) -> np.ndarray:
     for t in reversed(transforms):
         if t[0] == "palette":
             _, palette, unpacked_w, packed_w = t
+            if img is not None:  # transforms read after color indexing
+                flat = _argb_flat(img)
             flat = _inv_color_indexing(flat, palette, unpacked_w, ysize, packed_w)
             cur_w = unpacked_w
             img = None

@@ -47,7 +47,7 @@ parse work) into 1-2 partitions and the extract stage runs 4-7× slower at
 local[32] (24s vs 5s, 12k docs). Homogeneous-cost partitions are exactly
 wrong for a straggler-free stage; uniform *mixing* is right.
 
-All downstream stages (extract mapInPandas, classifier expressions) are
+All downstream stages (extract mapInArrow, classifier expressions) are
 partitioning-agnostic, so either tool fixes the whole pipeline's
 task-time distribution.
 """
@@ -74,7 +74,11 @@ def scan_partition_bytes(
 
     ~8 waves per core keeps the stage's straggler tail under ~6% (half a
     wave) while per-task overhead stays negligible for parse-heavy work.
-    Clamped to [1 MB, 128 MB]: below 1 MB task setup dominates, above
+    Clamped to [1 MB, 128 MB]. Below 1 MB the fixed per-task cost passes
+    about a tenth of a split's work: ``tools/worker_task_cost.py`` reads
+    0.03–0.04 Python-worker CPU-s and 0.03–0.06 s wall per task at
+    ``local[2]`` (4-vCPU VM), against 0.25–0.4 s of single-core fused
+    payload work per MB of parquet (the benchmark's kernel replay). Above
     128 MB (Spark's default) there is nothing to gain.
     """
     per = total_bytes // max(1, cores * waves)

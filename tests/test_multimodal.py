@@ -427,6 +427,17 @@ def test_media_meta_real_codec_headers():
     rgba = np.dstack([arr, np.full((4, 5), 7, np.uint8)])
     assert _parse_one(encode_webp_lossless(rgba))["channels"] == 4
 
+    # fill bytes may precede any marker; the walk must step over them
+    jpg = encode_jpeg(arr, quality=80)
+    sof = jpg.index(b"\xff\xc0")
+    m = _parse_one(jpg[:sof] + b"\xff\xff" + jpg[sof:])
+    assert (m["width"], m["height"], m["channels"]) == (5, 4, 3)
+    # EOI before any SOFn ends the image: trailing bytes are not a frame
+    m = _parse_one(
+        b"\xff\xd8\xff\xd9\x00\x02" + jpg[sof : sof + 12] + b"\x00" * 8
+    )
+    assert (m["width"], m["height"], m["channels"]) == (None, None, None)
+
     vp8 = (
         b"RIFF" + _s.pack("<I", 30) + b"WEBP" + b"VP8 " + _s.pack("<I", 12)
         + b"\x00" * 3 + b"\x9d\x01\x2a" + _s.pack("<HH", 640, 480) + b"\x00\x00"

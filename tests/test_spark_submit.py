@@ -45,6 +45,25 @@ _JOB = textwrap.dedent(
     n = back.count()
     n_urls = back.select("url").distinct().count()
     print(f"SUBMIT_OK rows={n} urls={n_urls}")
+
+    # a closure that carries the package imports it from the artifact in
+    # each worker, which installs the engine's zipimport method there
+    import edspdf_spark
+    import pyarrow as pa
+
+    def report(batches, _engine=edspdf_spark):
+        import zipimport
+
+        for _ in batches:
+            pass
+        method = zipimport.zipimporter.invalidate_caches
+        yield pa.RecordBatch.from_pydict(
+            {"engine": [method.__module__ == "edspdf_spark._zipimport"]}
+        )
+
+    flags = [r.engine for r in spark.range(8, numPartitions=4)
+             .mapInArrow(report, "engine boolean").collect()]
+    print(f"ZIPIMPORT tasks={len(flags)} engine={sum(flags)}")
     spark.stop()
     """
 )
@@ -88,3 +107,6 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
     assert "urls=" in line and int(line.split("urls=")[1]) > 0
     # the sink is a real parquet dataset, not an empty marker
     assert any(f.endswith(".parquet") for f in os.listdir(out_dir))
+    # before 3.13 every worker task runs the stat-checked zipimport method
+    engine_tasks = 4 if sys.version_info < (3, 13) else 0
+    assert f"ZIPIMPORT tasks=4 engine={engine_tasks}" in proc.stdout, proc.stdout[-2000:]

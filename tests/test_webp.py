@@ -216,6 +216,48 @@ class TestDecoderOnlyPaths:
         out = decode_vp8l(bw.flush())
         assert (out == img[:, :, [1, 2, 3, 0]]).all()
 
+    def test_predictor_read_after_color_indexing(self):
+        """A predictor read AFTER color indexing runs over the index image,
+        and the palette lookup must see its output, not the residuals."""
+        rng = np.random.default_rng(7)
+        w, h, bits, n_colors = 8, 6, 2, 17  # 17 colors: one index per pixel
+        palette = rng.integers(0, 1 << 32, n_colors, dtype=np.uint64)
+        idx = rng.integers(0, n_colors, (h, w)).astype(np.uint8)
+        packed = np.zeros((h, w, 4), np.uint8)
+        packed[:, :, 0] = 255
+        packed[:, :, 2] = idx  # the index sits in the green channel
+        modes = [1, 2, 7, 9]  # 2x2 blocks of 4x4 pixels
+        res = self._predict(packed, modes, bits, w, h)
+
+        bw = _BitWriter()
+        _write_header(bw, w, h)
+        bw.write_bits(1, 1)
+        bw.write_bits(3, 2)  # color indexing first
+        bw.write_bits(n_colors - 1, 8)
+        deltas, prev = [], 0
+        for c in map(int, palette):
+            deltas.append(sum(
+                (((c >> s) - (prev >> s)) & 0xFF) << s for s in (24, 16, 8, 0)
+            ))
+            prev = c
+        _encode_entropy_image(
+            bw, np.array(deltas, dtype=np.uint64), n_colors, use_lz77=False
+        )
+        bw.write_bits(1, 1)
+        bw.write_bits(0, 2)  # then a predictor over the index image
+        bw.write_bits(bits - 2, 3)
+        sub = np.array([0xFF000000 | (m << 8) for m in modes], dtype=np.uint64)
+        _encode_entropy_image(bw, sub, 2, use_lz77=False)
+        bw.write_bits(0, 1)
+        _encode_entropy_image(bw, _flat_argb(res), w, is_level0=True)
+
+        out = decode_vp8l(bw.flush())
+        argb = palette[idx].astype(np.uint64)
+        want = np.stack(
+            [(argb >> s) & 0xFF for s in (16, 8, 0, 24)], axis=-1
+        ).astype(np.uint8)
+        assert (out == want).all()
+
     def test_meta_prefix_groups(self):
         """Two code groups split left/right; each half uses colors only
         its own group's codes can express."""
