@@ -8,15 +8,25 @@ fonts with Identity-H encoding + ToUnicode CMaps — and replicates the
 pdfminer layout pass the reference depends on
 (``edspdf/pipes/extractors/pdfminer.py:117-194``):
 
-* per-char advance/geometry math of pdfminer's ``render_string_horizontal``
+* per-glyph advance/geometry math of pdfminer's ``render_string_horizontal``
   / ``LTChar`` (text matrix × CTM, ``adv = width × fontsize × Tz``,
   charspace/wordspace, bbox ``[0, descent+rise] × [adv, descent+rise+size]``);
-* char→line grouping with the reference's LAParams (``line_overlap=0.5,
+* glyph→line grouping with the reference's LAParams (``line_overlap=0.5,
   char_margin=2.05, word_margin=0.1``) following pdfminer
   ``LTLayoutContainer.group_objects`` and the ``LTTextLineHorizontal``
-  word-margin space insertion;
-* ``all_texts=False``: text inside Form XObjects (pdfminer ``LTFigure``)
-  is NOT part of the page's text lines, so ``Do`` is ignored.
+  word-margin space insertion.
+
+Both run as ONE streaming pass per page (:func:`_interpret_page`): a
+glyph's box is a handful of floats (no per-glyph object) that feeds the
+grouping state machine, the open line's bbox and its runs in the same
+step. Consecutive glyphs of one ``(fontname, upright)`` share a run and a
+word-margin space joins the run before it, so clean lines reach the style
+fold as a few runs instead of one run per glyph; the fold result is the
+same (whitespace takes the previous char's style). Glyph text and width
+come from a per-font ``cid → (text, width)`` table filled lazily.
+
+``all_texts=False``: text inside Form XObjects (pdfminer ``LTFigure``) is
+NOT part of the page's text lines, so ``Do`` is ignored.
 
 The output shape matches :func:`edspdf_spark.kernel.payload.parse_payload`
 — ``(pages, lines)`` with lines in absolute bottom-left page coordinates —
@@ -38,6 +48,7 @@ exactly like the reference maps ``PDFException`` (pdfminer.py:130-135).
 from __future__ import annotations
 
 import re
+import struct
 import zlib
 from typing import Dict, List, Optional, Tuple
 
@@ -768,7 +779,7 @@ class _Font:
 
     __slots__ = (
         "fontname", "multibyte", "vertical", "widths", "default_width",
-        "descent", "to_unicode", "tu_ranges", "encoding",
+        "descent", "to_unicode", "tu_ranges", "encoding", "glyphs",
     )
 
     def __init__(self):
@@ -781,20 +792,26 @@ class _Font:
         self.to_unicode: Optional[Dict[int, str]] = None
         self.tu_ranges: list = []
         self.encoding: Optional[List[Optional[str]]] = None
+        # cid → (text, width × 0.001), filled by glyph() as codes are met
+        self.glyphs: Dict[int, Tuple[str, float]] = {}
 
-    def decode(self, s: bytes) -> List[int]:
-        if self.multibyte:
-            # Identity-H/V: 2-byte big-endian codes
-            return [
-                (s[i] << 8) | (s[i + 1] if i + 1 < len(s) else 0)
-                for i in range(0, len(s), 2)
-            ]
-        return list(s)
+    def codes(self, s: bytes):
+        """Character codes of one string operand: its bytes, or for
+        Identity-H/V 2-byte big-endian codes (an odd tail byte is the high
+        byte of a last code)."""
+        if not self.multibyte:
+            return s
+        if len(s) & 1:
+            s += b"\x00"
+        return struct.unpack(">%dH" % (len(s) >> 1), s)
 
-    def char_width(self, cid: int) -> float:
-        return self.widths.get(cid, self.default_width) * 0.001
+    def glyph(self, cid: int) -> Tuple[str, float]:
+        """(text, width) of one code, memoized in :attr:`glyphs`."""
+        g = (self._text(cid), self.widths.get(cid, self.default_width) * 0.001)
+        self.glyphs[cid] = g
+        return g
 
-    def char_text(self, cid: int) -> str:
+    def _text(self, cid: int) -> str:
         if self.to_unicode is not None:
             u = self.to_unicode.get(cid)
             if u is not None:
@@ -803,15 +820,12 @@ class _Font:
                 if lo <= cid <= hi:
                     unit = base + cid - lo
                     if prefix:
-                        u = (prefix + unit.to_bytes(2, "big")).decode(
+                        return (prefix + unit.to_bytes(2, "big")).decode(
                             "utf-16-be", "replace"
                         )
-                    elif 0xD800 <= unit <= 0xDFFF:
-                        u = "�"
-                    else:
-                        u = chr(unit)
-                    self.to_unicode[cid] = u  # memoize
-                    return u
+                    if 0xD800 <= unit <= 0xDFFF:
+                        return "�"
+                    return chr(unit)
         if self.encoding is not None and 0 <= cid < 256:
             u = self.encoding[cid]
             if u is not None:
@@ -939,23 +953,6 @@ _MATRIX_ID = (1.0, 0.0, 0.0, 1.0, 0.0, 0.0)
 _OP_RE = re.compile(rb"[A-Za-z'\"][A-Za-z0-9*'\"]*")
 
 
-class _Char:
-    """pdfminer LTChar equivalent (geometry + text + style source)."""
-
-    __slots__ = ("x0", "y0", "x1", "y1", "text", "fontname", "upright", "height", "width")
-
-    def __init__(self, x0, y0, x1, y1, text, fontname, upright):
-        self.x0 = x0
-        self.y0 = y0
-        self.x1 = x1
-        self.y1 = y1
-        self.text = text
-        self.fontname = fontname
-        self.upright = upright
-        self.width = x1 - x0
-        self.height = y1 - y0
-
-
 def _tokenize_content(data: bytes):
     """Yield ('operand', value) / ('op', name) tokens of a content stream."""
     pos = 0
@@ -1018,17 +1015,47 @@ class _TextState:
         return c
 
 
-def _interpret_page(doc: PdfDocument, page: dict, ctm) -> List[_Char]:
+# pdfminer LAParams of the reference (line_overlap=0.5, char_margin=2.05,
+# word_margin=0.1; detect_vertical=False)
+_LINE_OVERLAP = 0.5
+_CHAR_MARGIN = 2.05
+_WORD_MARGIN = 0.1
+
+
+def _interpret_page(doc: PdfDocument, page: dict, ctm, page_num: int, lines: list) -> None:
+    """Run one page's content stream and append its text lines to
+    ``lines`` as ``(page_num, x0, y0, x1, y1, runs)``.
+
+    pdfminer's ``group_objects`` (horizontal only) splits the page's glyph
+    stream wherever two consecutive glyphs fail its pair test — its
+    "pending first glyph" state is just a one-glyph line — so each glyph
+    either extends the open line or closes it and opens the next, across
+    string and BT/ET boundaries. The line bbox is folded with ``<``/``>``
+    in glyph order, exactly as builtin ``min``/``max`` fold (NaN included).
+    """
     content = doc.content_bytes(page)
     resources = doc.get(page, "Resources") or {}
     fonts_res = doc.get(resources, "Font") or {}
 
-    chars: List[_Char] = []
     ts = _TextState()
     gs_stack: List[tuple] = []
     args: List[object] = []
+    # layout state carried across strings: the previous glyph's box and
+    # size, the open line's bbox, its finished runs (None until the page's
+    # first glyph) and the open run's (fontname, upright) and text parts
+    px0 = py0 = px1 = py1 = pw = ph = 0.0
+    lx0 = ly0 = lx1 = ly1 = 0.0
+    runs: Optional[list] = None
+    run_key: Optional[tuple] = None
+    run_parts: List[str] = []
+
+    def close_line() -> None:
+        runs.append((*run_key, "".join(run_parts)))
+        lines.append((page_num, lx0, ly0, lx1, ly1, runs))
 
     def render_string(seq) -> None:
+        nonlocal px0, py0, px1, py1, pw, ph, lx0, ly0, lx1, ly1
+        nonlocal runs, run_key, run_parts
         font = ts.font
         if font is None:
             return
@@ -1043,10 +1070,10 @@ def _interpret_page(doc: PdfDocument, page: dict, ctm) -> List[_Char]:
         needcharspace = False
         descent = font.descent * fontsize
         # hot loop: everything but x is constant per string — hoist the
-        # translate/apply-matrix algebra out of the per-char calls. Every
+        # translate/apply-matrix algebra out of the per-glyph work. Every
         # retained expression keeps the ORIGINAL association order
-        # (x*a + y*c + e etc.), so geometry stays bit-identical to the
-        # pre-optimization kernel (pinned by test_letter_pdf_snapshot).
+        # (x*a + y*c + e etc.), so geometry stays bit-identical to
+        # pdfminer's render_string_horizontal / LTChar arithmetic.
         a, b, c, d, e, f = matrix
         upright = (0 < a * d * scaling) and (b * c <= 0)
         yc = y * c
@@ -1057,11 +1084,10 @@ def _interpret_page(doc: PdfDocument, page: dict, ctm) -> List[_Char]:
         ddr = d * dr
         cdrf = c * drf
         ddrf = d * drf
-        cw = font.char_width
-        ct = font.char_text
-        fontname = font.fontname
-        decode = font.decode
-        append = chars.append
+        glyphs = font.glyphs
+        glyph = font.glyph
+        codes = font.codes
+        key = (font.fontname, upright)
         for obj in seq:
             if isinstance(obj, (int, float)):
                 x -= obj * dxscale
@@ -1069,10 +1095,13 @@ def _interpret_page(doc: PdfDocument, page: dict, ctm) -> List[_Char]:
                 continue
             if not isinstance(obj, bytes):
                 continue
-            for cid in decode(obj):
+            for cid in codes(obj):
                 if needcharspace:
                     x += charspace
-                adv = cw(cid) * fontsize * scaling
+                g = glyphs.get(cid)
+                if g is None:
+                    g = glyph(cid)
+                adv = g[1] * fontsize * scaling
                 ex = x * a + yc + e
                 fy = x * b + yd + f
                 p0x = a * 0.0 + cdr + ex
@@ -1081,7 +1110,55 @@ def _interpret_page(doc: PdfDocument, page: dict, ctm) -> List[_Char]:
                 p1y = b * adv + ddrf + fy
                 x0, x1 = (p0x, p1x) if p0x <= p1x else (p1x, p0x)
                 y0, y1 = (p0y, p1y) if p0y <= p1y else (p1y, p0y)
-                append(_Char(x0, y0, x1, y1, ct(cid), fontname, upright))
+                w = x1 - x0
+                h = y1 - y0
+                # group_objects: vertical overlap > line_overlap × min
+                # height, then horizontal distance < char_margin × max width
+                same_line = False
+                if runs is not None:
+                    if y0 <= py1 and py0 <= y1:
+                        va = abs(py0 - y1)
+                        vb = abs(py1 - y0)
+                        vo = vb if vb < va else va
+                    else:
+                        vo = 0.0
+                    if vo > _LINE_OVERLAP * (h if h < ph else ph):
+                        if x0 <= px1 and px0 <= x1:
+                            hd = 0.0
+                        else:
+                            ha = abs(px0 - x1)
+                            hb = abs(px1 - x0)
+                            hd = hb if hb < ha else ha
+                        same_line = hd < _CHAR_MARGIN * (w if w > pw else pw)
+                if same_line:
+                    if x0 < lx0:
+                        lx0 = x0
+                    if y0 < ly0:
+                        ly0 = y0
+                    if x1 > lx1:
+                        lx1 = x1
+                    if y1 > ly1:
+                        ly1 = y1
+                    # LTAnno space: it joins the run before it, since the
+                    # style fold gives whitespace the previous char's style
+                    if px1 < x0 - _WORD_MARGIN * (h if h > w else w):
+                        run_parts.append(" ")
+                    # key is one tuple per string, so an identity miss
+                    # means the run began in an earlier string
+                    if run_key is not key:
+                        if run_key != key:
+                            runs.append((*run_key, "".join(run_parts)))
+                            run_parts = []
+                        run_key = key
+                    run_parts.append(g[0])
+                else:
+                    if runs is not None:
+                        close_line()
+                    lx0, ly0, lx1, ly1 = x0, y0, x1, y1
+                    runs = []
+                    run_key = key
+                    run_parts = [g[0]]
+                px0, py0, px1, py1, pw, ph = x0, y0, x1, y1, w, h
                 x += adv
                 if cid == 32 and wordspace:
                     x += wordspace
@@ -1165,90 +1242,8 @@ def _interpret_page(doc: PdfDocument, page: dict, ctm) -> List[_Char]:
         except (TypeError, ValueError):
             pass
         args = []
-    return chars
-
-
-# --------------------------------------------------------------------------
-# layout analysis: chars → horizontal lines (pdfminer group_objects with
-# line_overlap=0.5, char_margin=2.05, word_margin=0.1; detect_vertical=False)
-
-_LINE_OVERLAP = 0.5
-_CHAR_MARGIN = 2.05
-_WORD_MARGIN = 0.1
-
-
-def _hdistance(a: _Char, b: _Char) -> float:
-    if b.x0 <= a.x1 and a.x0 <= b.x1:
-        return 0.0
-    return min(abs(a.x0 - b.x1), abs(a.x1 - b.x0))
-
-
-def _voverlap(a: _Char, b: _Char) -> float:
-    if b.y0 <= a.y1 and a.y0 <= b.y1:
-        return min(abs(a.y0 - b.y1), abs(a.y1 - b.y0))
-    return 0.0
-
-
-def _group_lines(chars: List[_Char]) -> List[List[_Char]]:
-    """pdfminer LTLayoutContainer.group_objects, horizontal-only.
-    The pair test inlines :func:`_voverlap` / :func:`_hdistance`
-    (same expressions — they stay as the documented reference and for
-    tests) — this loop runs once per char on every page."""
-    lines: List[List[_Char]] = []
-    line: Optional[List[_Char]] = None
-    obj0: Optional[_Char] = None
-    for obj1 in chars:
-        if obj0 is not None:
-            # _voverlap(obj0, obj1) > _LINE_OVERLAP * min(heights)
-            if obj1.y0 <= obj0.y1 and obj0.y0 <= obj1.y1:
-                vo = min(abs(obj0.y0 - obj1.y1), abs(obj0.y1 - obj1.y0))
-            else:
-                vo = 0.0
-            halign = vo > _LINE_OVERLAP * min(obj0.height, obj1.height)
-            if halign:
-                # _hdistance(obj0, obj1) < _CHAR_MARGIN * max(widths)
-                if obj1.x0 <= obj0.x1 and obj0.x0 <= obj1.x1:
-                    hd = 0.0
-                else:
-                    hd = min(abs(obj0.x0 - obj1.x1), abs(obj0.x1 - obj1.x0))
-                halign = hd < _CHAR_MARGIN * max(obj0.width, obj1.width)
-            if halign and line is not None:
-                line.append(obj1)
-            elif line is not None:
-                lines.append(line)
-                line = None
-            elif halign:
-                line = [obj0, obj1]
-            else:
-                lines.append([obj0])
-        obj0 = obj1
-    if line is None:
-        line = []
-        if obj0 is not None:
-            line.append(obj0)
-    if line:
-        lines.append(line)
-    return lines
-
-
-def _line_to_runs(line: List[_Char]):
-    """One grouped line → (bbox, runs) with word-margin space insertion
-    (pdfminer LTTextLineHorizontal.add): a space run is emitted when the
-    horizontal gap before a char exceeds word_margin × max(w, h)."""
-    x0 = min(c.x0 for c in line)
-    y0 = min(c.y0 for c in line)
-    x1 = max(c.x1 for c in line)
-    y1 = max(c.y1 for c in line)
-    runs: List[Tuple[str, bool, str]] = []
-    prev_x1 = None
-    for c in line:
-        if prev_x1 is not None:
-            margin = _WORD_MARGIN * max(c.width, c.height)
-            if prev_x1 < c.x0 - margin:
-                runs.append(("", True, " "))  # LTAnno: style inherited by fold
-        prev_x1 = c.x1
-        runs.append((c.fontname, c.upright, c.text))
-    return (x0, y0, x1, y1), runs
+    if runs is not None:
+        close_line()
 
 
 # --------------------------------------------------------------------------
@@ -1299,12 +1294,9 @@ def parse_pdf(data: bytes):
             else:
                 ctm = (1.0, 0.0, 0.0, 1.0, -mx0, -my0)
             pages.append((page_num, width, height))
-            chars = _interpret_page(doc, page, ctm)
+            _interpret_page(doc, page, ctm, page_num, lines)
         except PdfParseError:
             raise
         except Exception as exc:  # corrupt page — poison-pill boundary
             raise PdfParseError(f"{type(exc).__name__}: {exc}") from exc
-        for line in _group_lines(chars):
-            (x0, y0, x1, y1), runs = _line_to_runs(line)
-            lines.append((page_num, x0, y0, x1, y1, runs))
     return pages, lines

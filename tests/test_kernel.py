@@ -324,6 +324,52 @@ class TestFoldRunsFastPath:
         check()
 
 
+class TestFoldCoalescedRuns:
+    """The PDF layout pass hands fold_runs one run per (fontname, upright)
+    stretch, with each word-margin space appended to the run before it,
+    instead of one run per glyph plus a ("", True, " ") run per space.
+    Both shapes must fold to the same (text, style runs)."""
+
+    @staticmethod
+    def _shapes(glyphs):
+        per_glyph, coalesced = [], []
+        for i, (fontname, upright, text, space_before) in enumerate(glyphs):
+            if i and space_before:
+                per_glyph.append(("", True, " "))
+                f, u, t = coalesced[-1]
+                coalesced[-1] = (f, u, t + " ")
+            per_glyph.append((fontname, upright, text))
+            if coalesced and coalesced[-1][:2] == (fontname, upright):
+                f, u, t = coalesced[-1]
+                coalesced[-1] = (f, u, t + text)
+            else:
+                coalesced.append((fontname, upright, text))
+        return per_glyph, coalesced
+
+    @given(
+        st.lists(
+            st.tuples(
+                st.sampled_from(
+                    ["Serif", "Serif-Bold", "Serif-Italic", "Serif-BoldItalic", ""]
+                ),
+                st.booleans(),
+                st.one_of(
+                    st.sampled_from(["a", "b", " ", "\t", "\u00a0", "\u3000", ""]),
+                    st.integers(0, 999).map(lambda n: f"(cid:{n})"),
+                ),
+                st.booleans(),
+            ),
+            max_size=24,
+        )
+    )
+    @settings(max_examples=500, deadline=None, derandomize=True)
+    def test_fold_invariant(self, glyphs):
+        from edspdf_spark.kernel.style import fold_runs
+
+        per_glyph, coalesced = self._shapes(glyphs)
+        assert fold_runs(per_glyph) == fold_runs(coalesced)
+
+
 class TestReadingOrderFastPath:
     def test_equivalence_property(self):
         """The vertical-separation fast path must equal the pure

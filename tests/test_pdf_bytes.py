@@ -25,7 +25,9 @@ from edspdf_spark.sources.pdfgen import make_pdf, paginate, split_lines
 RESOURCES = Path("/root/reference/tests/resources")
 GROUND_TRUTH = Path("/root/reference/tests/pipes/extractors/blocks_ground_truth.py")
 
-pytestmark = pytest.mark.skipif(
+# Only the tests that read the reference's fixture files need them; the
+# generated-PDF tests below run everywhere.
+needs_reference = pytest.mark.skipif(
     not RESOURCES.exists(), reason="reference fixtures not available"
 )
 
@@ -64,6 +66,7 @@ def _extract(name: str):
     return blocs, pages, error
 
 
+@needs_reference
 @pytest.mark.parametrize(
     "name,var,n",
     [("test.pdf", "pdf_blocks", 41), ("styles.pdf", "styles_blocks", 2)],
@@ -82,6 +85,7 @@ def test_golden_blocks_from_real_bytes(name, var, n):
             assert abs(got[k] - v) < 5e-2, (k, got[k], v)
 
 
+@needs_reference
 def test_blank_pdf():
     blocs, pages, error = _extract("blank.pdf")
     assert not error
@@ -89,6 +93,7 @@ def test_blank_pdf():
     assert blocs == []
 
 
+@needs_reference
 def test_error_pdf_sets_error_flag():
     blocs, pages, error = _extract("error.pdf")
     assert error and blocs == [] and pages == []
@@ -96,6 +101,7 @@ def test_error_pdf_sets_error_flag():
         parse_pdf((RESOURCES / "error.pdf").read_bytes())
 
 
+@needs_reference
 def test_letter_pdf_extracts_text():
     blocs, pages, error = _extract("letter.pdf")
     assert not error
@@ -105,6 +111,7 @@ def test_letter_pdf_extracts_text():
     assert any("CRETEIL" in t for t in texts)
 
 
+@needs_reference
 def test_styles_pdf_style_pairs():
     """Exact (text-slice, style) set of the reference style test, derived
     from real styles.pdf bytes (test_simple.py:64-116)."""
@@ -201,6 +208,7 @@ def test_fused_path_matches_composed_on_pdf_bytes(spark):
     pdfs.unpersist()
 
 
+@needs_reference
 def test_markdown_e2e_from_styles_pdf_bytes():
     """The reference's full-recipe E2E (tests/recipes/
     test_markdown_aggregator.py:39-61): real styles.pdf bytes → extract →
@@ -244,6 +252,7 @@ def test_markdown_e2e_from_styles_pdf_bytes():
     )
 
 
+@needs_reference
 def test_render_pages_reference_image_shapes():
     """Deterministic rasterizer must reproduce the reference's pypdfium2
     image geometry (tests/pipes/extractors/test_pdfminer.py:16-22):
@@ -323,36 +332,50 @@ class TestPdfRoundtripFuzz:
             assert b["bloc_ord"] == i % lpp
 
 
+def _mutate(rng, data: bytes) -> bytes:
+    """One bit-flip, truncation, deletion or splice of ``data``."""
+    b = bytearray(data)
+    op = rng.randrange(4)
+    if op == 0:
+        for _ in range(rng.randrange(1, 8)):
+            b[rng.randrange(len(b))] = rng.randrange(256)
+    elif op == 1:
+        b = b[: rng.randrange(1, len(b))]
+    elif op == 2:
+        i = rng.randrange(len(b))
+        j = min(len(b), i + rng.randrange(1, 400))
+        del b[i:j]
+    else:
+        i = rng.randrange(len(b))
+        j = min(len(b), i + rng.randrange(1, 200))
+        b[i:i] = b[i:j]
+    return bytes(b)
+
+
+def _assert_error_contract(mutants) -> set:
+    """Poison-pill boundary: mutated PDF bytes must come back as error=True
+    (or parse), NEVER as a raw exception escaping into a Spark task.
+    Returns the set of error flags seen."""
+    seen = set()
+    for data in mutants:
+        blocs, pages, error = extract_doc(data)  # must not raise
+        assert isinstance(error, bool)
+        seen.add(error)
+    return seen
+
+
+@needs_reference
 def test_mutated_pdf_bytes_never_escape_error_contract():
-    """Poison-pill boundary: bit-flipped/truncated/spliced PDF bytes must
-    come back as error=True (or parse), NEVER as a raw exception escaping
-    into a Spark task (8000-mutation sweep ran clean; this is the
-    deterministic CI slice)."""
+    """Deterministic CI slice of an 8000-mutation sweep that ran clean."""
     import random
 
     base = make_pdf(paginate(split_lines("alpha beta gamma delta epsilon", 2), 2))
     ref = (RESOURCES / "styles.pdf").read_bytes()
     rng = random.Random(1234)
-    for trial in range(300):
-        b = bytearray(base if trial % 2 == 0 else ref)
-        op = rng.randrange(4)
-        if op == 0:
-            for _ in range(rng.randrange(1, 8)):
-                b[rng.randrange(len(b))] = rng.randrange(256)
-        elif op == 1:
-            b = b[: rng.randrange(1, len(b))]
-        elif op == 2:
-            i = rng.randrange(len(b))
-            j = min(len(b), i + rng.randrange(1, 400))
-            del b[i:j]
-        else:
-            i = rng.randrange(len(b))
-            j = min(len(b), i + rng.randrange(1, 200))
-            b[i:i] = b[i:j]
-        blocs, pages, error = extract_doc(bytes(b))  # must not raise
-        assert isinstance(error, bool)
+    _assert_error_contract(_mutate(rng, (base, ref)[t % 2]) for t in range(300))
 
 
+@needs_reference
 def test_letter_pdf_snapshot():
     """Regression pin for the parser on the most complex reference fixture
     (Word-produced: 9 fonts incl. Wingdings/Symbol Type0s; 48 non-empty
@@ -675,3 +698,259 @@ def test_rc4_encrypt_dict_in_xref_stream_trailer():
     patched = stripped.replace(b"trailer\n", xref_obj + b"trailer\n")
     plain = parse_pdf(_raw_pdf(_ENC_CONTENT))
     assert parse_pdf(patched) == plain
+
+
+# --- layout pin ----------------------------------------------------------
+# Twelve generated PDFs that between them walk every branch of the content
+# interpreter and the glyph → line → run layout pass: TJ kerning numbers,
+# Tc/Tw/Tz/Ts, the ' and " operators, /Rotate 90/180/270 on an offset
+# MediaBox, a Type0 Identity-H font (ToUnicode bfchar + bfrange array, odd
+# byte tail), simple WinAnsi fonts with /Differences and a MacRoman font,
+# q/Q, word-margin spaces, char-margin line splits, zero-width glyphs,
+# non-upright glyphs and empty strings. The digests pin the exact floats
+# (repr round-trips them) and texts, so any change to the geometry, the
+# grouping or the fold shows here. parse_pdf's runs are pinned through
+# fold_runs: how a line's glyphs are cut into runs is free as long as the
+# fold reads the same.
+
+
+def _pin_pdf(pages) -> bytes:
+    """``pages``: list of (content, rotate, mediabox). Four fonts:
+    F1 Type0/Identity-H, F2 TrueType WinAnsi + /Differences, F3 a bold
+    italic WinAnsi TrueType with a zero-width '|', F4 MacRoman, no /Widths."""
+    import zlib
+
+    f2_widths = b" ".join(b"%d" % (300 + (c * 37) % 400) for c in range(32, 131))
+    f3_widths = b" ".join(
+        b"0" if c == 0x7C else b"%d" % (350 + (c * 53) % 300) for c in range(32, 256)
+    )
+    tou = zlib.compress(
+        b"2 beginbfchar <0100> <FB01> <0101> <00480069> endbfchar\n"
+        b"1 beginbfrange <0041> <0043> [<03B1> <03B2> <03B3>] endbfrange\n"
+        b"1 beginbfrange <0000> <FFFF> <0000> endbfrange"
+    )
+    objs = [
+        b"<</Type/FontDescriptor/FontName/PinSans/Flags 4/FontBBox[0 -220 1000 900]"
+        b"/ItalicAngle 0/Ascent 900/Descent -220/StemV 80>>",
+        b"<</Type/Font/Subtype/CIDFontType2/BaseFont/PinSans"
+        b"/CIDSystemInfo<</Registry(Adobe)/Ordering(Identity)/Supplement 0>>"
+        b"/FontDescriptor 1 0 R/DW 1000/CIDToGIDMap/Identity"
+        b"/W[32[250]65 90 600 97[500 520 480 530 510 300 490 520 260 270]"
+        b" 256[540 820]]>>",
+        b"<</Filter/FlateDecode/Length %d>>\nstream\n%s\nendstream" % (len(tou), tou),
+        b"<</Type/Font/Subtype/Type0/BaseFont/PinSans/Encoding/Identity-H"
+        b"/DescendantFonts[2 0 R]/ToUnicode 3 0 R>>",
+        b"<</Type/FontDescriptor/FontName/PinSerif/Flags 32/Descent -210"
+        b"/MissingWidth 444>>",
+        b"<</Type/Font/Subtype/TrueType/BaseFont/PinSerif/FirstChar 32"
+        b"/LastChar 130/Widths[" + f2_widths + b"]/FontDescriptor 5 0 R"
+        b"/Encoding<</Type/Encoding/BaseEncoding/WinAnsiEncoding"
+        b"/Differences[65/uni0391 128/Euro/fi/notaglyph]>>>>",
+        b"<</Type/FontDescriptor/FontName/PinSerif-BoldItalic/Flags 32"
+        b"/Descent -190>>",
+        b"<</Type/Font/Subtype/TrueType/BaseFont/PinSerif-BoldItalic"
+        b"/FirstChar 32/LastChar 255/Widths[" + f3_widths + b"]"
+        b"/FontDescriptor 7 0 R/Encoding/WinAnsiEncoding>>",
+        b"<</Type/FontDescriptor/FontName/PinMono-Bold/Flags 32/Descent -150"
+        b"/MissingWidth 500>>",
+        b"<</Type/Font/Subtype/Type1/BaseFont/PinMono-Bold"
+        b"/FontDescriptor 9 0 R/Encoding/MacRomanEncoding>>",
+    ]
+    fonts = b"<</F1 4 0 R/F2 6 0 R/F3 8 0 R/F4 10 0 R>>"
+    pages_num = len(objs) + 2 * len(pages) + 1
+    kids = []
+    for content, rotate, mediabox in pages:
+        comp = zlib.compress(content)
+        objs.append(
+            b"<</Filter/FlateDecode/Length %d>>\nstream\n%s\nendstream"
+            % (len(comp), comp)
+        )
+        objs.append(
+            b"<</Type/Page/Parent %d 0 R/MediaBox[%s]/Rotate %d"
+            b"/Resources<</Font %s>>/Contents %d 0 R>>"
+            % (pages_num, mediabox, rotate, fonts, len(objs))
+        )
+        kids.append(b"%d 0 R" % len(objs))
+    objs.append(
+        b"<</Type/Pages/Kids[%s]/Count %d>>" % (b" ".join(kids), len(kids))
+    )
+    objs.append(b"<</Type/Catalog/Pages %d 0 R>>" % len(objs))
+    out = bytearray(b"%PDF-1.5\n")
+    offsets = []
+    for i, body in enumerate(objs, 1):
+        offsets.append(len(out))
+        out += b"%d 0 obj\n" % i + body + b"\nendobj\n"
+    xref = len(out)
+    out += b"xref\n0 %d\n0000000000 65535 f \n" % (len(objs) + 1)
+    for off in offsets:
+        out += b"%010d 00000 n \n" % off
+    out += b"trailer\n<</Size %d/Root %d 0 R>>\nstartxref\n%d\n%%%%EOF\n" % (
+        len(objs) + 1, len(objs), xref,
+    )
+    return bytes(out)
+
+
+_LETTER = b"0 0 612 792"
+_OFFSET = b"10 20 600 800"
+_ROTATED = (
+    b"BT /F2 11 Tf 72 700 Td (Rotated page) Tj 0 -14 Td [(two) -300 (words)] TJ"
+    b" /F1 9 Tf 0 -14 Td <004100420043> Tj ET"
+    b" BT /F3 10 Tf 0 1 -1 0 300 200 Tm (up the side) Tj ET"
+)
+_PIN_CASES = {
+    "tj_kerning": [(
+        b"BT /F2 12 Tf 72 700 Td [(Hel) -250 (lo) 120 (W) -30 (orld)] TJ"
+        b" 0 -20 Td /F1 12 Tf [<00480069> -500 <0021> 80 <00610062>] TJ"
+        b" 0 -20 Td /F2 12 Tf [(tight) 900 (overlap) -40.5 (end)] TJ ET",
+        0, _LETTER,
+    )],
+    "text_state": [(
+        b"BT /F2 10 Tf 72 700 Td 2 Tc 5 Tw 80 Tz 3 Ts (a b  c\\td\\240e) Tj"
+        b" 0 -16 Td 0 Tc 0 Tw 100 Tz -1.5 Ts (sub script) Tj"
+        b" 0 -16 Td 0 Ts 1.25 Tc 150 Tz /F1 10 Tf 8 Tw <00610020006200200063> Tj"
+        b" 0 -16 Td 0 Tc 100 Tz 0 Tw /F3 10 Tf (wide) Tj 40 Tz (narrow) Tj ET",
+        0, _LETTER,
+    )],
+    "quote_ops": [(
+        b"BT /F2 10 Tf 14 TL 72 700 Td (first) Tj (second) ' 3 1 (third) \""
+        b" T* (fourth) Tj 2 -18 TD (fifth) Tj (sixth) ' ET",
+        0, _LETTER,
+    )],
+    "rotate_90": [(_ROTATED, 90, _OFFSET)],
+    "rotate_180": [(_ROTATED, 180, _OFFSET)],
+    "rotate_270": [(_ROTATED, 270, _OFFSET)],
+    "type0_identity_h": [
+        (
+            b"BT /F1 14 Tf 72 720 Td <0100004100420043010100200061> Tj"
+            b" 0 -20 Td <00480069002000780079007a> Tj <00480> Tj"
+            b" 0 1 -1 0 200 300 Tm <0061006200630064> Tj ET",
+            0, _LETTER,
+        ),
+        (b"BT /F1 9 Tf 50 50 Td <0062> Tj ET", 0, b"0 0 300 400"),
+    ],
+    "winansi_differences": [(
+        b"BT /F2 10 Tf 72 700 Td (ABC \\200\\201\\202 caf\\351) Tj"
+        b" 0 -14 Td /F4 10 Tf (Mac \\216\\217 bold) Tj"
+        b" 0 -14 Td /F2 10 Tf (\\001\\377 edge) Tj ET",
+        0, _LETTER,
+    )],
+    "q_state": [(
+        b"q 1 0 0 1 50 40 cm BT /F2 10 Tf 30 600 Td (inside) Tj"
+        b" q /F3 20 Tf 4 Tc 3 Ts Q (kept) Tj ET Q"
+        b" BT /F2 10 Tf 72 500 Td (outside) Tj q 0.5 0 0 0.5 0 0 cm Q ( state) Tj ET",
+        0, _LETTER,
+    )],
+    "word_margin_space": [(
+        b"BT /F2 10 Tf 72 700 Td [(word) -200 (gap) -90 (close)] TJ"
+        b" [-250] TJ /F3 10 Tf (styled) Tj /F2 10 Tf [-300 (plain) -260] TJ"
+        b" /F3 10 Tf ( lead) Tj ET",
+        0, _LETTER,
+    )],
+    "char_margin_split": [(
+        b"BT /F2 10 Tf 72 700 Td [(left) -3000 (right) -1990 (near) -2600 (far)] TJ"
+        b" 0 -4 Td (low) Tj 0 -30 Td (next line) Tj ET",
+        0, _LETTER,
+    )],
+    "zero_width_empty": [(
+        b"BT /F3 10 Tf 72 700 Td (a||b) Tj () Tj <> Tj [] TJ [() -100 ()] TJ"
+        b" /F1 10 Tf <> Tj 0 -20 Td /F3 10 Tf (|) Tj 0 Tz (squashed) Tj"
+        b" 100 Tz 0 -20 Td /F4 0 Tf (nosize) Tj ET",
+        0, _LETTER,
+    )],
+}
+
+# sha256 of repr(...) per case: (parse_pdf with runs folded, extract_doc_raw)
+_PIN_DIGESTS = {
+    "char_margin_split": (
+        "7069f6005bf38b17fec0e6c3259265e30ee885a24162ef1ad212afd9b1cab4a1",
+        "3fcc2572febebcfecdb0c369b08a94316a1af6061e84ac67cdd56f31eabf57a8",
+    ),
+    "q_state": (
+        "704d67be74e399cb112b19ba800d74659fb7b4970368b12994352bf787757bb6",
+        "4fec997e149f36ed6e8e34331a6485436a472fd84a4d7a034b3bd3254b934c96",
+    ),
+    "quote_ops": (
+        "a130e5473aa4a60d24a828f2b31fbe0360286c8de8ea2d87c5e440e9a746565c",
+        "a7c11c6247629d311d4da14a2f35fb36940faaecb0002e7629c00ade8c08d72a",
+    ),
+    "rotate_180": (
+        "e9eefe276889c5f381e76ce283fe5a2e74b9d0f4a505038626d7d04aa5997602",
+        "b746dbd3274a8b7bb5e9b2b63c030c1f14f94c2e6ff86a927fca0576c41fbc92",
+    ),
+    "rotate_270": (
+        "a305f92381a7d32004c39ba7f1e6690beb0eabab3ee283d2924104c3ae014ddc",
+        "92f774bd3fd232f0dc9b6eaf4ac8c36f5512cf668a8f5e24bd15567844cb7121",
+    ),
+    "rotate_90": (
+        "82fcf87bb79c181c5b3722f6cb8730b66e84b1371fc17b1e15cac2cde8e9ae8c",
+        "445ae0dc7bc3d9114872497a7617eb78f2bc884a5af171afa7f35f44579c620b",
+    ),
+    "text_state": (
+        "034f273caa886a3cb943453324f785a2311d58f15266a2047cc4c089e3e4f68f",
+        "20c6e39c1f2b26231ef9848d525f14f732ee444836c5fc4ac3388cc35125ae95",
+    ),
+    "tj_kerning": (
+        "87b10edae25c97ee49a4005ba0d055ba1a084cd839487418d8c2aa1c39cbea83",
+        "59346a548cefa41be14a1b8b7f6a7136f262c28253d863fa043f218fea0a50dc",
+    ),
+    "type0_identity_h": (
+        "7f10e6ed3a838187a47bcfac76f3bb443fd310621cd886968f4078aed8d9d8c9",
+        "565d5d4a769afcd84496f58d60e8be2b8580c033ef36b113254f4987271fa99a",
+    ),
+    "winansi_differences": (
+        "e146e5ceee9fc63fd3f41a6a46e976615246e54720bb87857ed0cfbe5b957be9",
+        "59010d10fe0a224e48e1b069395035e04cbbb5d2e61bfc4d1fe2feeaac0ee1a5",
+    ),
+    "word_margin_space": (
+        "945c640f10b20cb24c41246cd1733b26740ac08fa02530157f2c9c0a05b6596d",
+        "aee56ea63751413ad5dfc73f92471f92a061ecd11e27c9c65dee5b0bd71a8f94",
+    ),
+    "zero_width_empty": (
+        "5ccbd13a9a0fb1ef76702ea728e6af1b708461f6019d998a32d211ba956590bc",
+        "ce7d8a2ab8c26c513b12f4c0f7c578164c07f2e8a94163a5aa4d5d539e777608",
+    ),
+}
+
+
+def _pin_digests(data: bytes):
+    import hashlib
+
+    from edspdf_spark.kernel.payload import extract_doc_raw
+    from edspdf_spark.kernel.style import fold_runs
+
+    pages, lines = parse_pdf(data)
+    folded = (pages, [(*ln[:5], fold_runs(ln[5])) for ln in lines])
+    return tuple(
+        hashlib.sha256(repr(x).encode()).hexdigest()
+        for x in (folded, extract_doc_raw(data))
+    )
+
+
+@pytest.mark.parametrize("case", sorted(_PIN_CASES))
+def test_layout_pin(case):
+    assert _pin_digests(_pin_pdf(_PIN_CASES[case])) == _PIN_DIGESTS[case]
+
+
+def test_mutated_pin_pdfs_never_escape_error_contract():
+    """The error contract over the generated pin PDFs, so it runs without
+    the reference fixtures. The first 200 mutants damage one page's content
+    stream and wrap it in a valid file, so the damage reaches the operator
+    interpreter and the glyph pass inside the per-page try; the next 200
+    damage the whole file."""
+    import random
+
+    cases = [_PIN_CASES[k] for k in sorted(_PIN_CASES)]
+    files = [_pin_pdf(c) for c in cases]
+    rng = random.Random(4321)
+
+    def content_mutant(t):
+        pages = list(cases[t % len(cases)])
+        i = rng.randrange(len(pages))
+        content, rotate, mediabox = pages[i]
+        pages[i] = (_mutate(rng, content), rotate, mediabox)
+        return _pin_pdf(pages)
+
+    assert _assert_error_contract(content_mutant(t) for t in range(200)) == {
+        False, True,
+    }
+    _assert_error_contract(_mutate(rng, files[t % len(files)]) for t in range(200))
