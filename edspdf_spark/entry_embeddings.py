@@ -164,26 +164,6 @@ _SHAPE_SQL = (
 )
 
 
-def q_text_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E3 features — tokenizer + word_shape + affixes as JVM expressions."""
-    docs = _docs(spark, sf_dir, 20).select("doc_id", "text")
-    return simple_text_features(docs, "text", keep_cols=("doc_id",)).select(
-        "doc_id", "tok_idx", "tok", "shape", "prefix", "suffix", "norm"
-    )
-
-
-def text_features_oracle() -> str:
-    cte = _TOKS_CTE.replace("{modulo}", "20")
-    return f"""
-WITH {cte}
-SELECT doc_id, tok_idx, tok, {_SHAPE_SQL} AS shape,
-       substring(lower(tok), 1, 3) AS prefix,
-       right(lower(tok), 3) AS suffix,
-       lower(tok) AS norm
-FROM toks
-"""
-
-
 def q_text_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E3 vocabulary — distributed sorted-distinct ids ('__unk__' = 0)."""
     docs = _docs(spark, sf_dir, 10).select("doc_id", "text")
@@ -218,32 +198,6 @@ def _hash_vec_sqls(feature_sql: str, salt: int) -> List[str]:
             f" / {float(MERSENNE)!r} * 2.0 - 1.0"
         )
     return out
-
-
-def q_text_hash_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E3 forward — shape+prefix+suffix hash vectors summed per token
-    (norm excluded, mirroring the reference's commented-out term)."""
-    docs = _docs(spark, sf_dir, 50).select("doc_id", "text")
-    feats = simple_text_features(docs, "text", keep_cols=("doc_id",))
-    emb = simple_text_embedding(feats, size=E3_EMB_SIZE)
-    sig = F.concat_ws(",", *[_micro(F.col("emb")[i]) for i in range(E3_EMB_SIZE)])
-    return emb.select("doc_id", "tok_idx", "tok", sig.alias("emb_sig"))
-
-
-def text_hash_embedding_oracle() -> str:
-    cte = _TOKS_CTE.replace("{modulo}", "50")
-    shape_v = _hash_vec_sqls(_SHAPE_SQL, salt=1)
-    prefix_v = _hash_vec_sqls("substring(lower(tok), 1, 3)", salt=2)
-    suffix_v = _hash_vec_sqls("right(lower(tok), 3)", salt=3)
-    chans = ", ".join(
-        _micro_sql(f"({s}) + ({p}) + ({u})")
-        for s, p, u in zip(shape_v, prefix_v, suffix_v)
-    )
-    return f"""
-WITH {cte}
-SELECT doc_id, tok_idx, tok, array_to_string([{chans}], ',') AS emb_sig
-FROM toks
-"""
 
 
 # ---------------------------------------------------------------------------

@@ -353,50 +353,6 @@ matched AS (
 )"""
 
 
-def q_align_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3 — align with an arbitrary label vocabulary + pollution fallback."""
-    from edspdf_spark.operators.align import align_plain
-
-    blocs = blocs_from_lineitem(spark, sf_dir)
-    out = align_plain(
-        blocs, src_boxes_for(spark, blocs),
-        threshold=_ALIGN_THRESHOLD, pollution_label="pollution",
-    )
-    return out.select("url", "page_num", "bloc_ord", "label")
-
-
-def align_vocab_oracle() -> str:
-    return f"""
-WITH {_matched_cte()}
-SELECT url, page_num, bloc_ord,
-  CASE WHEN catch_score > pair_score THEN 'pollution' ELSE s_label END AS label
-FROM matched
-"""
-
-
-def q_align_composite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A4 — composite label ``{label}|{node_num}|{rank}`` from the matched
-    src box (reference utils/alignment.py:371-495)."""
-    from edspdf_spark.operators.align import align_composite
-
-    blocs = blocs_from_lineitem(spark, sf_dir)
-    out = align_composite(
-        blocs, src_boxes_for(spark, blocs), threshold=_ALIGN_THRESHOLD
-    )
-    return out.select("url", "page_num", "bloc_ord", "label")
-
-
-def align_composite_oracle() -> str:
-    return f"""
-WITH {_matched_cte()}
-SELECT url, page_num, bloc_ord,
-  CASE WHEN catch_score > pair_score THEN 'pollution|-1|-1'
-       ELSE s_label || '|' || CAST(s_node AS VARCHAR) || '|' || CAST(s_rankv AS VARCHAR)
-  END AS label
-FROM matched
-"""
-
-
 def q_align_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 + A4 in one frame: vocabulary label and composite
     ``{label}|{node_num}|{rank}`` label per bloc, joined on the bloc key

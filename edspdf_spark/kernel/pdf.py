@@ -936,18 +936,6 @@ def _mult_matrix(m1, m0):
     )
 
 
-def _translate_matrix(m, v):
-    a, b, c, d, e, f = m
-    x, y = v
-    return (a, b, c, d, x * a + y * c + e, x * b + y * d + f)
-
-
-def _apply_matrix_pt(m, p):
-    a, b, c, d, e, f = m
-    x, y = p
-    return (a * x + c * y + e, b * x + d * y + f)
-
-
 _MATRIX_ID = (1.0, 0.0, 0.0, 1.0, 0.0, 0.0)
 
 _OP_RE = re.compile(rb"[A-Za-z'\"][A-Za-z0-9*'\"]*")

@@ -35,10 +35,6 @@ _WS = re.compile(r"\s")
 # the regex defensively.
 _WS_SET = frozenset(chr(c) for c in range(0x3001) if _WS.match(chr(c)))
 
-
-def _is_ws(ch: str) -> bool:
-    return ch in _WS_SET or (ch > "　" and _WS.match(ch) is not None)
-
 StyleRun = Tuple[Optional[bool], Optional[bool], int, int, Optional[str]]
 # (italic, bold, begin, end, fontname) — field order matches PROPS_FIELD.
 

@@ -59,10 +59,6 @@ def quantize(x: np.ndarray) -> np.ndarray:
     return np.floor(np.asarray(x, dtype=np.float64) * MICRO + 0.5).astype(np.int64)
 
 
-def _micro_int(x: float) -> int:
-    return int(np.floor(np.float64(x) * MICRO + np.float64(0.5)))
-
-
 @dataclass
 class CompiledTree:
     feature: np.ndarray  # int64, -1 = leaf

@@ -18,21 +18,10 @@ torch path (``pipes/classifiers/trainable.py:176-201``) per SURVEY.md P8.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
 from typing import Iterator, List, Optional
 
 import numpy as np
 import pandas as pd
-
-
-@dataclass
-class _Tree:
-    # flat arrays; node i: children 2i+1 / 2i+2 implicit via child index arrays
-    feature: np.ndarray = None
-    threshold: np.ndarray = None
-    left: np.ndarray = None
-    right: np.ndarray = None
-    value: np.ndarray = None  # class distribution per node (leaf used)
 
 
 def _gini_split(x_col, y, classes, min_leaf):

@@ -39,6 +39,19 @@ with neighbor smoothing, readability picks one DOM region globally — the
 two disagree exactly where real extractors disagree, which is why both
 faces exist.
 
+Both block kernels read a page through one segmentation,
+:func:`_segment`: decode, strip, split at block tags, and name each tag,
+once per page. Split parity does the tag test: the split pattern has one
+capture group, so odd parts are tags and even parts text. The result is
+cached for one page, keyed on ``(bytes, charset)``, and carries a
+``fragment → (clean text, link chars)`` memo that both kernels read. The
+consensus kernel runs its jusText and readability legs back to back on the
+same bytes, so the second leg reuses the first leg's segmentation and
+almost all of its cleaning. A single-face operator misses the page cache
+once per page and hashes each page, but still reads the memo: a page repeats
+fragments, such as the whitespace between adjacent tags. Every cached value
+is a pure function of its key.
+
 Blocs get pseudo-geometry from document order (y grows with block index,
 one page per ``page_chars`` of text) so every downstream geometric operator
 (mask classifier, aggregator separators) works unchanged on web pages.
@@ -46,6 +59,7 @@ one page per ``page_chars`` of text) so every downstream geometric operator
 
 from __future__ import annotations
 
+import functools
 import html as _html
 import re
 from typing import Iterator, List, Tuple
@@ -65,6 +79,7 @@ _BLOCK_TAGS = (
 )
 _BLOCK_SPLIT_RE = re.compile(rf"(</?(?:{_BLOCK_TAGS})\b[^>]*>)", re.IGNORECASE)
 _TAG_RE = re.compile(r"<[^>]+>")
+_TAG_NAME_RE = re.compile(r"</?([a-zA-Z0-9]+)")
 _ANCHOR_RE = re.compile(r"<a\b[^>]*>(.*?)</a\s*>", re.IGNORECASE | re.DOTALL)
 _WS_RE = re.compile(r"\s+")
 
@@ -73,6 +88,58 @@ _CHROME_TAGS = {"nav", "header", "footer", "aside", "form"}
 
 def _clean_text(fragment: str) -> str:
     return _WS_RE.sub(" ", _html.unescape(_TAG_RE.sub(" ", fragment))).strip()
+
+
+class _CleanMemo(dict):
+    """fragment → (clean text, link chars), computed on first lookup."""
+
+    def __missing__(self, fragment: str) -> Tuple[str, int]:
+        content = _clean_text(fragment)
+        link_chars = (
+            sum(len(_clean_text(m)) for m in _ANCHOR_RE.findall(fragment))
+            if content
+            else 0
+        )
+        self[fragment] = out = (content, link_chars)
+        return out
+
+
+@functools.lru_cache(maxsize=1)
+def _segment(raw: bytes, charset: str):
+    """One page → ``(first text, ((tag, closing, markup, text), …), memo)``,
+    each tag paired with the text after it; None when the page does not
+    decode, holds no markup, or holds a block tag whose name is not ASCII
+    (``re.IGNORECASE`` lets ``ſ`` match ``s``, so ``<ſection>`` splits but
+    has no ASCII name). ``_BLOCK_SPLIT_RE``'s one capture group puts
+    the tags at the split's odd indices (see the module docstring)."""
+    try:
+        if charset == "sniff":
+            from edspdf_spark.sources.warc import decode_payload
+
+            text = decode_payload(raw)
+        else:
+            text = raw.decode(charset, errors="replace")
+    except Exception:
+        return None
+    if "<" not in text:
+        return None
+    parts = _BLOCK_SPLIT_RE.split(_STRIP_RE.sub(" ", text))
+    names = [_TAG_NAME_RE.match(m) for m in parts[1::2]]
+    if not all(names):  # a name that only case-folds to a block tag: <ſection>
+        return None
+    tags = tuple(
+        (n.group(1).lower(), m.startswith("</"), m, t)
+        for n, m, t in zip(names, parts[1::2], parts[2::2])
+    )
+    return parts[0], tags, _CleanMemo()
+
+
+def _page(raw, charset: str):
+    try:
+        key = bytes(raw)
+    except TypeError:
+        return None
+    return _segment(key, charset)
 
 
 def extract_html_blocks(
@@ -88,34 +155,21 @@ def extract_html_blocks(
     sniff_charset`); crawl archives carry no out-of-band charset, so this
     is the WARC-ingestion mode. A fixed charset skips the sniff.
     """
-    try:
-        if charset == "sniff":
-            from edspdf_spark.sources.warc import decode_payload
-
-            text = decode_payload(raw)
-        else:
-            text = raw.decode(charset, errors="replace")
-    except Exception:
+    page = _page(raw, charset)
+    if page is None:
         return [], True
-    if "<" not in text:
-        return [], True
-
-    text = _STRIP_RE.sub(" ", text)
-    parts = _BLOCK_SPLIT_RE.split(text)
+    first, tags, memo = page
 
     blocks: List[dict] = []
     chrome_depth = 0
-    buf: List[str] = []
+    buf: List[str] = [first]
 
     def flush():
-        if not buf:
-            return
         fragment = " ".join(buf)
         buf.clear()
-        content = _clean_text(fragment)
+        content, link_chars = memo[fragment]
         if not content:
             return
-        link_chars = sum(len(_clean_text(m)) for m in _ANCHOR_RE.findall(fragment))
         n_words = len(content.split())
         ld = link_chars / max(1, len(content))
         is_content = (
@@ -131,17 +185,13 @@ def extract_html_blocks(
             }
         )
 
-    for part in parts:
-        if _BLOCK_SPLIT_RE.fullmatch(part or ""):
-            tag = re.match(r"</?([a-zA-Z0-9]+)", part).group(1).lower()
-            closing = part.startswith("</")
-            if tag in _CHROME_TAGS:
-                flush()
-                chrome_depth = max(0, chrome_depth - 1) if closing else chrome_depth + 1
-            elif not closing or tag in ("p", "div", "li", "tr", "table", "section", "article", "blockquote", "pre"):
-                flush()
-        else:
-            buf.append(part)
+    for tag, closing, _markup, text in tags:
+        if tag in _CHROME_TAGS:
+            flush()
+            chrome_depth = max(0, chrome_depth - 1) if closing else chrome_depth + 1
+        elif not closing or tag in ("p", "div", "li", "tr", "table", "section", "article", "blockquote", "pre"):
+            flush()
+        buf.append(text)
     flush()
     return blocks, False
 
@@ -309,6 +359,9 @@ _NEGATIVE_HINT_RE = re.compile(
     re.IGNORECASE,
 )
 
+_CLASS_ATTR_RE = re.compile(r"""class\s*=\s*("[^"]*"|'[^']*'|\S+)""", re.I)
+_ID_ATTR_RE = re.compile(r"""id\s*=\s*("[^"]*"|'[^']*'|\S+)""", re.I)
+
 #: tags that open a scoring candidate (a "container"); everything else in
 #: _BLOCK_TAGS is only a paragraph boundary.
 _CONTAINER_TAGS = {
@@ -327,9 +380,9 @@ _TAG_BASE_SCORE = {
 def _class_weight(tag_markup: str) -> int:
     """±25 per positive/negative class/id hint in the opening tag markup."""
     w = 0
-    m = re.search(r"""class\s*=\s*("[^"]*"|'[^']*'|\S+)""", tag_markup, re.I)
+    m = _CLASS_ATTR_RE.search(tag_markup)
     attrs = [m.group(1)] if m else []
-    m = re.search(r"""id\s*=\s*("[^"]*"|'[^']*'|\S+)""", tag_markup, re.I)
+    m = _ID_ATTR_RE.search(tag_markup)
     if m:
         attrs.append(m.group(1))
     for a in attrs:
@@ -355,20 +408,10 @@ def readability_blocks(
     chrome, or link-denser than ``max_link_density`` are boilerplate.
     Deterministic: no randomness, no model, integer/half-integer scores.
     """
-    try:
-        if charset == "sniff":
-            from edspdf_spark.sources.warc import decode_payload
-
-            text = decode_payload(raw)
-        else:
-            text = raw.decode(charset, errors="replace")
-    except Exception:
+    page = _page(raw, charset)
+    if page is None:
         return [], True
-    if "<" not in text:
-        return [], True
-
-    text = _STRIP_RE.sub(" ", text)
-    parts = _BLOCK_SPLIT_RE.split(text)
+    first, tags, memo = page
 
     # containers[0] is the document root (base 0, no hints)
     containers: List[dict] = [
@@ -377,18 +420,12 @@ def readability_blocks(
     ]
     stack: List[int] = [0]
     chrome_depth = 0
-    buf: List[str] = []
     blocks: List[dict] = []
 
-    def flush() -> None:
-        if not buf:
-            return
-        fragment = " ".join(buf)
-        buf.clear()
-        content = _clean_text(fragment)
+    def flush(fragment: str) -> None:
+        content, link_chars = memo[fragment]
         if not content:
             return
-        link_chars = sum(len(_clean_text(m)) for m in _ANCHOR_RE.findall(fragment))
         ld = link_chars / max(1, len(content))
         cur = stack[-1]
         if chrome_depth == 0:
@@ -412,40 +449,35 @@ def readability_blocks(
             }
         )
 
-    for part in parts:
-        if _BLOCK_SPLIT_RE.fullmatch(part or ""):
-            tag = re.match(r"</?([a-zA-Z0-9]+)", part).group(1).lower()
-            closing = part.startswith("</")
-            if tag in _CHROME_TAGS:
-                flush()
-                chrome_depth = max(0, chrome_depth - 1) if closing else chrome_depth + 1
-            elif tag in _CONTAINER_TAGS:
-                flush()
-                if closing:
-                    # pop to the nearest matching open container (tolerates
-                    # the unbalanced markup real crawls are full of)
-                    for i in range(len(stack) - 1, 0, -1):
-                        if containers[stack[i]]["tag"] == tag:
-                            del stack[i:]
-                            break
-                else:
-                    containers.append(
-                        {
-                            "tag": tag,
-                            "parent": stack[-1],
-                            "base": float(_TAG_BASE_SCORE.get(tag, 0))
-                            + _class_weight(part),
-                            "inner": 0.0,
-                            "chars": 0,
-                            "link_chars": 0,
-                        }
-                    )
-                    stack.append(len(containers) - 1)
+    # every block tag ends a paragraph, so each text part is one fragment
+    pending = first
+    for tag, closing, markup, text in tags:
+        flush(pending)
+        pending = text
+        if tag in _CHROME_TAGS:
+            chrome_depth = max(0, chrome_depth - 1) if closing else chrome_depth + 1
+        elif tag in _CONTAINER_TAGS:
+            if closing:
+                # pop to the nearest matching open container (tolerates
+                # the unbalanced markup real crawls are full of)
+                for i in range(len(stack) - 1, 0, -1):
+                    if containers[stack[i]]["tag"] == tag:
+                        del stack[i:]
+                        break
             else:
-                flush()
-        else:
-            buf.append(part)
-    flush()
+                containers.append(
+                    {
+                        "tag": tag,
+                        "parent": stack[-1],
+                        "base": float(_TAG_BASE_SCORE.get(tag, 0))
+                        + _class_weight(markup),
+                        "inner": 0.0,
+                        "chars": 0,
+                        "link_chars": 0,
+                    }
+                )
+                stack.append(len(containers) - 1)
+    flush(pending)
 
     best_id, best_score = 0, float("-inf")
     for cid, c in enumerate(containers):
@@ -809,11 +841,15 @@ def extract_blocs_consensus(
 
     Plan shape: ONE zero-shuffle Arrow stage. Line votes are page-local
     by construction — every leg's lines come from the same page — so the
-    ensemble needs no distributed vote at all: the kernel parses a page
-    once for block segmentation (jusText labels AND boilerpipe's shallow
-    features come from the same block list — segmentation is independent
-    of the labeling thresholds) plus once for the Arc90 container scores,
-    votes in-memory, and emits the filtered blocs. The previous
+    ensemble needs no distributed vote at all. The kernel parses each page
+    once: :func:`extract_html_blocks` gives the jusText labels AND
+    boilerpipe's shallow features from one block list (segmentation is
+    independent of the labeling thresholds), and :func:`readability_blocks`
+    runs right after it on the same ``bytes`` object, so it reuses the
+    cached segmentation and the cleaned fragments instead of parsing the
+    page again. The kernel then votes in-memory and emits the filtered
+    blocs. Both legs and :func:`context_classify` are called through
+    module globals, once per page. The previous
     implementation ran three Arrow stages plus a 5-exchange
     distinct/union/count/join/regroup pipeline on (url, line) keys
     (PLANS.md r3 audit); at 10^12 documents those exchanges shuffled the
@@ -862,8 +898,10 @@ def extract_blocs_consensus(
                 if raw is None:
                     blocks, err = [], True
                 else:
+                    # one object for both legs: the segmentation cache hits
+                    raw = bytes(raw)
                     blocks, err = extract_html_blocks(
-                        bytes(raw),
+                        raw,
                         min_words=min_words,
                         max_link_density=max_link_density,
                         charset=charset,
@@ -886,7 +924,7 @@ def extract_blocs_consensus(
                 else:
                     jus_labels = [b["label"] for b in blocks]
                 rd_blocks, rd_err = readability_blocks(
-                    bytes(raw), charset=charset, max_link_density=0.5
+                    raw, charset=charset, max_link_density=0.5
                 )
                 votes: dict = {}
                 for leg in (
