@@ -69,17 +69,13 @@ def bench_mask_argmax(spark, sf_dir):
 def bench_minhash_lsh(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    from edspdf_spark.functions.dedup import (
-        lsh_candidate_pairs,
-        minhash_signatures_arrow,
-    )
+    from edspdf_spark.functions.dedup import lsh_candidate_pairs, minhash_signatures
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
         F.length("text") >= 5
     )
-    # production path: vectorized Arrow signatures (zero shuffle, identical
-    # output to the oracle-checked expression path — tests assert equality)
-    sig = minhash_signatures_arrow(docs, k=5, n_hashes=8)
+    # vectorized Arrow signatures: zero shuffle, the oracle-checked path
+    sig = minhash_signatures(docs, k=5, n_hashes=8)
     materialize(lsh_candidate_pairs(sig, rows_per_band=2, n_hashes=8))
 
 
@@ -252,16 +248,16 @@ def bench_box_embedding(spark, sf_dir):
 
 def bench_text_embedding(spark, sf_dir):
     """E3 tokenize + shape/affix features + hash embedding over the whole
-    documents corpus — production path: the vectorized Arrow twin (zero
-    shuffle, identical rows to the oracle-checked expression path)."""
+    documents corpus: expression features, then one vectorized Arrow
+    embedding stage (zero shuffle, the oracle-checked path)."""
     from pyspark.sql import functions as F
 
-    from edspdf_spark.ml.embeddings import text_embedding_arrow
+    from edspdf_spark.ml.embeddings import simple_text_embedding, simple_text_features
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         F.col("doc_id").cast("string").alias("url"), "text"
     )
-    materialize(text_embedding_arrow(docs, size=16))
+    materialize(simple_text_embedding(simple_text_features(docs), size=16))
 
 
 def bench_warc_selective(spark, cdx_path):

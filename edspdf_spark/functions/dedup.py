@@ -1,7 +1,8 @@
 """Deduplication family for web-scale corpora.
 
-Exact, near-dup (MinHash+LSH, SimHash) and n-gram Jaccard — all expressed
-with built-in functions (higher-order array ops, hash functions); the only
+Exact, near-dup (MinHash+LSH, SimHash) and n-gram Jaccard — expressed with
+built-in functions (higher-order array ops, hash functions), except the
+MinHash signatures, a vectorized NumPy ``mapInArrow`` pass; the only
 shuffles are the groupBys on hash/band keys, which is the theoretical
 minimum for dedup. At 100 TB the LSH band→bucket groupBy is the scale path:
 candidate generation is linear, pairwise verification only runs within
@@ -87,115 +88,64 @@ def minhash_signatures(
     n_hashes: int = 8,
     normalized: bool = True,
 ) -> DataFrame:
-    """MinHash signature per document: ``sig_i = min over shingles of
-    (a_i * poly(shingle) + b_i) % p``."""
-    assert n_hashes <= len(MINHASH_PARAMS)
-    base = normalize_text(F.col(text_col)) if normalized else F.col(text_col)
-    # One row per (doc, shingle-hash), then n_hashes partial-aggregated
-    # mins. Computing the mins as 8 array_min(transform(...)) columns
-    # instead lets Catalyst's projection collapse INLINE the shingle
-    # hashing into every column — 8x recompute, measured 54s → 4s at
-    # sf0.1. The explode+min shape also map-side-combines at scale.
-    # (A rolling code-array variant — one ascii per character, k lookups
-    # per shingle — re-inlines the code array into every lambda
-    # invocation, going O(len²) per row; keep the per-shingle fold.)
-    sh = shingles(base, k)
-    hashed = F.explode(F.transform(sh, lambda s: _poly_shingle_hash(s, k)))
-    exploded = df.select(F.col(id_col), hashed.alias("_h"))
-    aggs = [
-        F.min((F.lit(a) * F.col("_h") + F.lit(b)) % F.lit(MERSENNE)).alias(f"mh{i}")
-        for i, (a, b) in enumerate(MINHASH_PARAMS[:n_hashes])
-    ]
-    return exploded.groupBy(id_col).agg(*aggs)
+    """MinHash signature per document row: ``sig_i = min over shingles of
+    (a_i * poly(shingle) + b_i) % p``.
 
+    One vectorized ``mapInArrow`` pass: the k-gram hashes of a length-L
+    text are k NumPy ops over its codepoint array and the per-hash mins
+    collapse in-batch — zero shuffle, no per-shingle rows.  Each input row
+    with a non-null text yields one output row; rows sharing an id are
+    NOT merged, and a null text yields none.
 
-def minhash_signatures_arrow(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
-    n_hashes: int = 8,
-    normalized: bool = True,
-) -> DataFrame:
-    """Vectorized production twin of :func:`minhash_signatures` — identical
-    signatures (asserted in tests), different physical plan.
-
-    The expression path explodes one row per shingle and evaluates the
-    polynomial hash in Catalyst's interpreted higher-order-function mode,
-    then shuffles for the groupBy mins.  This path computes each document's
-    signature in one NumPy pass inside ``mapInPandas``: the k-gram hashes
-    of a length-L text are k vectorized ops over the codepoint array, and
-    the per-hash mins collapse in-batch — ZERO shuffle, no per-shingle
-    rows.  At 10^12 docs the groupBy shuffle this removes carries one row
-    per doc; here nothing crosses the network at all.
-
-    Parity notes (mirrors the expression semantics exactly):
+    Semantics (those of the DuckDB oracle):
     - normalize = lower(trim(regexp_replace(\\s+ → ' '))) with ASCII \\s,
-      matching the JVM's default (non-unicode) ``\\s`` class;
-    - a text shorter than k becomes ONE shingle whose fold continues over
-      ``ascii('') = 0`` for the missing positions;
-    - shingle DISTINCTness is skipped — min over duplicates equals min
-      over the distinct set.
+      the JVM's default (non-unicode) ``\\s`` class.  Spark SQL's trim()
+      strips ONLY the space character — not java.lang.String.trim's
+      <= U+0020, and not str.strip()'s unicode whitespace set;
+    - a text shorter than k is ONE shingle whose fold continues over code
+      0 for the missing positions;
+    - shingles are not de-duplicated — min over duplicates equals min over
+      the distinct set.
     """
     import re
 
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.types import LongType, StructField, StructType
 
     assert n_hashes <= len(MINHASH_PARAMS)
-    params = MINHASH_PARAMS[:n_hashes]
+    a, b = (np.array(c, dtype=np.int64) for c in zip(*MINHASH_PARAMS[:n_hashes]))
     ws = re.compile(r"\s+", re.ASCII)
-    cols = [id_col] + [f"mh{i}" for i in range(n_hashes)]
-    id_type = dict(df.dtypes)[id_col]
+    names = [id_col] + [f"mh{i}" for i in range(n_hashes)]
 
-    def run(iterator):
-        for pdf in iterator:
-            out = []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    continue
-                # Spark SQL's trim() (StringTrim) strips ONLY the space
-                # character — not java.lang.String.trim's <= U+0020, and
-                # not Python str.strip()'s full unicode whitespace set;
-                # verified empirically ('\x07hello' keeps its control
-                # char through F.trim). Strip ' ' alone for parity.
-                s = (
-                    ws.sub(" ", text).strip(" ").lower()
-                    if normalized
-                    else text
-                )
-                codes = np.array([ord(c) for c in s], dtype=np.int64)
-                L = len(codes)
-                if L <= k - 1:
-                    h = 0
-                    for j in range(k):
-                        c = int(codes[j]) if j < L else 0
-                        h = (h * 31 + c) % MERSENNE
-                    hashes = np.array([h], dtype=np.int64)
-                else:
-                    n = L - k + 1
-                    hashes = np.zeros(n, dtype=np.int64)
-                    for j in range(k):
-                        hashes = (hashes * 31 + codes[j : j + n]) % MERSENNE
-                out.append(
-                    [doc_id]
-                    + [int(((a * hashes + b) % MERSENNE).min()) for a, b in params]
-                )
-            if out:
-                yield pd.DataFrame(out, columns=cols)
-            else:
-                # empty object-dtype frames fail the Arrow cast — be explicit
-                yield pd.DataFrame(
-                    {
-                        id_col: pd.Series(dtype=pdf[id_col].dtype),
-                        **{f"mh{i}": pd.Series(dtype="int64") for i in range(n_hashes)},
-                    }
-                )
+    def signature(text: str):
+        s = ws.sub(" ", text).strip(" ").lower() if normalized else text
+        codes = np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32).astype(np.int64)
+        if len(codes) < k:
+            codes = np.pad(codes, (0, k - len(codes)))
+        n = len(codes) - k + 1
+        h = np.zeros(n, dtype=np.int64)
+        for j in range(k):
+            h = (h * 31 + codes[j : j + n]) % MERSENNE
+        return ((h[:, None] * a + b) % MERSENNE).min(axis=0)
 
-    schema = ", ".join(
-        [f"{id_col} {id_type}"] + [f"mh{i} bigint" for i in range(n_hashes)]
+    def run(batches):
+        for batch in batches:
+            texts = batch.column(1)
+            valid = texts.is_valid()
+            sigs = np.array(
+                [signature(t) for t in texts.filter(valid).to_pylist()],
+                dtype=np.int64,
+            ).reshape(-1, n_hashes)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0).filter(valid)] + [pa.array(c) for c in sigs.T],
+                names=names,
+            )
+
+    schema = StructType(
+        [df.schema[id_col]] + [StructField(f"mh{i}", LongType()) for i in range(n_hashes)]
     )
-    return df.select(id_col, text_col).mapInPandas(run, schema=schema)
+    return df.select(id_col, text_col).mapInArrow(run, schema=schema)
 
 
 #: Default hot-bucket cap for :func:`lsh_candidate_pairs`. A band bucket of

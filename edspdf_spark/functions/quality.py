@@ -947,9 +947,8 @@ def with_compress_ratio(
     lands ~400–700‰, degenerate repetition under ~100‰).
 
     zlib is not expressible in Catalyst, so this is one Arrow-batched
-    ``mapInPandas`` stage (the :func:`minhash_signatures_arrow` shape):
-    ZERO shuffle, per-batch Python cost is one ``zlib.compress`` per doc
-    on bytes already in memory. Deterministic for a fixed zlib level —
+    ``mapInPandas`` stage: ZERO shuffle, per-batch Python cost is one
+    ``zlib.compress`` per doc on bytes already in memory. Deterministic for a fixed zlib level —
     pytest-validated against local zlib plus partitioning invariance.
     """
     import zlib

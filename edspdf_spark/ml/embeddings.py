@@ -17,7 +17,8 @@ re-expressed in the strongest form Spark allows:
   vocabularies built DISTRIBUTED (sorted distinct + dense_rank — the
   reference's insertion-order ids are partition-order-dependent, ours are
   not: documented deviation); embedding lookup via a portable polynomial
-  hash so serving needs no vocabulary broadcast at all.
+  hash so serving needs no vocabulary broadcast at all, computed as NumPy
+  folds in one Arrow-batched ``mapInArrow`` stage.
 - **E4 sub-box-cnn-pooler** (``sub_box_cnn_pooler.py:13-120``): NumPy
   multi-kernel conv1d + max-pool in an Arrow-batched ``mapInPandas`` stage;
   weights are seeded-Gaussian stand-ins for the learned parameters.
@@ -32,12 +33,13 @@ re-expressed in the strongest form Spark allows:
   bbox rescale to the 1000-unit LayoutLM space and the strided-window split
   with best-occurrence-per-token selection by contextualization score.
 
-Scale notes: E2/E3/E5/E7 are pure expressions — they pushdown, prune and
-codegen like any projection and never shuffle (except E2's per-url page
-window, which rides the same url partitioning every other per-doc stage
-uses).  E4/E6 are Arrow-batched matmul stages sized by
-``arrow.maxRecordsPerBatch``; per-page groups are bounded (a page holds
-hundreds of lines, not millions), so batch memory is bounded too.
+Scale notes: E2/E5/E7 and the E3 features are pure expressions — they
+pushdown, prune and codegen like any projection and never shuffle (except
+E2's per-url page window, which rides the same url partitioning every other
+per-doc stage uses).  The E3 embedding and E4/E6 are Arrow-batched NumPy
+stages sized by ``arrow.maxRecordsPerBatch``; per-page groups are bounded
+(a page holds hundreds of lines, not millions), so batch memory is bounded
+too.
 """
 
 from __future__ import annotations
@@ -238,19 +240,6 @@ def build_vocab(df: DataFrame, col: str, num_partitions: int = None) -> DataFram
     return unk.unionByName(ranked)
 
 
-def _string_poly_hash(col: Column) -> Column:
-    """Variable-length polynomial hash ``h = (h*31 + ascii(c)) % p`` over the
-    string's characters — closed to [0, MERSENNE), identical in DuckDB via
-    ``list_reduce`` (see entry query oracle)."""
-    chars = F.filter(F.split(col, ""), lambda c: c != F.lit(""))
-    codes = F.transform(chars, lambda c: F.ascii(c).cast("long"))
-    return F.aggregate(
-        codes,
-        F.lit(0).cast("long"),
-        lambda acc, c: (acc * F.lit(31) + c) % F.lit(MERSENNE),
-    )
-
-
 def _emb_params(size: int, salt: int) -> List[tuple]:
     """Per-channel universal-hash params (a, b) — deterministic, shared with
     the Python-generated oracle SQL."""
@@ -260,39 +249,6 @@ def _emb_params(size: int, salt: int) -> List[tuple]:
         b = (40503 * (salt * 977 + j + 1)) % MERSENNE
         params.append((a or 1, b))
     return params
-
-
-def _hash_vector(col: Column, size: int, salt: int) -> List[Column]:
-    """Deterministic embedding vector for a feature string: channel j =
-    ``((h*a_j + b_j) mod p) / p * 2 - 1`` ∈ [-1, 1).  Stand-in for the
-    learned ``torch.nn.Embedding`` rows — needs NO vocabulary broadcast, so
-    serving scales to any corpus."""
-    h = _string_poly_hash(col)
-    out = []
-    for a, b in _emb_params(size, salt):
-        u = (h * F.lit(a) + F.lit(b)) % F.lit(MERSENNE)
-        out.append(u.cast("double") / F.lit(float(MERSENNE)) * F.lit(2.0) - F.lit(1.0))
-    return out
-
-
-def simple_text_embedding(features: DataFrame, size: int = 16) -> DataFrame:
-    """E3 forward (simple_text_embedding.py:254-262): per-token embedding =
-    shape_vec + prefix_vec + suffix_vec.  The norm embedding is EXCLUDED —
-    the reference's forward comments it out (line 259) — mirrored here.
-
-    Cost note: each channel references the char-fold hash, and Catalyst's
-    projection collapse inlines it per consumer (``size`` folds per feature
-    per row).  The folds run over ≤3-char affixes and the token's shape, so
-    this stays cheap at serve time; a pipeline that feeds these embeddings
-    into E4/E6 anyway should compute them inside that stage's NumPy batch
-    (hashing there is one vectorized pass)."""
-    shape_v = _hash_vector(F.col("shape"), size, salt=1)
-    prefix_v = _hash_vector(F.col("prefix"), size, salt=2)
-    suffix_v = _hash_vector(F.col("suffix"), size, salt=3)
-    emb = F.array(
-        *[shape_v[j] + prefix_v[j] + suffix_v[j] for j in range(size)]
-    )
-    return features.withColumn("emb", emb)
 
 
 def _shape_poly_scalar(tok: str) -> int:
@@ -329,8 +285,9 @@ def _poly_scalar(s: str) -> int:
     return h
 
 
-_LONG_SHAPE_HASH = _poly_scalar("LONG")
-_VEC_MAX_TOK = 256  # tokens longer than this go through the scalar path
+# Longer tokens take the scalar path: their shape is the constant 'LONG',
+# and the fast path's codepoint matrix stays at most this wide.
+_VEC_MAX_TOK = 99
 
 
 def _hash_features_vectorized(tokens):
@@ -343,26 +300,22 @@ def _hash_features_vectorized(tokens):
     where the JVM's Unicode ``lower()`` differs from the +32 trick) drop to
     the exact scalar path.
     """
-    import numpy as np
-
     n = len(tokens)
     h_shape = np.zeros(n, dtype=np.int64)
     h_pre = np.zeros(n, dtype=np.int64)
     h_suf = np.zeros(n, dtype=np.int64)
 
-    scalar_idx = [
-        i
-        for i, t in enumerate(tokens)
-        if len(t) > _VEC_MAX_TOK or "\x00" in t or any(ord(c) > 127 for c in t)
-    ]
-    for i in scalar_idx:
+    slow = np.fromiter(
+        (len(t) > _VEC_MAX_TOK or "\x00" in t or not t.isascii() for t in tokens),
+        dtype=bool,
+        count=n,
+    )
+    for i in np.flatnonzero(slow):
         low = tokens[i].lower()
         h_shape[i] = _shape_poly_scalar(tokens[i])
         h_pre[i] = _poly_scalar(low[:3])
         h_suf[i] = _poly_scalar(low[-3:])
-    _sset = set(scalar_idx)
-    fast = [i for i in range(n) if i not in _sset] if scalar_idx else None
-    fast_toks = [tokens[i] for i in fast] if fast is not None else tokens
+    fast_toks = [t for t, s in zip(tokens, slow) if not s] if slow.any() else tokens
     if not fast_toks:
         return h_shape, h_pre, h_suf
 
@@ -405,94 +358,56 @@ def _hash_features_vectorized(tokens):
     run_start = np.maximum.accumulate(np.where(change, jidx[None, :], 0), axis=1)
     keep_shape = ((jidx[None, :] - run_start) < 4) & in_tok
     hs = fold(cls, keep_shape)
-    hs = np.where(lens >= 100, _LONG_SHAPE_HASH, hs)
 
-    if fast is None:
-        return hs, hp, hu
-    fa = np.array(fast)
-    h_shape[fa], h_pre[fa], h_suf[fa] = hs, hp, hu
+    fast = ~slow
+    h_shape[fast], h_pre[fast], h_suf[fast] = hs, hp, hu
     return h_shape, h_pre, h_suf
 
 
-def text_embedding_arrow(
-    df: DataFrame,
-    text_col: str = "text",
-    keep_cols: Sequence[str] = ("url",),
-    size: int = 16,
-) -> DataFrame:
-    """Vectorized production twin of ``simple_text_features`` +
-    ``simple_text_embedding`` — identical token order and embedding values
-    (asserted in tests), different physical plan.
+def simple_text_embedding(features: DataFrame, size: int = 16) -> DataFrame:
+    """E3 forward (simple_text_embedding.py:254-262): per-token embedding =
+    shape_vec + prefix_vec + suffix_vec.  The norm embedding is EXCLUDED —
+    the reference's forward comments it out (line 259) — mirrored here.
 
-    The expression path evaluates ``3 × size`` interpreted char-fold
-    hashes per token (projection collapse inlines the fold into every
-    channel).  This path tokenizes with the same pattern via the C regex
-    engine, computes the three feature hashes as column-wise NumPy folds
-    over the batch's UTF-32 codepoint matrix
-    (:func:`_hash_features_vectorized`), and emits all channels in one
-    ``((h*a + b) % p) / p * 2 - 1`` matrix op.  Zero shuffle — a pure
-    Arrow map stage.  Output: ``keep_cols + (tok_idx, tok, emb)``; the
-    debug feature STRINGS stay on the expression path.
-    """
-    import re
+    A feature string with polynomial codepoint hash ``h = (h*31 + c) % p``
+    maps to channel j = ``((h*a_j + b_j) mod p) / p * 2 - 1`` ∈ [-1, 1):
+    a stand-in for the learned ``torch.nn.Embedding`` rows that needs NO
+    vocabulary broadcast, so serving scales to any corpus.
 
-    import numpy as np
-    import pandas as pd
+    One ``mapInArrow`` pass over the ``tok`` column appends ``emb`` to the
+    features frame: the three feature hashes (the token's shape, lower[:3]
+    and lower[-3:]) are column-wise NumPy folds over the batch's codepoint
+    matrix (:func:`_hash_features_vectorized`), and all channels come out
+    of one matrix op.  Zero shuffle; a null token gets a null ``emb``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
-    word_re = re.compile(WORD_PATTERN, re.ASCII)
-    params = _emb_params(size, 1), _emb_params(size, 2), _emb_params(size, 3)
-    A = [np.array([a for a, _ in ps], dtype=np.int64) for ps in params]
-    B = [np.array([b for _, b in ps], dtype=np.int64) for ps in params]
-    keep = list(keep_cols)
-    types = _spark_types(df, keep)
+    params = [np.array(_emb_params(size, salt), dtype=np.int64) for salt in (1, 2, 3)]
+    emb_type = ArrayType(DoubleType())
+    arrow_emb_type = to_arrow_type(emb_type)
+    names = features.columns + ["emb"]
+    tok_pos = features.columns.index("tok")
 
-    def run(iterator):
-        for pdf in iterator:
-            texts = pdf[text_col]
-            tok_lists = [
-                word_re.findall(t) if t is not None else None for t in texts
-            ]
-            counts = [len(l) for l in tok_lists if l is not None]
-            all_toks = [t for l in tok_lists if l is not None for t in l]
-            if not all_toks:
-                yield pd.DataFrame(
-                    {
-                        **{c: pd.Series(dtype=pdf[c].dtype) for c in keep},
-                        "tok_idx": pd.Series(dtype="int32"),
-                        "tok": pd.Series(dtype=object),
-                        "emb": pd.Series(dtype=object),
-                    }
-                )
-                continue
-            hs, hp, hu = _hash_features_vectorized(all_toks)
-            emb = np.zeros((len(all_toks), size))
-            for h, a, b in zip((hs, hp, hu), A, B):
-                emb += ((h[:, None] * a + b) % MERSENNE).astype(
+    def run(batches):
+        for batch in batches:
+            toks = batch.column(tok_pos)
+            emb = np.zeros((len(toks), size))
+            hashes = _hash_features_vectorized(toks.fill_null("").to_pylist())
+            for h, p in zip(hashes, params):
+                emb += ((h[:, None] * p[:, 0] + p[:, 1]) % MERSENNE).astype(
                     np.float64
                 ) / MERSENNE * 2.0 - 1.0
-            out = pd.DataFrame(
-                {
-                    **{
-                        c: np.repeat(
-                            pdf[c][[l is not None for l in tok_lists]].to_numpy(),
-                            counts,
-                        )
-                        for c in keep
-                    },
-                    "tok_idx": np.concatenate([np.arange(c) for c in counts]),
-                    "tok": all_toks,
-                    # row views of the matrix — Arrow takes ndarrays directly,
-                    # no per-row Python float lists
-                    "emb": list(emb),
-                }
+            emb_arr = pa.ListArray.from_arrays(
+                pa.array(np.arange(0, emb.size + 1, size, dtype=np.int32)),
+                pa.array(emb.ravel()),
+                type=arrow_emb_type,
+                mask=toks.is_null(),
             )
-            yield out
+            yield pa.RecordBatch.from_arrays(batch.columns + [emb_arr], names=names)
 
-    schema = ", ".join(
-        [f"{c} {t}" for c, t in zip(keep, types)]
-        + ["tok_idx int", "tok string", "emb array<double>"]
-    )
-    return df.select(*keep, text_col).mapInPandas(run, schema=schema)
+    schema = StructType(features.schema.fields + [StructField("emb", emb_type)])
+    return features.mapInArrow(run, schema=schema)
 
 
 # ---------------------------------------------------------------------------

@@ -178,6 +178,11 @@ def test_stream_neardup_gate_flags_snapshot_collisions(spark, tmp_path):
         ("dup1", _ts(1), b"x", base + " extra tail", "en"),      # near-dup of 100
         ("nov1", _ts(2), b"x", "totally novel words " * 8, "en"),
         ("dup2", _ts(3), b"x", other, "en"),                     # exact of 200
+        # one url twice: a near-dup of 100 and a long novel page. Each row
+        # gets its own signature; merged per url, the novel page's shingles
+        # would win the minima and hide the near-dup
+        ("rep", _ts(4), b"x", base + " extra tail", "en"),
+        ("rep", _ts(5), b"x", " ".join(f"novel{i}" for i in range(1000)), "en"),
     ]
     _write_batch(spark, src, rows)
     q = stream_neardup_gate(read_pages_stream(spark, src), snap, out, ckpt)
@@ -186,6 +191,7 @@ def test_stream_neardup_gate_flags_snapshot_collisions(spark, tmp_path):
     got = {(r.url, int(r.snap_id)) for r in spark.read.parquet(out).collect()}
     assert ("dup1", 100) in got
     assert ("dup2", 200) in got
+    assert ("rep", 100) in got
     assert not any(u == "nov1" for u, _ in got)
 
     # parity with the batch kernel on identical input

@@ -92,10 +92,7 @@ def main() -> None:
     from edspdf_spark import get_spark
     from edspdf_spark import entry_queries as eq
     from edspdf_spark.fixtures import pages_from_documents
-    from edspdf_spark.functions.dedup import (
-        lsh_candidate_pairs,
-        minhash_signatures_arrow,
-    )
+    from edspdf_spark.functions.dedup import lsh_candidate_pairs, minhash_signatures
     from edspdf_spark.functions.similarity import cosine_topk
     from edspdf_spark.operators import (
         aggregate_simple,
@@ -188,7 +185,7 @@ def main() -> None:
             "`distinct` (a pair can collide in several bands; this exchange "
             "moves candidate PAIRS, a tiny fraction of corpus bytes).",
             lsh_candidate_pairs(
-                minhash_signatures_arrow(docs, k=5, n_hashes=8),
+                minhash_signatures(docs, k=5, n_hashes=8),
                 rows_per_band=2,
                 n_hashes=8,
             ),
@@ -555,10 +552,10 @@ def main() -> None:
             "double-compute), then a pair-keyed distinct. Old×old never "
             "re-pairs — per-dump cost scales with the dump.",
             (lambda _d: _d.lsh_incremental_pairs(
-                _d.minhash_signatures_arrow(
+                _d.minhash_signatures(
                     docs.filter(F.col("doc_id") % 2 == 1), k=5, n_hashes=8
                 ),
-                _d.minhash_signatures_arrow(
+                _d.minhash_signatures(
                     docs.filter(F.col("doc_id") % 2 == 0), k=5, n_hashes=8
                 ),
             ))(__import__("edspdf_spark.functions.dedup", fromlist=["x"])),

@@ -19,7 +19,11 @@ If (1) shows the same per-core drop as Spark, the ceiling is the machine
 side directly. Results feed the noise-analysis section of
 BENCH/BASELINE.md.
 
+Process i is pinned to the i-th CPU this process may run on, so a level
+larger than that CPU set is refused before any process starts.
+
 Usage: python tools/machine_probe.py [kernel|bandwidth|both]
+Prints progress to stderr and the result JSON to stdout; writes no file.
 """
 
 from __future__ import annotations
@@ -113,13 +117,24 @@ def _bw_proc(core: int, copies: int, barrier, out_q) -> None:
     out_q.put(time.perf_counter() - t0)
 
 
+def pin_cpus(nprocs: int) -> list:
+    """The first ``nprocs`` CPUs of this process's affinity set, one per
+    probe process; raises if the set is smaller."""
+    cpus = sorted(os.sched_getaffinity(0))
+    if nprocs > len(cpus):
+        raise ValueError(
+            f"level {nprocs} exceeds the {len(cpus)} CPUs this process may run on"
+        )
+    return cpus[:nprocs]
+
+
 def run_level(target, nprocs: int, work: int) -> float:
+    cpus = pin_cpus(nprocs)
     ctx = mp.get_context("fork")
     barrier = ctx.Barrier(nprocs)
     out_q = ctx.Queue()
     procs = [
-        ctx.Process(target=target, args=(c, work, barrier, out_q))
-        for c in range(nprocs)
+        ctx.Process(target=target, args=(c, work, barrier, out_q)) for c in cpus
     ]
     for p in procs:
         p.start()
@@ -131,6 +146,7 @@ def run_level(target, nprocs: int, work: int) -> float:
 
 def main() -> None:
     what = sys.argv[1] if len(sys.argv) > 1 else "both"
+    pin_cpus(max(LEVELS))  # refuse an unpinnable level before loading anything
     result: dict = {"levels": LEVELS, "reps": REPS}
 
     if what in ("kernel", "both"):
@@ -140,7 +156,7 @@ def main() -> None:
         for rep in range(REPS):
             for n in LEVELS:  # interleaved like the Spark bench
                 ker.setdefault(n, []).append(run_level(_kernel_proc, n, DOCS_PER_PROC))
-                print(f"kernel rep {rep} n={n}: {ker[n][-1]:.2f}s", flush=True)
+                print(f"kernel rep {rep} n={n}: {ker[n][-1]:.2f}s", file=sys.stderr)
         result["kernel"] = {
             str(n): {
                 "walls": [round(w, 3) for w in ker[n]],
@@ -161,7 +177,7 @@ def main() -> None:
         for rep in range(REPS):
             for n in LEVELS:
                 bw.setdefault(n, []).append(run_level(_bw_proc, n, COPIES_PER_PROC))
-                print(f"bw rep {rep} n={n}: {bw[n][-1]:.2f}s", flush=True)
+                print(f"bw rep {rep} n={n}: {bw[n][-1]:.2f}s", file=sys.stderr)
         gb = COPIES_PER_PROC * 0.25 * 2  # read+write per copy, GB
         result["bandwidth"] = {
             str(n): {
@@ -174,10 +190,6 @@ def main() -> None:
         result["bandwidth"]["efficiency_best"] = round(min(bw[lo]) / min(bw[hi]), 3)
 
     print(json.dumps(result, indent=1))
-    out = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "BENCH",
-                       "machine_probe.json")
-    with open(out, "w") as f:
-        json.dump(result, f, indent=1)
 
 
 if __name__ == "__main__":
