@@ -2293,31 +2293,21 @@ def _simhash_oracle() -> str:
 
 
 def _q_ann_cosine(spark, sf_dir):
-    """Brute-force cosine top-5: expression-based (element_at sums in the
-    same left-assoc order as the SQL oracle) for bit-identical ranking."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    dim = len(emb.select("embedding").first()[0])
+    """Brute-force cosine top-5 of every 31st vector, self excluded:
+    ``cosine_topk`` (the exact kernel, so the ranking is bit-identical to
+    the SQL oracle) over-fetched by one, self dropped, re-ranked."""
     from pyspark.sql import Window
 
-    q = emb.filter(F.col("vec_id") % 31 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    joined = emb.crossJoin(F.broadcast(q)).filter(F.col("vec_id") != F.col("query_id"))
+    from edspdf_spark.functions.similarity import cosine_topk
 
-    dot = F.lit(0.0)
-    nc = F.lit(0.0)
-    nq = F.lit(0.0)
-    for j in range(dim):
-        ce = F.element_at(F.col("embedding"), j + 1).cast("double")
-        qe = F.element_at(F.col("q_emb"), j + 1).cast("double")
-        dot = dot + ce * qe
-        nc = nc + ce * ce
-        nq = nq + qe * qe
-    cos = dot / (F.sqrt(nc) * F.sqrt(nq))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    q = emb.filter(F.col("vec_id") % 31 == 0)
+    top = cosine_topk(emb, q, k=6).filter(F.col("query_id") != F.col("vec_id"))
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("vec_id").asc()
+    )
     return (
-        joined.withColumn("cos", cos)
-        .withColumn("rank", F.row_number().over(w))
+        top.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= 5)
         .select("query_id", "rank", "vec_id")
     )
@@ -2803,12 +2793,7 @@ def _q_lsh_neardup(spark, sf_dir):
     from edspdf_spark.functions.similarity import lsh_neardup_pairs
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    # vectorized=False: the expression twin whose arithmetic is left-assoc
-    # identical to the oracle; the Arrow production twin is parity-asserted
-    # in tests/test_functions.py and carries the bench
-    return lsh_neardup_pairs(
-        emb, threshold=0.4, n_bits=6, n_tables=2, seed=42, vectorized=False
-    )
+    return lsh_neardup_pairs(emb, threshold=0.4, n_bits=6, n_tables=2, seed=42)
 
 
 def _lsh_neardup_oracle(
@@ -2888,8 +2873,7 @@ def _lsh_ann_oracle(dim: int = 64, n_bits: int = 6, k: int = 5) -> str:
             bits.append(f"(CASE WHEN (0.0 + {dot}) > 0 THEN {1 << b} ELSE 0 END)")
         return "0 + " + " + ".join(bits)
 
-    # cast-to-double products, matching _cos_expr's fold (double products,
-    # left-assoc sums) on the Spark side
+    # cast-to-double products, left-assoc sums: the exact kernel's order
     dot = " + ".join(
         f"CAST(c.embedding[{j}] AS DOUBLE) * CAST(q.embedding[{j}] AS DOUBLE)"
         for j in range(1, dim + 1)
@@ -3004,10 +2988,10 @@ def _q_ann_indexed(spark, sf_dir):
     brute force + both indexed paths (random-hyperplane LSH, IVF coarse
     quantizer) + hard-negative mining (top-3 excluding the rank-1
     positive and self — the DPR-style contrastive-training negatives
-    source, ``functions.similarity.mine_hard_negatives`` on its
-    oracle-identical ``exact_expr`` kernel; the BLAS twin is
-    parity-asserted in tests/test_hard_negatives.py). Each leg keeps its
-    own value-level oracle (5-way union).
+    source, ``functions.similarity.mine_hard_negatives``). The exact,
+    LSH, IVF and hard-negative legs all score with the exact cosine
+    kernel, so their rankings match the oracle SQL bit for bit. Each leg
+    keeps its own value-level oracle (5-way union).
 
     The fifth leg drives the int8 storage path
     (``quantize_embeddings_int8`` → ``dequantize_embeddings_int8``) over
@@ -3040,9 +3024,9 @@ def _q_ann_indexed(spark, sf_dir):
         .filter(F.col("rank") == 1)
         .select("query_id", F.col("vec_id").alias("pos_id"))
     )
-    hardneg = mine_hard_negatives(
-        emb, queries, pos, k=3, method="exact_expr"
-    ).select(F.lit("hardneg").alias("method"), "query_id", "rank", "vec_id")
+    hardneg = mine_hard_negatives(emb, queries, pos, k=3).select(
+        F.lit("hardneg").alias("method"), "query_id", "rank", "vec_id"
+    )
     qd = dequantize_embeddings_int8(quantize_embeddings_int8(emb), out_col="dq")
     int8 = qd.select(
         F.lit("int8").alias("method"),
@@ -3272,8 +3256,7 @@ def _semdedup_oracle(dim: int = 64, eps: float = 0.6) -> str:
         )
         return f"({dot}) / (sqrt({na}) * sqrt({nb}))"
 
-    # pair cosine with the SAME operand order as semdedup_verdicts'
-    # _cos_expr(u, v): dot over (u_j * v_j), norm-u then norm-v
+    # pair cosine: dot over (u_j * v_j), norm-u then norm-v
     pair_dot = " + ".join(
         f"CAST(eu.embedding[{j}] AS DOUBLE) * CAST(ev.embedding[{j}] AS DOUBLE)"
         for j in range(1, dim + 1)

@@ -90,13 +90,10 @@ def bench_lsh_neardup(spark, sf_dir):
 
 
 def bench_semdedup(spark, sf_dir):
-    """SemDeDup semantic pruning, production (Arrow/BLAS) twin: seeded
-    k-means codebook on a capped sample, batch-matmul cell assignment, one
-    cell-keyed exchange, per-cell triangular G = N@N.T scan."""
-    from edspdf_spark.functions.similarity import (
-        kmeans_fit,
-        semdedup_verdicts_vec,
-    )
+    """SemDeDup semantic pruning, the oracle-checked face: seeded k-means
+    codebook on a capped sample, exact-kernel cell assignment, one
+    cell-keyed exchange, per-cell triangular exact-cosine scan."""
+    from edspdf_spark.functions.similarity import kmeans_fit, semdedup_verdicts
     import numpy as np
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -107,7 +104,7 @@ def bench_semdedup(spark, sf_dir):
         [(int(i), [float(x) for x in c]) for i, c in enumerate(kmeans_fit(sample, 64))],
         "cid int, c_emb array<double>",
     )
-    materialize(semdedup_verdicts_vec(emb, cent, eps=0.6))
+    materialize(semdedup_verdicts(emb, cent, eps=0.6))
 
 
 def bench_ivfpq(spark, sf_dir):

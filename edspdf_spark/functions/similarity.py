@@ -3,10 +3,10 @@
 Three paths:
 
 * ``cosine_topk`` — brute-force exact top-k. The query side is collected to
-  a (small) NumPy matrix and closed over by an Arrow-batched ``mapInPandas``
-  stage that does one BLAS matmul per batch, keeps a PARTITION-LOCAL top-k,
-  and only then shuffles k rows per (query × partition) for the global
-  top-k. Driver never sees the corpus.
+  a (small) matrix and closed over by an Arrow-batched ``mapInArrow``
+  stage that scores each batch, keeps a PARTITION-LOCAL top-k, and only
+  then shuffles k rows per (query × partition) for the global top-k.
+  Driver never sees the corpus.
 * ``lsh_ann_topk`` — random-hyperplane LSH: bucket by sign bits, search only
   within the query's bucket (+ optional multi-probe). The scale path: the
   candidate set per query is corpus/2^bits on average.
@@ -16,6 +16,17 @@ Three paths:
   cells. The cell id is the shuffle/partition key — at 10^12 vectors each
   cell is an independently scannable slice, and recall/cost trades off via
   ``nprobe``.
+
+Every cosine and sign bit that an exact operator emits, thresholds or
+ranks (``cosine_topk``, ``cosine_neardup_pairs``, ``lsh_neardup_pairs``,
+``lsh_ann_topk``, ``ivf_serve_topk``, ``semdedup_verdicts``) comes from one
+kernel: :func:`_dims_major` turns an Arrow list column into a dims-major
+float64 matrix and :func:`_dot` adds ``a[j]*b[j]`` left to right from 0.0,
+vectorized across rows. ``cos = dot / (sqrt(na) * sqrt(nb))`` and a sign
+bit is ``dot(x, h) > 0`` — the operation order of the DuckDB oracles, so
+their doubles match bit for bit. A zero-norm vector's cosine is NULL, as
+the oracles' SQL division gives. The trained ANN paths (``ivf_ann_topk``,
+``ivfpq_ann_topk``) keep BLAS scoring; their recall is tested instead.
 """
 
 from __future__ import annotations
@@ -24,9 +35,12 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
 
 def _normalize(m: np.ndarray) -> np.ndarray:
     norms = np.linalg.norm(m, axis=1, keepdims=True)
@@ -34,10 +48,160 @@ def _normalize(m: np.ndarray) -> np.ndarray:
     return m / norms
 
 
+def _dims_major(col: pa.Array) -> np.ndarray:
+    """A ``list<float|double>`` Arrow column as a C-contiguous dims-major
+    ``(dim, n)`` float64 matrix (float32 widens exactly). Row ``j`` holds
+    every vector's ``j``-th component, so :func:`_dot` runs one vector op
+    per dimension instead of a strided column walk."""
+    flat = col.flatten().to_numpy(zero_copy_only=False)
+    return np.ascontiguousarray(flat.astype(np.float64).reshape(len(col), -1).T)
+
+
+def _dot(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """``((0.0 + a[0]*b[0]) + a[1]*b[1]) + …`` over the leading (dims)
+    axis, the other axes broadcast: the left-to-right order of a SQL
+    ``0.0 + x1*y1 + …`` fold. BLAS and a pairwise ``sum`` along a
+    vector's own (contiguous) axis add in other orders."""
+    acc = np.zeros(np.broadcast_shapes(a.shape[1:], b.shape[1:]))
+    term = np.empty_like(acc)
+    for aj, bj in zip(a, b, strict=True):
+        acc += np.multiply(aj, bj, out=term)
+    return acc
+
+
+def _cosine(dot: np.ndarray, na: np.ndarray, nb: np.ndarray) -> np.ndarray:
+    """``dot / (sqrt(na) * sqrt(nb))``; NaN, the oracle's NULL, where a
+    norm is zero. ``pa.array(..., from_pandas=True)`` emits it as NULL."""
+    den = np.sqrt(na) * np.sqrt(nb)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(den == 0.0, np.nan, dot / den)
+
+
+def _desc_nulls_last(cos: np.ndarray) -> np.ndarray:
+    """Stable ascending-sort key for ``ORDER BY cos DESC NULLS LAST``."""
+    return np.where(np.isnan(cos), np.inf, -cos)
+
+
+def _pair_cosines(
+    pairs: DataFrame,
+    a_col: str,
+    b_col: str,
+    keep: list,
+    out: str,
+    above: float = None,
+) -> DataFrame:
+    """``keep`` columns plus ``out``, the exact cosine of each row's
+    ``a_col`` and ``b_col`` vectors, in one ``mapInArrow`` stage. With
+    ``above``, only rows whose cosine is greater than it."""
+    names = [*keep, out]
+    schema = T.StructType(
+        [pairs.schema[c] for c in keep] + [T.StructField(out, T.DoubleType())]
+    )
+
+    def score(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            a = _dims_major(rb.column(a_col))
+            b = _dims_major(rb.column(b_col))
+            cos = _cosine(_dot(a, b), _dot(a, a), _dot(b, b))
+            cols = [rb.column(c) for c in keep] + [pa.array(cos, from_pandas=True)]
+            rb = pa.RecordBatch.from_arrays(cols, names=names)
+            yield rb if above is None else rb.filter(pa.array(cos > above))
+
+    return pairs.select(*keep, a_col, b_col).mapInArrow(score, schema)
+
+
+def _sign_buckets(
+    df: DataFrame, vec_col: str, n_bits: int, n_tables: int, seed: int, keep: list
+) -> DataFrame:
+    """``keep`` columns plus ``table`` and ``bucket``: one row per (vector,
+    table), the bucket packing the signs of ``n_bits`` exact dots with
+    :func:`hyperplanes` ``(dim, n_bits, seed + table)`` — bit ``b`` is
+    ``dot(x, H[b]) > 0``. The planes are drawn in the worker from the
+    batch's own dim, so no driver job reads a row first."""
+    schema = T.StructType(
+        [df.schema[c] for c in keep]
+        + [T.StructField("table", T.IntegerType()), T.StructField("bucket", T.LongType())]
+    )
+    shifts = np.arange(n_bits, dtype=np.int64)[:, None]
+
+    def tag(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        planes = {}
+        for rb in batches:
+            n = rb.num_rows
+            if not n:
+                continue
+            m = _dims_major(rb.column(vec_col))
+            dim = len(m)
+            if dim not in planes:
+                H = np.stack([hyperplanes(dim, n_bits, seed + t) for t in range(n_tables)])
+                planes[dim] = np.ascontiguousarray(np.moveaxis(H, -1, 0)[..., None])
+            bits = _dot(planes[dim], m[:, None, None, :]) > 0  # (tables, bits, n)
+            bucket = (bits.astype(np.int64) << shifts).sum(axis=1)  # (tables, n)
+            rows = pa.array(np.tile(np.arange(n), n_tables))
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(c).take(rows) for c in keep]
+                + [
+                    pa.array(np.repeat(np.arange(n_tables, dtype=np.int32), n)),
+                    pa.array(bucket.ravel()),
+                ],
+                names=[*keep, "table", "bucket"],
+            )
+
+    return df.select(*dict.fromkeys([*keep, vec_col])).mapInArrow(tag, schema)
+
+
+def _codebook(centroids: DataFrame) -> tuple:
+    """``(cids, C)`` of a ``(cid, c_emb)`` codebook frame: cids ascending
+    (int32) and ``C`` dims-major, so a first-max argmax is lowest-cid."""
+    tbl = centroids.select("cid", "c_emb").toArrow()
+    if not tbl.num_rows:
+        return np.empty(0, dtype=np.int32), np.empty((0, 0))
+    tbl = tbl.take(pc.sort_indices(tbl, [("cid", "ascending")])).combine_chunks()
+    cids = tbl.column("cid").to_numpy().astype(np.int32)
+    return cids, _dims_major(tbl.column("c_emb").chunk(0))
+
+
+def _nearest_cells(
+    df: DataFrame, vec_col: str, codebook: tuple, nprobe: int = 1, sim_col: str = None
+) -> DataFrame:
+    """``df`` plus ``cell``: one row per (vector, cell) for the vector's
+    ``nprobe`` most cosine-similar codebook cells, in the oracles' order
+    (cosine DESC NULLS LAST, then lowest cid). ``sim_col`` carries that
+    cosine. An empty codebook gives no rows."""
+    cids, C = codebook
+    nc = _dot(C, C)
+    fields = [*df.schema.fields, T.StructField("cell", T.IntegerType())]
+    if sim_col:
+        fields.append(T.StructField(sim_col, T.DoubleType()))
+
+    def assign(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            if not rb.num_rows or not len(cids):
+                continue
+            m = _dims_major(rb.column(vec_col))
+            sims = _cosine(
+                _dot(m[:, :, None], C[:, None, :]), _dot(m, m)[:, None], nc[None, :]
+            )
+            top = np.argsort(_desc_nulls_last(sims), axis=1, kind="stable")[:, :nprobe]
+            rows = np.repeat(np.arange(rb.num_rows), top.shape[1])
+            cols = [c.take(pa.array(rows)) for c in rb.columns]
+            cols.append(pa.array(cids[top.ravel()]))
+            if sim_col:
+                cols.append(pa.array(sims[rows, top.ravel()], from_pandas=True))
+            yield pa.RecordBatch.from_arrays(cols, names=[f.name for f in fields])
+
+    return df.mapInArrow(assign, T.StructType(fields))
+
+
 #: Hard cap on query vectors collected to the driver by :func:`cosine_topk`.
 #: The corpus side never touches the driver; the query side must stay a
 #: broadcast-sized matrix (dim 64 × 1e5 ≈ 50 MB float64).
 MAX_QUERY_ROWS = 100_000
+
+#: Cosines per exact-kernel block in :func:`cosine_topk` (8 MB of float64).
+_SCORE_BLOCK = 1 << 20
 
 
 def cosine_topk(
@@ -50,52 +214,75 @@ def cosine_topk(
     query_vec_col: str = "embedding",
     max_queries: int = MAX_QUERY_ROWS,
 ) -> DataFrame:
-    """Exact cosine top-k of each query vector against the corpus.
+    """Exact cosine top-k of each query vector against the corpus, ranked
+    by cosine DESC NULLS LAST then lowest ``vec_id``.
 
     The query side is collected to the driver with a hard ``max_queries``
     bound (raises rather than silently OOM-ing at scale); for huge query
     sets, chunk the queries or use :func:`lsh_ann_topk`/:func:`ivf_ann_topk`.
+    Each corpus batch is scored with the exact kernel in query blocks of
+    at most ``_SCORE_BLOCK`` cosines, and keeps its own top-k under the
+    same order, so a tie at the cut cannot evict a lower id.
     """
+    q_tbl = (
+        queries.select(query_id_col, query_vec_col)
+        .limit(max_queries + 1)
+        .toArrow()
+        .combine_chunks()
+    )
+    if q_tbl.num_rows > max_queries:
+        raise ValueError(
+            f"cosine_topk collects the query side to the driver; got more than "
+            f"{max_queries} query rows — chunk the queries or use the ANN paths"
+        )
     # id columns keep their native Spark type (long OR string — _id_type
     # discipline): coercing to int64 crashed on string document keys
     topk_schema = (
         f"query_id {_id_type(queries, query_id_col)},"
         f" vec_id {_id_type(corpus, id_col)}, cosine double"
     )
-    q_rows = queries.select(query_id_col, query_vec_col).limit(max_queries + 1).collect()
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"cosine_topk collects the query side to the driver; got more than "
-            f"{max_queries} query rows — chunk the queries or use the ANN paths"
-        )
-    if not q_rows:
+    if not q_tbl.num_rows:
         return corpus.sparkSession.createDataFrame(
             [],
             f"query_id {_id_type(queries, query_id_col)}, rank int,"
             f" vec_id {_id_type(corpus, id_col)}, cosine double",
         )
-    q_ids = np.array([r[0] for r in q_rows])
-    q_mat = _normalize(np.array([r[1] for r in q_rows], dtype=np.float64))
+    q_ids = q_tbl.column(query_id_col).chunk(0)
+    Q = _dims_major(q_tbl.column(query_vec_col).chunk(0))
+    nq = _dot(Q, Q)
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
+    def score(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            n = rb.num_rows
+            if not n:
                 continue
-            ids = pdf[id_col].to_numpy()
-            mat = _normalize(
-                np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            )
-            sims = q_mat @ mat.T  # (n_q, n_batch)
-            kk = min(k, sims.shape[1])
-            top = np.argpartition(-sims, kk - 1, axis=1)[:, :kk]
-            out = {
-                "query_id": np.repeat(q_ids, kk),
-                "vec_id": ids[top].ravel(),
-                "cosine": np.take_along_axis(sims, top, axis=1).ravel(),
-            }
-            yield pd.DataFrame(out)
+            # id order first, so the stable sort breaks cosine ties by id
+            by_id = pc.sort_indices(rb.column(id_col)).to_numpy()
+            ids = rb.column(id_col).take(pa.array(by_id))
+            m = _dims_major(rb.column(vec_col))[:, by_id]
+            nm = _dot(m, m)
+            kk = min(k, n)
+            step = max(1, _SCORE_BLOCK // n)
+            for q0 in range(0, len(nq), step):
+                qs = slice(q0, q0 + step)
+                cos = _cosine(
+                    _dot(Q[:, qs, None], m[:, None, :]), nq[qs, None], nm[None, :]
+                )
+                top = np.argsort(_desc_nulls_last(cos), axis=1, kind="stable")[:, :kk]
+                qi = np.repeat(np.arange(q0, q0 + len(cos)), kk)
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        q_ids.take(pa.array(qi)),
+                        ids.take(pa.array(top.ravel())),
+                        pa.array(
+                            np.take_along_axis(cos, top, axis=1).ravel(),
+                            from_pandas=True,
+                        ),
+                    ],
+                    names=["query_id", "vec_id", "cosine"],
+                )
 
-    partial = corpus.select(id_col, vec_col).mapInPandas(score, schema=topk_schema)
+    partial = corpus.select(id_col, vec_col).mapInArrow(score, topk_schema)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("vec_id").asc()
     )
@@ -116,14 +303,13 @@ def cosine_neardup_pairs(
     """Embedding-cosine near-duplicate pairs: all (a, b) with
     ``cos(a, b) > threshold`` and ``id_a < id_b``.
 
-    Expression-based (left-associated ``element_at`` sums, never BLAS) so
-    the cosine is bit-identical to a sequential-SQL oracle — this is the
-    EXACTNESS BASELINE, O(n²) by definition, and it broadcasts the corpus:
-    ``max_rows`` hard-caps the input and RAISES on overflow (the same
-    contract as ``cosine_topk.max_queries``) so it can never be pointed at
-    a real corpus by accident. The production near-dup path is
-    :func:`lsh_neardup_pairs`, which generates candidates within LSH sign
-    buckets and rescores only those with this same exact kernel.
+    The exact kernel over a broadcast cross join — this is the EXACTNESS
+    BASELINE, O(n²) by definition: ``max_rows`` hard-caps the input and
+    RAISES on overflow (the same contract as ``cosine_topk.max_queries``)
+    so it can never be pointed at a real corpus by accident. The
+    production near-dup path is :func:`lsh_neardup_pairs`, which
+    generates candidates within LSH sign buckets and rescores only those
+    with this same exact kernel.
     """
     n = corpus.count()
     if n > max_rows:
@@ -132,22 +318,11 @@ def cosine_neardup_pairs(
             f"{n} rows (max_rows={max_rows}); use lsh_neardup_pairs for "
             "corpus-scale near-dup detection"
         )
-    head = corpus.select(vec_col).head(1)
-    if not head:
-        t = _id_type(corpus, id_col)
-        return corpus.sparkSession.createDataFrame(
-            [], f"id_a {t}, id_b {t}, cos double"
-        )
-    dim = len(head[0][0])
     a = corpus.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("emb_a"))
     b = corpus.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("emb_b"))
     joined = a.crossJoin(F.broadcast(b)).filter(F.col("id_a") < F.col("id_b"))
-
-    cos = _cos_expr("emb_a", "emb_b", dim)
-    return (
-        joined.withColumn("cos", cos)
-        .filter(F.col("cos") > F.lit(float(threshold)))
-        .select("id_a", "id_b", "cos")
+    return _pair_cosines(
+        joined, "emb_a", "emb_b", ["id_a", "id_b"], "cos", above=float(threshold)
     )
 
 
@@ -306,43 +481,6 @@ def ivf_ann_topk(
     )
 
 
-def _cos_expr(a_col: str, b_col: str, dim: int):
-    """Cosine as pure Catalyst expressions with left-assoc sums — the SAME
-    operation order as the DuckDB oracle, so rankings are bit-identical.
-
-    Implemented as a ``zip_with`` + ``aggregate`` fold rather than a
-    per-dimension unrolled expression: the fold performs the exact same
-    sequence of double additions (``((0.0 + t1) + t2) + …`` per
-    component, each addition order-identical to DuckDB's
-    ``list_reduce``), but the generated Java stays O(1) in ``dim``. The
-    unrolled form at dim=64 inside a broadcast-join whole-stage produced
-    a >10k-line generated class that janino refused to compile, dropping
-    the whole stage to interpreted mode."""
-    a = F.slice(F.col(a_col), 1, dim)
-    b = F.slice(F.col(b_col), 1, dim)
-    pairs = F.zip_with(
-        a,
-        b,
-        lambda x, y: F.struct(
-            x.cast("double").alias("a"), y.cast("double").alias("b")
-        ),
-    )
-    acc = F.aggregate(
-        pairs,
-        F.struct(
-            F.lit(0.0).alias("dot"),
-            F.lit(0.0).alias("na"),
-            F.lit(0.0).alias("nb"),
-        ),
-        lambda s, p: F.struct(
-            (s["dot"] + p["a"] * p["b"]).alias("dot"),
-            (s["na"] + p["a"] * p["a"]).alias("na"),
-            (s["nb"] + p["b"] * p["b"]).alias("nb"),
-        ),
-    )
-    return acc["dot"] / (F.sqrt(acc["na"]) * F.sqrt(acc["nb"]))
-
-
 def ivf_serve_topk(
     corpus: DataFrame,
     centroids: DataFrame,
@@ -351,58 +489,35 @@ def ivf_serve_topk(
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = None,
 ) -> DataFrame:
     """IVF serve half with a GIVEN coarse quantizer.
 
     ``centroids``: small DataFrame ``(cid int, c_emb array)`` — e.g. the
     output of :func:`kmeans_fit` registered as a DataFrame, or any
-    deterministic codebook. Serve plan, zero Python:
+    deterministic codebook. It is collected once and closed over. Serve
+    plan:
 
-    * cell assignment — corpus × broadcast(centroids) cosine, argmax via
-      ``max_by`` groupBy (partial-aggregatable map-side combine, NOT a
-      window sort over the corpus);
-    * query probes — top-``nprobe`` cells per query (windowed, query side
-      is small);
+    * cell assignment — one ``mapInArrow`` stage scores each corpus batch
+      against the codebook with the exact kernel and keeps the argmax
+      (ties → lowest ``cid``); no exchange;
+    * query probes — the same stage keeps each query's top-``nprobe``
+      cells;
     * candidates — probe⨝cell equi-join, exact in-cell cosine, window
       top-``k``.
 
-    All scores are left-assoc expression sums (``_cos_expr``) so the
-    DuckDB oracle ranks bit-identically. The trained twin
-    (:func:`ivf_ann_topk`) swaps in k-means centroids + BLAS scoring.
+    The trained twin (:func:`ivf_ann_topk`) swaps in k-means centroids +
+    BLAS scoring. An empty corpus or query side gives an empty frame.
     """
-    if dim is None:
-        dim = len(corpus.select(vec_col).first()[0])
-
-    cent = F.broadcast(centroids.select("cid", "c_emb"))
-
-    # corpus → (vec_id, embedding, cell): argmax cosine, ties → lowest cid
-    # (np.argmax first-max semantics)
-    cells = (
-        corpus.select(id_col, vec_col)
-        .crossJoin(cent)
-        .withColumn("sim", _cos_expr(vec_col, "c_emb", dim))
-        .groupBy(id_col)
-        .agg(
-            F.max_by("cid", F.struct(F.col("sim"), -F.col("cid"))).alias("cell"),
-            F.first(vec_col).alias(vec_col),
-        )
+    book = _codebook(centroids)
+    cells = _nearest_cells(corpus.select(id_col, vec_col), vec_col, book)
+    probes = _nearest_cells(
+        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_emb")),
+        "q_emb",
+        book,
+        nprobe=nprobe,
     )
-
-    wq = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("cid").asc())
-    probes = (
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_emb"))
-        .crossJoin(cent)
-        .withColumn("sim", _cos_expr("q_emb", "c_emb", dim))
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", "q_emb", F.col("cid").alias("cell"))
-    )
-
-    cand = probes.join(cells, on="cell").filter(
-        F.col("query_id") != F.col(id_col)
-    )
-    scored = cand.withColumn("cosine", _cos_expr("q_emb", vec_col, dim))
+    cand = probes.join(cells, on="cell").filter(F.col("query_id") != F.col(id_col))
+    scored = _pair_cosines(cand, "q_emb", vec_col, ["query_id", id_col], "cosine")
     wk = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col(id_col).asc()
     )
@@ -423,33 +538,6 @@ def _id_type(df: DataFrame, id_col: str) -> str:
     return dict(df.dtypes)[id_col]
 
 
-def _sign_bucket(vec_col: str, H: np.ndarray, n_bits: int):
-    """Random-hyperplane sign-bit bucket id as a column expression (same
-    arithmetic shape as the SQL oracle: left-associated element sums).
-
-    Each per-bit dot product is a ``zip_with`` + ``aggregate`` fold over a
-    single array *literal* of the hyperplane row — the same left-assoc
-    double additions as the old unrolled form (float element × double
-    literal promotes the element to double in both), but the generated
-    Java stays O(n_bits) instead of O(n_bits × dim): the unrolled form at
-    6 bits × 64 dims inside an explode stage produced a generated class
-    janino refused to compile, dropping the stage to interpreted mode."""
-    sign_bits = F.lit(0).cast("long")
-    for b in range(n_bits):
-        hb = F.lit([float(x) for x in H[b]])
-        dot = F.aggregate(
-            F.zip_with(
-                F.col(vec_col), hb, lambda x, h: x.cast("double") * h
-            ),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        )
-        sign_bits = sign_bits + F.when(dot > 0, F.lit(1 << b).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return sign_bits
-
-
 def lsh_neardup_pairs(
     corpus: DataFrame,
     threshold: float = 0.4,
@@ -459,24 +547,13 @@ def lsh_neardup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_bucket_size: int = 10_000,
-    vectorized: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs AT SCALE: candidates from
     random-hyperplane sign buckets (``n_tables`` independent tables boost
-    recall), then exact cosine rescoring — the same bit-identical
-    expression kernel as :func:`cosine_neardup_pairs` — within candidates
-    only.
-
-    ``vectorized=True`` (production default) computes the sign buckets and
-    the rescore as Arrow-batched NumPy matvecs — the 768-term bucket
-    expression and 192-term cosine expression overflow whole-stage
-    codegen's 64KB method limit and fall back to interpreted eval, costing
-    ~10 s of fixed plan/compile/interpret overhead per run.
-    ``vectorized=False`` keeps the pure-expression twin whose arithmetic
-    is left-assoc-identical to the DuckDB oracle;
-    tests/test_functions.py asserts both paths emit the SAME pairs (they
-    diverge only if a dot product sits within ~1e-15 of a sign/threshold
-    boundary).
+    recall), then exact cosine rescoring — the same kernel as
+    :func:`cosine_neardup_pairs` — within candidates only. Sign bits and
+    cosines both come from the exact kernel, so the DuckDB oracle sees
+    the same buckets and the same doubles.
 
     This replaces the O(n²) cross join of the exact baseline: candidate
     volume is Σ_buckets |bucket|²/2 per table, i.e. ~n²/2^bits on a
@@ -485,61 +562,12 @@ def lsh_neardup_pairs(
     only if it disagrees on ≥1 bit in EVERY table; misses decay
     exponentially with ``n_tables``.
     """
-    head = corpus.select(vec_col).head(1)
-    if not head:
-        t = _id_type(corpus, id_col)
-        return corpus.sparkSession.createDataFrame(
-            [], f"id_a {t}, id_b {t}, cos double"
-        )
-    dim = len(head[0][0])
-
-    if vectorized:
-        H = np.stack([hyperplanes(dim, n_bits, seed + t) for t in range(n_tables)])
-        pows = (1 << np.arange(n_bits)).astype(np.int64)
-        id_t = _id_type(corpus, id_col)
-
-        def tag(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                mat = np.array(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-                )
-                ids = pdf[id_col].to_numpy()
-                out_ids = np.repeat(ids, n_tables)
-                tables = np.tile(np.arange(n_tables), len(pdf))
-                # (n, tables, bits) sign bits → integer bucket ids
-                dots = np.einsum("nd,tbd->ntb", mat, H)
-                bks = ((dots > 0) @ pows).reshape(-1)
-                yield pd.DataFrame(
-                    {id_col: out_ids, "table": tables, "bucket": bks}
-                )
-
-        tagged = corpus.select(id_col, vec_col).mapInPandas(
-            tag, schema=f"{id_col} {id_t}, table int, bucket long"
-        )
-    else:
-        buckets = F.array(
-            *[
-                F.struct(
-                    F.lit(t).alias("table"),
-                    _sign_bucket(
-                        vec_col, hyperplanes(dim, n_bits, seed + t), n_bits
-                    ).alias("bucket"),
-                )
-                for t in range(n_tables)
-            ]
-        )
-        tagged = corpus.select(
-            F.col(id_col), F.explode(buckets).alias("tb")
-        ).select(
-            id_col, F.col("tb.table").alias("table"), F.col("tb.bucket").alias("bucket")
-        )
+    tagged = _sign_buckets(corpus, vec_col, n_bits, n_tables, seed, [id_col])
 
     # ONE scan + ONE bucket-keyed shuffle: collect each bucket's sorted id
-    # list and expand pairs with array HOFs. (A bucket SELF-JOIN evaluates
-    # the 768-term sign expressions twice — Catalyst does not reuse the
-    # exchange across self-join sides, measured on the minhash path.)
+    # list and expand pairs with array HOFs (a bucket SELF-JOIN would run
+    # the tagging stage twice — Catalyst does not reuse the exchange
+    # across self-join sides, measured on the minhash path).
     # Buckets above max_bucket_size are dropped like lsh_candidate_pairs'
     # hot-bucket cap — a degenerate bucket cannot go quadratic.
     bucketed = tagged.groupBy("table", "bucket").agg(
@@ -569,40 +597,8 @@ def lsh_neardup_pairs(
     ea = corpus.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("emb_a"))
     eb = corpus.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("emb_b"))
     scored = cand.join(ea, "id_a").join(eb, "id_b")
-
-    if vectorized:
-        thr = float(threshold)
-
-        def rescore(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                a = _normalize(
-                    np.array([np.asarray(v, dtype=np.float64) for v in pdf["emb_a"]])
-                )
-                b = _normalize(
-                    np.array([np.asarray(v, dtype=np.float64) for v in pdf["emb_b"]])
-                )
-                cosv = (a * b).sum(axis=1)
-                keep = cosv > thr
-                yield pd.DataFrame(
-                    {
-                        "id_a": pdf["id_a"].to_numpy()[keep],
-                        "id_b": pdf["id_b"].to_numpy()[keep],
-                        "cos": cosv[keep],
-                    }
-                )
-
-        id_t = _id_type(corpus, id_col)
-        return scored.mapInPandas(
-            rescore, schema=f"id_a {id_t}, id_b {id_t}, cos double"
-        )
-
-    cos = _cos_expr("emb_a", "emb_b", dim)
-    return (
-        scored.withColumn("cos", cos)
-        .filter(F.col("cos") > F.lit(float(threshold)))
-        .select("id_a", "id_b", "cos")
+    return _pair_cosines(
+        scored, "emb_a", "emb_b", ["id_a", "id_b"], "cos", above=float(threshold)
     )
 
 
@@ -618,30 +614,19 @@ def lsh_ann_topk(
     """Approximate top-k: random-hyperplane sign bucket, exact search within
     the bucket. Recall grows with fewer bits / multi-probe; this is the
     pattern that scales to 10^12 vectors (bucket = shuffle key)."""
-    head = corpus.select(vec_col).head(1)
-    if not head:
-        return corpus.sparkSession.createDataFrame(
-            [],
-            f"query_id {_id_type(queries, id_col)}, rank int,"
-            f" vec_id {_id_type(corpus, id_col)}, cosine double",
-        )
-    dim = len(head[0][0])
-    H = hyperplanes(dim, n_bits, seed)
-    sign_bits = _sign_bucket(vec_col, H, n_bits)
-
-    c = corpus.withColumn("bucket", sign_bits).alias("c")
-    q = queries.withColumn("bucket", sign_bits).alias("q")
-
-    joined = q.join(c, on=F.col("q.bucket") == F.col("c.bucket")).select(
-        F.col(f"q.{id_col}").alias("query_id"),
-        F.col(f"c.{id_col}").alias("vec_id"),
-        _cos_expr(f"c.{vec_col}", f"q.{vec_col}", dim).alias("cosine"),
+    c = _sign_buckets(corpus, vec_col, n_bits, 1, seed, [id_col, vec_col])
+    q = _sign_buckets(
+        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_emb")),
+        "q_emb", n_bits, 1, seed, ["query_id", "q_emb"],
     )
+    scored = _pair_cosines(
+        q.join(c, ["table", "bucket"]), vec_col, "q_emb", ["query_id", id_col], "cosine"
+    ).withColumnRenamed(id_col, "vec_id")
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("vec_id").asc()
     )
     return (
-        joined.withColumn("rank", F.row_number().over(w))
+        scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "vec_id", "cosine")
     )
@@ -653,8 +638,6 @@ def semdedup_verdicts(
     eps: float = 0.05,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = None,
-    persist_cells: bool = True,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540) keep/drop verdicts
     with a GIVEN codebook — the semantic near-duplicate pruner used on
@@ -667,94 +650,91 @@ def semdedup_verdicts(
     the cell centroid (the paper keeps the example FARTHEST from the
     centroid), ties -> lowest id. A vector is DROPPED iff some
     higher-priority vector in the same cell has cosine ``>= 1 - eps``
-    with it.
+    with it. A zero-norm vector has a NULL ``cent_sim`` and is kept.
 
-    Plan shape (zero Python, pure Catalyst):
+    Plan shape: the codebook is collected once and closed over;
 
-    * cell assignment — corpus × broadcast(centroids) cosine, ``max_by``
-      groupBy argmax (partial-aggregatable, no window over the corpus);
-    * in-cell pairs — one self equi-join on the cell id (the shuffle
-      key; cell sizes are the scale control — pick ``n_cells`` so the
-      mean cell is O(corpus / n_cells), exactly the paper's regime of
-      ~50k clusters for LAION) with the priority predicate folded into
-      the join condition so only the triangular half materializes. A
-      sort-merge join on the cell key STREAMS cell members instead of
-      materializing a per-cell array, which is why this beats a
-      collect_list pair expansion here: at 768-dim embeddings a 10^5-row
-      cell as one array row would be ~0.6 GB;
-    * verdict — left anti semantics via a distinct-dropped left join.
+    * assign — one ``mapInArrow`` stage, exact cosine against every
+      centroid, argmax cell and its ``cent_sim``;
+    * prune — ``repartition(cell) → sortWithinPartitions(cell, cent_sim,
+      id)`` so each cell arrives contiguous and in retention-priority
+      order (one cell-keyed exchange), then a per-cell triangular scan:
+      row i drops iff some row j < i has exact cosine ``>= 1 - eps``.
 
-    ``persist_cells=True`` (default) persists the assignment frame —
-    Catalyst does not reuse exchanges across self-join sides, so without
-    it the broadcast-assign + argmax aggregation runs three times (both
-    pair sides + the verdict spine). The persisted frame is exactly the
-    "cluster assignment" artifact production IVF/SemDeDup systems write
-    out anyway; callers managing their own lifecycle can pass False and
-    checkpoint/write it themselves.
-
-    All cosines are left-assoc expression sums (:func:`_cos_expr`) so a
-    DuckDB oracle ranks and thresholds bit-identically.
+    Per-task memory is the vectors of the cells in one Arrow batch (a
+    cell that spans batches is held whole) plus a ``cell_rows × 512``
+    cosine block — the reason ``n_cells`` must grow with the corpus (as in
+    the paper's ~50k-cluster LAION runs).
 
     ``centroids``: small DataFrame ``(cid int, c_emb array)`` — e.g.
     :func:`kmeans_fit` output or any deterministic codebook.
     Returns ``(vec_id, cell, cent_sim, keep)`` for every corpus row.
     """
-    if dim is None:
-        head = corpus.select(vec_col).head(1)
-        if not head:
-            return corpus.sparkSession.createDataFrame(
-                [],
-                f"{id_col} {_id_type(corpus, id_col)}, cell int,"
-                " cent_sim double, keep boolean",
-            )
-        dim = len(head[0][0])
+    from edspdf_spark.operators.grouped import group_bounds
 
-    cent = F.broadcast(centroids.select("cid", "c_emb"))
+    thr = 1.0 - float(eps)
+    assigned = _nearest_cells(
+        corpus.select(id_col, vec_col), vec_col, _codebook(centroids), sim_col="cent_sim"
+    )
+    out_names = [id_col, "cell", "cent_sim", "keep"]
+    out_schema = T.StructType(
+        [corpus.schema[id_col]]
+        + [
+            T.StructField("cell", T.IntegerType()),
+            T.StructField("cent_sim", T.DoubleType()),
+            T.StructField("keep", T.BooleanType()),
+        ]
+    )
 
-    # (vec_id, embedding, cell, cent_sim): argmax cosine over the codebook,
-    # ties -> lowest cid (np.argmax first-max semantics, as in ivf_serve_topk)
-    cells = (
-        corpus.select(id_col, vec_col)
-        .crossJoin(cent)
-        .withColumn("sim", _cos_expr(vec_col, "c_emb", dim))
-        .groupBy(id_col)
-        .agg(
-            F.max_by("cid", F.struct(F.col("sim"), -F.col("cid"))).alias("cell"),
-            F.max(F.struct(F.col("sim"), -F.col("cid"))).getField("sim").alias(
-                "cent_sim"
-            ),
-            F.first(vec_col).alias(vec_col),
+    def verdicts(rbs: list) -> pa.RecordBatch:
+        rb = pa.Table.from_batches(rbs).combine_chunks().to_batches()[0]
+        cent_sim = rb.column("cent_sim").to_numpy(zero_copy_only=False)
+        m = _dims_major(rb.column(vec_col))
+        keep = np.ones(rb.num_rows, dtype=bool)
+        for s, e in zip(*group_bounds(rb.column("cell").to_numpy())):
+            # a NULL cent_sim has no priority, so it never pairs (the oracle's
+            # comparisons with NULL are false); Spark sorts it first
+            rows = s + np.flatnonzero(~np.isnan(cent_sim[s:e]))
+            keep[rows] = _triangular_keep(m[:, rows], thr)
+        return pa.RecordBatch.from_arrays(
+            [rb.column(id_col), rb.column("cell"), rb.column("cent_sim"), pa.array(keep)],
+            names=out_names,
         )
-    )
-    if persist_cells:
-        cells = cells.persist()
 
-    u = cells.alias("u")
-    v = cells.alias("v")
-    # triangular: u strictly higher retention priority than v
-    priority = (F.col("u.cent_sim") < F.col("v.cent_sim")) | (
-        (F.col("u.cent_sim") == F.col("v.cent_sim"))
-        & (F.col(f"u.{id_col}") < F.col(f"v.{id_col}"))
-    )
-    pair_cos = _cos_expr(f"u.{vec_col}", f"v.{vec_col}", dim)
-    dropped = (
-        v.join(u, on=(F.col("u.cell") == F.col("v.cell")) & priority)
-        .filter(pair_cos >= F.lit(1.0 - float(eps)))
-        .select(F.col(f"v.{id_col}").alias("_dropped_id"))
-        .distinct()
-    )
+    def prune(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        # a cell may span batches: hold back the last cell of each batch
+        open_cell = []
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            cells = rb.column("cell").to_numpy()
+            cut = int(np.argmax(cells == cells[-1]))
+            if cut:
+                yield verdicts(open_cell + [rb.slice(0, cut)])
+                open_cell = []
+            open_cell.append(rb.slice(cut))
+        if open_cell:
+            yield verdicts(open_cell)
 
-    return (
-        cells.join(
-            dropped, on=F.col(id_col) == F.col("_dropped_id"), how="left"
+    part = assigned.repartition("cell").sortWithinPartitions("cell", "cent_sim", id_col)
+    return part.mapInArrow(prune, out_schema)
+
+
+def _triangular_keep(m: np.ndarray, thr: float) -> np.ndarray:
+    """Keep mask of dims-major vectors in priority order: row i survives
+    iff no row j < i has exact cosine ``>= thr`` with it. Column blocks
+    bound the cosine matrix to ``n × 512`` and skip the lower half."""
+    n, block = m.shape[1], 512
+    norms = _dot(m, m)
+    keep = np.ones(n, dtype=bool)
+    for b0 in range(0, n, block):
+        b1 = min(b0 + block, n)
+        cos = _cosine(
+            _dot(m[:, :b1, None], m[:, None, b0:b1]), norms[:b1, None], norms[None, b0:b1]
         )
-        .select(
-            id_col,
-            "cell",
-            "cent_sim",
-            F.col("_dropped_id").isNull().alias("keep"),
-        )
-    )
+        earlier = np.arange(b1)[:, None] < np.arange(b0, b1)[None, :]
+        keep[b0:b1] = ~((cos >= thr) & earlier).any(axis=0)
+    return keep
 
 
 def semdedup(
@@ -766,15 +746,12 @@ def semdedup(
     max_sample_rows: int = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vectorized: bool = True,
 ) -> DataFrame:
     """Trained twin of :func:`semdedup_verdicts`: fit the codebook with
     seeded k-means on a BOUNDED driver-side sample (same guard rails as
     :func:`ivf_ann_topk` — ``sample_fraction`` thins, ``max_sample_rows``
     hard-caps, ordered limit for run-to-run determinism), then prune.
-    Returns the same ``(vec_id, cell, cent_sim, keep)`` verdict frame.
-    ``vectorized=True`` (default — the production path) prunes via the
-    Arrow/BLAS twin; ``False`` uses the oracle-exact expression twin."""
+    Returns the same ``(vec_id, cell, cent_sim, keep)`` verdict frame."""
     if max_sample_rows is None:
         max_sample_rows = max(n_cells * 256, 20_000)
     samp = corpus.select(id_col, vec_col)
@@ -793,140 +770,11 @@ def semdedup(
             " cent_sim double, keep boolean",
         )
     centroids = kmeans_fit(sample, n_cells, seed=seed)
-    spark = corpus.sparkSession
-    cent_df = spark.createDataFrame(
+    cent_df = corpus.sparkSession.createDataFrame(
         [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)],
         "cid int, c_emb array<double>",
     )
-    if vectorized:
-        return semdedup_verdicts_vec(
-            corpus, cent_df, eps=eps, id_col=id_col, vec_col=vec_col
-        )
-    return semdedup_verdicts(
-        corpus, cent_df, eps=eps, id_col=id_col, vec_col=vec_col,
-        dim=int(centroids.shape[1]),
-    )
-
-
-def semdedup_verdicts_vec(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    eps: float = 0.05,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow/BLAS production twin of :func:`semdedup_verdicts` — same
-    verdicts, vectorized execution (parity-asserted in
-    tests/test_functions.py).
-
-    The expression twin exists for the bit-exact DuckDB oracle, but a
-    dim-d cosine as Catalyst expressions is 3·d adds/multiplies per pair
-    evaluated row-at-a-time once the generated method blows the janino
-    64KB limit (observed at dim 64; certain at the paper's dim 768). This
-    twin keeps the identical plan shape — broadcast codebook, one
-    cell-keyed exchange, streaming triangular scan — but does the math as
-    two BLAS matmuls per Arrow batch:
-
-    * assignment — ``sims = M @ C.T`` per batch (codebook closed over,
-      it's tiny), cell = row argmax (first-max tie = lowest cid);
-    * prune — ``repartition(cell) → sortWithinPartitions(cell,
-      cent_sim, id)`` so each cell arrives contiguous and already in
-      retention-priority order, then per cell ``G = N @ N.T`` and row i
-      drops iff ``any(G[j, i] >= 1-eps, j < i)`` — the paper's exact
-      triangular implementation.
-
-    Per-task memory is O(cell_rows · dim) for the group matrix — the
-    same bound the sort-merge join pays for a sorted cell run, and the
-    reason ``n_cells`` must grow with the corpus (as in the paper).
-    """
-    head = corpus.select(vec_col).head(1)
-    if not head:
-        return corpus.sparkSession.createDataFrame(
-            [],
-            f"{id_col} {_id_type(corpus, id_col)}, cell int,"
-            " cent_sim double, keep boolean",
-        )
-    cent_rows = sorted(centroids.select("cid", "c_emb").collect())
-    C = _normalize(np.array([r[1] for r in cent_rows], dtype=np.float64))
-    cids = np.array([int(r[0]) for r in cent_rows], dtype=np.int32)
-    thr = 1.0 - float(eps)
-    id_type = _id_type(corpus, id_col)
-
-    assign_schema = T.StructType.fromDDL(
-        f"{id_col} {id_type}, cell int, cent_sim double, {vec_col} array<double>"
-    )
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            M = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            sims = _normalize(M) @ C.T
-            best = sims.argmax(axis=1)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "cell": cids[best],
-                    "cent_sim": sims[np.arange(len(M)), best],
-                    vec_col: pdf[vec_col],
-                }
-            )
-
-    assigned = corpus.select(id_col, vec_col).mapInPandas(
-        assign, schema=assign_schema
-    )
-
-    out_schema = T.StructType.fromDDL(
-        f"{id_col} {id_type}, cell int, cent_sim double, keep boolean"
-    )
-
-    from edspdf_spark.operators.grouped import group_bounds
-
-    def prune(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        buf: pd.DataFrame = None
-        def flush(g: pd.DataFrame) -> pd.DataFrame:
-            cells_arr = g["cell"].to_numpy()
-            starts, ends = group_bounds(cells_arr)
-            keep = np.ones(len(g), dtype=bool)
-            embs = g[vec_col].to_numpy()
-            for s, e in zip(starts, ends):
-                if e - s < 2:
-                    continue
-                N = _normalize(
-                    np.array([np.asarray(v, np.float64) for v in embs[s:e]])
-                )
-                G = N @ N.T
-                # row arrives priority-sorted: drop i iff some j<i is >= thr
-                tri = np.triu(G >= thr, k=1)
-                keep[s:e] = ~tri.any(axis=0)
-            return pd.DataFrame(
-                {
-                    id_col: g[id_col],
-                    "cell": g["cell"],
-                    "cent_sim": g["cent_sim"],
-                    "keep": keep,
-                }
-            )
-        for pdf in batches:
-            if buf is not None and len(buf):
-                pdf = pd.concat([buf, pdf], ignore_index=True)
-                buf = None
-            if not len(pdf):
-                continue
-            cells_arr = pdf["cell"].to_numpy()
-            cut = int(np.argmax(cells_arr == cells_arr[-1]))
-            buf = pdf.iloc[cut:].reset_index(drop=True)
-            if cut:
-                yield flush(pdf.iloc[:cut])
-        if buf is not None and len(buf):
-            yield flush(buf)
-
-    part = assigned.repartition("cell").sortWithinPartitions(
-        "cell", "cent_sim", id_col
-    )
-    return part.mapInPandas(prune, schema=out_schema)
+    return semdedup_verdicts(corpus, cent_df, eps=eps, id_col=id_col, vec_col=vec_col)
 
 
 # --------------------------------------------------------------------------
@@ -1297,13 +1145,10 @@ def mine_hard_negatives(
 
     Methods:
 
-    * ``"exact"`` — BLAS brute force (:func:`cosine_topk`): one corpus
-      scan, partition-local top-k, one k-rows-per-partition shuffle. The
-      production exact path.
-    * ``"exact_expr"`` — same semantics via pure Catalyst expressions
-      with left-assoc sums (:func:`_cos_expr` against a broadcast query
-      table), so the ranking is bit-identical to a sequential-SQL oracle.
-      Test/oracle twin of ``"exact"``; parity is pytest-asserted.
+    * ``"exact"`` — brute force with the exact kernel
+      (:func:`cosine_topk`): one corpus scan, partition-local top-k, one
+      k-rows-per-partition shuffle; the ranking is bit-identical to a
+      sequential-SQL oracle.
     * ``"lsh"`` — :func:`lsh_ann_topk` sign-bucket candidates. The
       10^12-corpus path: candidates per query ~ corpus / 2^n_bits and the
       bucket is the shuffle key.
@@ -1313,7 +1158,7 @@ def mine_hard_negatives(
     the max-per-query count is one tiny aggregate, never a collect of the
     pairs themselves.
     """
-    if method not in ("exact", "exact_expr", "lsh"):
+    if method not in ("exact", "lsh"):
         raise ValueError(f"unknown method {method!r}")
     max_pos_row = (
         positives.groupBy(pos_query_col).count().agg(F.max("count")).first()[0]
@@ -1331,10 +1176,10 @@ def mine_hard_negatives(
             query_vec_col=query_vec_col,
             max_queries=max_queries,
         )
-    elif method == "lsh":
+    else:
         # the query frame must use the same id/vec column names as the
-        # corpus — lsh_ann_topk resolves q.{id_col}, so aliasing to a
-        # hardcoded "vec_id" breaks any non-default id_col
+        # corpus — lsh_ann_topk reads both sides by id_col/vec_col, so
+        # aliasing to a hardcoded "vec_id" breaks any non-default id_col
         q = queries.select(
             F.col(query_id_col).alias(id_col),
             F.col(query_vec_col).alias(vec_col),
@@ -1343,24 +1188,6 @@ def mine_hard_negatives(
             corpus, q, k=fetch, n_bits=n_bits, seed=seed,
             id_col=id_col, vec_col=vec_col,
         )
-    else:  # exact_expr — oracle-replayable ranking
-        head = corpus.select(vec_col).head(1)
-        if not head:
-            return corpus.sparkSession.createDataFrame(
-                [],
-                f"query_id {_id_type(queries, query_id_col)}, rank int,"
-                f" vec_id {_id_type(corpus, id_col)}, cosine double",
-            )
-        dim = len(head[0][0])
-        q = queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(query_vec_col).alias("_q_vec"),
-        )
-        cand = corpus.crossJoin(F.broadcast(q)).select(
-            "query_id",
-            F.col(id_col).alias("vec_id"),
-            _cos_expr(vec_col, "_q_vec", dim).alias("cosine"),
-        )
 
     if exclude_self:
         cand = cand.filter(F.col("query_id") != F.col("vec_id"))
@@ -1368,9 +1195,9 @@ def mine_hard_negatives(
         F.col(pos_query_col).alias("query_id"), F.col(pos_id_col).alias("vec_id")
     )
     # positives are per-query labels — bounded by the query batch, so the
-    # anti-join broadcasts on the exact paths; the LSH path leaves the
+    # anti-join broadcasts on the exact path; the LSH path leaves the
     # strategy to AQE (query set may be corpus-sized there).
-    if method in ("exact", "exact_expr"):
+    if method == "exact":
         pos = F.broadcast(pos)
     cand = cand.join(pos, ["query_id", "vec_id"], "left_anti")
     w = Window.partitionBy("query_id").orderBy(

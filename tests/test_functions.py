@@ -366,23 +366,6 @@ def test_training_prep_composite(spark):
     assert all(len(v) == 1 for v in by_lang.values())
 
 
-def test_lsh_neardup_vectorized_matches_expression_path(spark):
-    """The Arrow production twin (NumPy sign buckets + BLAS rescore) must
-    emit the SAME pair set as the oracle-exact expression twin."""
-    from edspdf_spark.functions.similarity import lsh_neardup_pairs
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    kw = dict(threshold=0.4, n_bits=6, n_tables=2, seed=42)
-    expr_pairs = {
-        (r.id_a, r.id_b)
-        for r in lsh_neardup_pairs(emb, vectorized=False, **kw).collect()
-    }
-    vec_rows = lsh_neardup_pairs(emb, vectorized=True, **kw).collect()
-    vec_pairs = {(r.id_a, r.id_b) for r in vec_rows}
-    assert vec_pairs == expr_pairs
-    assert all(r.cos > 0.4 for r in vec_rows)
-
-
 def test_dedup_components_random_graphs_match_union_find(spark):
     """Property check: large-star/small-star labels == brute-force
     union-find components on random graphs (several seeds/densities)."""
@@ -696,50 +679,3 @@ def test_semdedup_empty_and_determinism(spark):
     a = sorted(map(tuple, semdedup_verdicts(df, cent, eps=0.05).collect()))
     b = sorted(map(tuple, semdedup_verdicts(df, cent, eps=0.05).collect()))
     assert a == b
-
-
-def test_semdedup_vec_twin_parity(spark):
-    """Arrow/BLAS production twin returns the SAME verdicts as the
-    oracle-exact expression twin (planted clusters + seeded random)."""
-    import numpy as np
-
-    from edspdf_spark.functions.similarity import (
-        semdedup_verdicts,
-        semdedup_verdicts_vec,
-    )
-
-    rng = np.random.default_rng(7)
-    base = rng.standard_normal((6, 16))
-    rows, vid = [], 0
-    for c in range(6):
-        for j in range(6):
-            scale = 0.01 if j < 4 else 1.5
-            v = base[c] + rng.standard_normal(16) * scale
-            rows.append((vid, [float(x) for x in v]))
-            vid += 1
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cent = spark.createDataFrame(
-        [(i, [float(x) for x in base[i]]) for i in range(6)],
-        "cid int, c_emb array<double>",
-    )
-    expr = {
-        r.vec_id: (r.cell, r.keep)
-        for r in semdedup_verdicts(df, cent, eps=0.08).collect()
-    }
-    vec = {
-        r.vec_id: (r.cell, r.keep)
-        for r in semdedup_verdicts_vec(df, cent, eps=0.08).collect()
-    }
-    assert expr == vec
-    # cent_sim agrees to float tolerance (BLAS vs left-assoc sums)
-    es = {r.vec_id: r.cent_sim for r in semdedup_verdicts(df, cent, eps=0.08).collect()}
-    vs = {r.vec_id: r.cent_sim for r in semdedup_verdicts_vec(df, cent, eps=0.08).collect()}
-    for k in es:
-        assert abs(es[k] - vs[k]) < 1e-9
-    # empty input
-    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    out = semdedup_verdicts_vec(empty, cent, eps=0.08)
-    assert out.count() == 0
-    assert [f.name for f in out.schema.fields] == [
-        "vec_id", "cell", "cent_sim", "keep",
-    ]

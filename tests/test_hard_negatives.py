@@ -1,6 +1,6 @@
 """Hard-negative mining (functions/similarity.mine_hard_negatives):
-exclusion semantics, numpy ground truth, exact↔exact_expr twin parity,
-and LSH-path plumbing."""
+exclusion semantics, numpy ground truth and LSH-path plumbing. The exact
+path's bits are pinned in tests/test_similarity_kernel.py."""
 
 import numpy as np
 import pytest
@@ -24,7 +24,7 @@ def _brute_topk_excluding(vecs, qid, excluded, k):
     return [i for i in order if i not in excluded][:k]
 
 
-@pytest.mark.parametrize("method", ["exact", "exact_expr"])
+@pytest.mark.parametrize("method", ["exact"])
 def test_hardneg_matches_numpy_ground_truth(spark, method):
     corpus, vecs = _toy(spark)
     queries = corpus.filter("vec_id % 10 = 0")  # 0,10,20,30
@@ -46,26 +46,6 @@ def test_hardneg_matches_numpy_ground_truth(spark, method):
         assert by_q[q] == want, f"query {q}"
         # the excluded ids really are gone
         assert q not in by_q[q] and (q + 1) not in by_q[q]
-
-
-def test_hardneg_exact_expr_twin_parity(spark):
-    corpus, _ = _toy(spark, n=60, seed=11)
-    queries = corpus.filter("vec_id % 13 = 0")
-    positives = spark.createDataFrame(
-        [(0, 5), (13, 14), (13, 15), (26, 2), (39, 40), (52, 53)],
-        "query_id long, pos_id long",
-    )
-    a = (
-        mine_hard_negatives(corpus, queries, positives, k=4, method="exact")
-        .select("query_id", "rank", "vec_id")
-        .collect()
-    )
-    b = (
-        mine_hard_negatives(corpus, queries, positives, k=4, method="exact_expr")
-        .select("query_id", "rank", "vec_id")
-        .collect()
-    )
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
 def test_hardneg_lsh_path_excludes_and_ranks(spark):

@@ -192,9 +192,9 @@ def main() -> None:
         ),
         (
             "ann_cosine_topk (similarity production path)",
-            "Partition-local BLAS top-k then a k-rows-per-partition window "
-            "— the shuffle moves only k·partitions candidate rows, never "
-            "the corpus.",
+            "Partition-local exact-kernel top-k (mapInArrow) then a "
+            "k-rows-per-partition window — the shuffle moves only "
+            "k·partitions candidate rows, never the corpus.",
             cosine_topk(emb, emb.filter(F.col("vec_id") % 97 == 0), k=10),
         ),
         (
@@ -205,11 +205,11 @@ def main() -> None:
             __import__("__spark_entry__")._q_pricing_summary(spark, SF_DIR),
         ),
         (
-            "lsh_neardup (vectorized production path)",
+            "lsh_neardup (production path, oracle-checked)",
             "Arrow sign-bucket tagging (zero shuffle) → ONE bucket-keyed "
             "exchange for the groupBy collect_list + in-bucket pair "
             "expansion → one small pair-keyed exchange for the cross-table "
-            "distinct → id joins + Arrow BLAS rescore. No self-join (the "
+            "distinct → id joins + exact-kernel Arrow rescore. No self-join (the "
             "textbook shape evaluates the bucket stage twice — Catalyst "
             "does not reuse exchanges across self-join sides), no cross "
             "join anywhere.",
@@ -218,11 +218,11 @@ def main() -> None:
         ),
         (
             "ivf_serve_topk (ANN serve path)",
-            "Cell assignment must be a broadcast nested-loop against the "
-            "tiny codebook followed by a partial-aggregatable max_by "
-            "groupBy (map-side combine — NOT a window sort over the "
-            "corpus); candidates come from the probe⨝cell equi-join; the "
-            "only corpus-keyed exchange is the cell-assignment groupBy.",
+            "Cell assignment and query probes are one mapInArrow stage "
+            "each against the collected codebook (exact-kernel argmax, no "
+            "exchange, no nested-loop join); candidates come from the "
+            "probe⨝cell equi-join and are scored by one exact-kernel "
+            "mapInArrow stage before the query-keyed top-k window.",
             (lambda _sim: _sim.ivf_serve_topk(
                 emb,
                 emb.orderBy("vec_id").limit(16).select(
@@ -236,18 +236,15 @@ def main() -> None:
         ),
         (
             "semdedup_verdicts (semantic near-dup prune)",
-            "SemDeDup over a given codebook. Cell assignment = broadcast "
-            "nested-loop vs the tiny codebook + partial-aggregatable max_by "
-            "groupBy, computed ONCE and persisted (InMemoryTableScan on "
-            "every reuse — Catalyst won't share exchanges across self-join "
-            "sides); the triangular in-cell pair scan is a single "
-            "CELL-keyed self equi-join that STREAMS cell members (no "
-            "per-cell collect_list array — at 768-dim a 10^5-row cell as "
-            "one row would be ~0.6 GB) with the priority predicate folded "
-            "into the join (cell size is the scale knob — n_cells grows "
-            "with the corpus, as in the paper's ~50k-cluster LAION runs); "
-            "verdict = distinct dropped-ids + one left join back to the "
-            "spine. No cross join, no window over the corpus.",
+            "SemDeDup over a given codebook. Cell assignment = one "
+            "mapInArrow stage against the collected codebook (exact-kernel "
+            "argmax + cent_sim, no exchange); ONE cell-keyed exchange "
+            "(repartition) + sortWithinPartitions(cell, cent_sim, id) so "
+            "each cell streams in retention-priority order into one "
+            "mapInArrow triangular exact-cosine scan (cell size is the "
+            "scale knob — n_cells grows with the corpus, as in the paper's "
+            "~50k-cluster LAION runs). No join, no cross join, no window "
+            "over the corpus.",
             (lambda _sim: _sim.semdedup_verdicts(
                 emb,
                 emb.orderBy("vec_id").limit(16).select(
@@ -680,10 +677,10 @@ def main() -> None:
         ),
         (
             "mine_hard_negatives (exact production path)",
-            "cosine_topk's mapInPandas BLAS stage (partition-local top-k) "
+            "cosine_topk's mapInArrow exact-kernel stage (partition-local top-k) "
             "+ ONE query_id-keyed window exchange for the global top-k; the "
             "positives anti-join BROADCASTS (per-query labels are query-"
-            "batch-sized). Expected: scan -> ArrowEvalPython/mapInPandas -> "
+            "batch-sized). Expected: scan -> PythonMapInArrow -> "
             "one hashpartitioning(query_id) exchange + broadcast anti-join; "
             "the corpus is never broadcast.",
             (lambda _m: _m.mine_hard_negatives(
