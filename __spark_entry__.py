@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship extract → classify → aggregate pipeline
-on a pages table deterministically derived from the sf0.001 ``documents``
+(the fused production operator) on a pages table deterministically derived from the sf0.001 ``documents``
 table. ``queries()`` exposes one entry per implemented operator family from
 SURVEY.md §2 (+ the training-data-pipeline ops); ``oracle_sql()`` gives the
 DuckDB-equivalent SQL. Column names are aliased identically on both sides.
@@ -18,14 +18,13 @@ SF0001 = "/root/testdata/sf0.001"
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: documents → pages → extract → mask-classify → aggregate."""
+    """Flagship: documents → pages → the fused extract → mask-classify →
+    aggregate operator (operators/fused.py), the production path."""
     from edspdf_spark.fixtures import pages_from_documents
-    from edspdf_spark.operators import aggregate_simple, classify_mask, extract_blocs
+    from edspdf_spark.operators import run_pipeline_fused
 
     pages = pages_from_documents(spark, SF0001)
-    blocs = extract_blocs(pages)
-    labeled = classify_mask(blocs, [("body", 0.0, 0.0, 1.0, 0.6)], threshold=0.1)
-    return aggregate_simple(labeled)
+    return run_pipeline_fused(pages, [("body", 0.0, 0.0, 1.0, 0.6)], threshold=0.1)
 
 
 # ---------------------------------------------------------------------------
@@ -3473,18 +3472,20 @@ FROM pages GROUP BY doc_id
 
 
 def _q_extract_metrics(spark, sf_dir):
-    """In-band lineage/metrics (metrics.py): the extract stage emits one
-    metrics row per scan partition in the SAME pass as the blocs (union-typed
-    frame, no second job, no accumulator loss on retry). Partition-level rows
-    depend on the scan split layout, so the oracle checks the
-    partitioning-INDEPENDENT aggregate: total docs/blocs/errors across all
-    partitions, which the deterministic page layout (6 words/line) makes
-    SQL-derivable from documents.text."""
+    """In-band lineage/metrics (metrics.py): the fused production pipeline
+    emits one metrics row per scan partition in the SAME pass as the
+    aggregates (union-typed frame, no second job, no accumulator loss on
+    retry). Partition-level rows depend on the scan split layout, so the
+    oracle checks the partitioning-INDEPENDENT aggregate: total
+    docs/blocs/errors across all partitions, which the deterministic page
+    layout (6 words/line) makes SQL-derivable from documents.text."""
     from edspdf_spark.fixtures import pages_from_documents
-    from edspdf_spark.metrics import extract_blocs_with_metrics
+    from edspdf_spark.metrics import run_pipeline_fused_with_metrics
 
     pages = pages_from_documents(spark, sf_dir)
-    _blocs, metrics, _cached = extract_blocs_with_metrics(pages, run_id="driver")
+    _agg, metrics, _cached = run_pipeline_fused_with_metrics(
+        pages, [("body", 0.0, 0.0, 1.0, 0.6)], 0.1, run_id="driver"
+    )
     return metrics.groupBy("run_id").agg(
         F.sum("n_docs").alias("total_docs"),
         F.sum("n_blocs").alias("total_blocs"),
@@ -5105,11 +5106,12 @@ SELECT CAST(doc_id AS VARCHAR) AS url, 'Privacy Terms' AS text FROM documents
 def _q_snapshot_job(spark, sf_dir):
     """Exactly-once snapshot job under the driver's eye (job.py +
     sources/snapshots.py — the north rule's "resumable from checkpoint
-    with per-partition lineage + metrics" contract): the batched pipeline
-    job is crashed TWICE — once after two of four batches, then again in
-    the worst window (metrics committed, data not — the one point where
-    the two tables disagree) — resumed to completion, and run once more
-    as a must-be-no-op. Output: the final agg table's rows (byte-identity
+    with per-partition lineage + metrics" contract): the batched fused
+    pipeline job (aggregates + in-band metrics per batch, metrics.py) is
+    crashed TWICE — once after two of four batches, then again in the
+    worst window (metrics committed, data not — the one point where the
+    two tables disagree) — resumed to completion, and run once more as a
+    must-be-no-op. Output: the final agg table's rows (byte-identity
     oracle, same as pipeline_e2e) plus one ledger row proving the
     batch-level accounting (2 first / 2 resumed / 0 on the no-op pass,
     4 committed, metrics n_docs total exactly the corpus size — the
@@ -5119,7 +5121,7 @@ def _q_snapshot_job(spark, sf_dir):
 
     from edspdf_spark.fixtures import pages_from_documents
     from edspdf_spark.job import batch_expr, job_tables, run_snapshot_job
-    from edspdf_spark.metrics import extract_blocs_with_metrics
+    from edspdf_spark.metrics import run_pipeline_fused_with_metrics
 
     base = tempfile.mkdtemp(prefix="edspdf_snapjob_")
     try:
@@ -5131,7 +5133,9 @@ def _q_snapshot_job(spark, sf_dir):
         )
         # crash #2: batch-00002's metrics land, its data does not
         part = pages.where(batch_expr(4) == 2)
-        _, metrics, cached = extract_blocs_with_metrics(part, run_id="batch-00002")
+        _, metrics, cached = run_pipeline_fused_with_metrics(
+            part, masks, 0.1, run_id="batch-00002"
+        )
         _, met_t = job_tables(spark, base)
         met_t.append(metrics, "batch-00002")
         cached.unpersist()

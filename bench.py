@@ -31,14 +31,13 @@ def materialize(df) -> None:
 
 
 def bench_pipeline_documents(spark, sf_dir):
-    """Flagship: documents-derived pages through the full pipeline."""
+    """Flagship: documents-derived pages through the fused production
+    pipeline (the operator ``__spark_entry__.entry()`` runs)."""
     from edspdf_spark.fixtures import pages_from_documents
-    from edspdf_spark.operators import aggregate_simple, classify_mask, extract_blocs
+    from edspdf_spark.operators import run_pipeline_fused
 
     pages = pages_from_documents(spark, sf_dir)
-    blocs = extract_blocs(pages)
-    labeled = classify_mask(blocs, [("body", 0.0, 0.0, 1.0, 0.6)], threshold=0.1)
-    materialize(aggregate_simple(labeled))
+    materialize(run_pipeline_fused(pages, [("body", 0.0, 0.0, 1.0, 0.6)], threshold=0.1))
 
 
 def bench_pipeline_synthetic(spark, corpus_path):
@@ -472,14 +471,10 @@ def main():
     # warmup: JVM/codegen init plus one python worker per core, so timings
     # below are steady-state (a cold first query would otherwise absorb
     # 32 worker fork+import costs)
-    from edspdf_spark.operators import aggregate_simple, classify_mask, extract_blocs
+    from edspdf_spark.operators import run_pipeline_fused
 
     warm_pages = spark.read.parquet(corpus_path).limit(CPUS * 40).repartition(CPUS)
-    materialize(
-        aggregate_simple(
-            classify_mask(extract_blocs(warm_pages), [("body", 0.2, 0.3, 0.9, 0.6)], 0.1)
-        )
-    )
+    materialize(run_pipeline_fused(warm_pages, [("body", 0.2, 0.3, 0.9, 0.6)], 0.1))
 
     queries = {
         "pipeline_documents": lambda: bench_pipeline_documents(spark, SF_DIR),

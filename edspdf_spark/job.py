@@ -2,10 +2,10 @@
 end-to-end through the real operators.
 
 ``run_snapshot_job`` splits the input into ``n_batches`` deterministic
-url-hash batches and, per batch, runs extract → classify → aggregate
-(single in-band pass also yielding the per-partition lineage/metrics
-rows, `metrics.py`) and commits BOTH frames to snapshot tables
-(`sources/snapshots.py`):
+url-hash batches and, per batch, runs the fused extract → classify →
+aggregate operator (one stage, no url shuffle) whose single in-band pass
+also yields the per-partition lineage/metrics rows (`metrics.py`), and
+commits BOTH frames to snapshot tables (`sources/snapshots.py`):
 
 * batch membership is a pure function of the url (``xxhash64 % n``), so
   a restart recomputes the same batches;
@@ -16,11 +16,12 @@ rows, `metrics.py`) and commits BOTH frames to snapshot tables
   the data append completes — exactly-once on both tables under any
   crash point (snapshot isolation hides the torn attempt from readers).
 
-``run_pipeline_stream_snapshot`` is the streaming face: ``foreachBatch``
-is at-least-once on retry, and the epoch-id-keyed idempotent append
-upgrades it to exactly-once without the dynamic-partition-overwrite
-trick (which needs a partitioned layout); with a real Iceberg catalog
-both map to ``MERGE INTO`` on the same call sites.
+``run_pipeline_stream_snapshot`` is the streaming face, without metrics
+rows: ``foreachBatch`` is at-least-once on retry, and the epoch-id-keyed
+idempotent append upgrades it to exactly-once without the
+dynamic-partition-overwrite trick (which needs a partitioned layout);
+with a real Iceberg catalog both map to ``MERGE INTO`` on the same call
+sites.
 """
 
 from __future__ import annotations
@@ -64,12 +65,10 @@ def run_snapshot_job(
     preserve the committed-batch set, so crash-resume across maintained
     runs keeps its exactly-once contract (tests/test_job.py proves a
     crash-resume THROUGH a compaction+expiry)."""
-    from edspdf_spark.metrics import extract_blocs_with_metrics
-    from edspdf_spark.operators import aggregate_simple, classify_mask
+    from edspdf_spark.metrics import run_pipeline_fused_with_metrics
 
     masks = masks or [("body", 0.0, 0.0, 1.0, 1.0)]
-    agg_table = SnapshotTable(spark, os.path.join(base, "agg"))
-    met_table = SnapshotTable(spark, os.path.join(base, "metrics"))
+    agg_table, met_table = job_tables(spark, base)
     done = agg_table.committed_batches()
     out: List[Tuple[str, bool]] = []
     ran = 0
@@ -81,11 +80,12 @@ def run_snapshot_job(
         if limit_batches is not None and ran >= limit_batches:
             break
         part = pages.where(batch_expr(n_batches) == b)
-        blocs, metrics, cached = extract_blocs_with_metrics(part, run_id=bid)
-        agg = aggregate_simple(classify_mask(blocs, masks, threshold=threshold))
+        agg, metrics, cached = run_pipeline_fused_with_metrics(
+            part, masks, threshold, run_id=bid
+        )
         met_table.append(metrics, bid)  # idempotent no-op on replay
         agg_table.append(agg, bid)  # THE commit: marks the batch done
-        cached.unpersist()  # one extraction cache per batch must not pile up
+        cached.unpersist()  # one aggregate cache per batch must not pile up
         ran += 1
         out.append((bid, True))
         if compact_every and ran % int(compact_every) == 0:
@@ -121,7 +121,7 @@ def run_pipeline_stream_snapshot(
     """Streaming pipeline into a snapshot table: each micro-batch commits
     under ``epoch-<id>``, so a foreachBatch retry (at-least-once) hits the
     idempotence check and the table stays exactly-once."""
-    from edspdf_spark.operators import aggregate_simple, classify_mask, extract_blocs
+    from edspdf_spark.operators import run_pipeline_fused
 
     masks = masks or [("body", 0.0, 0.0, 1.0, 1.0)]
     table = SnapshotTable(spark, os.path.join(base, "agg"))
@@ -129,9 +129,7 @@ def run_pipeline_stream_snapshot(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if transform is not None:
             batch_df = transform(batch_df)
-        agg = aggregate_simple(
-            classify_mask(extract_blocs(batch_df), masks, threshold=threshold)
-        )
+        agg = run_pipeline_fused(batch_df, masks, threshold=threshold)
         table.append(agg, f"epoch-{batch_id}")
 
     writer = (

@@ -35,34 +35,29 @@ from edspdf_spark.schemas import BLOC_SCHEMA
 _BLOC_ARROW_SCHEMA = to_arrow_schema(BLOC_SCHEMA)
 
 
-def extract_bloc_batch(
-    batch: pa.RecordBatch, extract_style: bool = True
-) -> pa.RecordBatch:
-    """One RecordBatch of pages (url, html) → its bloc rows (BLOC_SCHEMA)."""
-    rows = []
-    urls = batch.column("url").to_pylist()
-    for url, html in zip(urls, batch.column("html").to_pylist()):
-        blocs, _pages, error = extract_doc_raw(html)
-        if error:
-            rows.append((url, None, None, None, None, None, None, None, [], None, True))
-        elif extract_style:
-            rows.extend((url, *b, None, False) for b in blocs)
-        else:
-            rows.extend((url, *b[:7], [], None, False) for b in blocs)
-    cols = zip(*rows) if rows else [()] * len(_BLOC_ARROW_SCHEMA)
-    return pa.RecordBatch.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, _BLOC_ARROW_SCHEMA)],
-        schema=_BLOC_ARROW_SCHEMA,
-    )
-
-
 def extract_blocs(pages: DataFrame, extract_style: bool = True) -> DataFrame:
     """pages(url, html, …) → blocs (BLOC_SCHEMA), reading-order sorted.
 
     Narrows the input to (url, html) first so Catalyst prunes every other
     column at the scan (``ReadSchema`` shows only the two columns).
     """
-    return pages.select("url", "html").mapInArrow(
-        lambda batches: (extract_bloc_batch(b, extract_style) for b in batches),
-        schema=BLOC_SCHEMA,
-    )
+
+    def work(batches):
+        for batch in batches:
+            rows = []
+            urls = batch.column("url").to_pylist()
+            for url, html in zip(urls, batch.column("html").to_pylist()):
+                blocs, _pages, error = extract_doc_raw(html)
+                if error:
+                    rows.append((url, None, None, None, None, None, None, None, [], None, True))
+                elif extract_style:
+                    rows.extend((url, *b, None, False) for b in blocs)
+                else:
+                    rows.extend((url, *b[:7], [], None, False) for b in blocs)
+            cols = zip(*rows) if rows else [()] * len(_BLOC_ARROW_SCHEMA)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(cols, _BLOC_ARROW_SCHEMA)],
+                schema=_BLOC_ARROW_SCHEMA,
+            )
+
+    return pages.select("url", "html").mapInArrow(work, schema=BLOC_SCHEMA)

@@ -4,11 +4,10 @@ The reference is batch-only (SURVEY.md §2.6); a Common-Crawl-scale ingest
 is naturally a stream of WARC drops. Two patterns:
 
 * ``run_pipeline_stream`` — file-source stream over a pages parquet
-  directory, full extract → classify → aggregate per micro-batch via
-  ``foreachBatch`` (the per-document aggregation has no cross-batch state:
-  one document never spans WARC files, so batch == complete-document set;
-  this keeps the grouped-map aggregator usable unchanged and the sink
-  idempotent by batch id).
+  directory, the fused extract → classify → aggregate operator
+  (``operators/fused.py``) per micro-batch via ``foreachBatch`` (one
+  input record is one document, so the per-document pipeline has no
+  cross-batch state and the sink is idempotent by batch id).
 * ``windowed_ingest_metrics`` — a genuinely stateful streaming aggregation:
   doc/byte counts per (1-minute warc_ts window, lang) with a watermark for
   late arrivals — the streaming face of the metrics table.
@@ -43,19 +42,18 @@ def run_pipeline_stream(
     transform: Optional[Callable[[DataFrame], DataFrame]] = None,
     trigger_available_now: bool = True,
 ):
-    """Stream → extract → classify → aggregate → parquet, exactly-once per
-    micro-batch (checkpointed batch ids + idempotent per-batch overwrite
-    into batch-partitioned output)."""
-    from edspdf_spark.operators import aggregate_simple, classify_mask, extract_blocs
+    """Stream → fused extract → classify → aggregate → parquet,
+    exactly-once per micro-batch (checkpointed batch ids + idempotent
+    per-batch overwrite into batch-partitioned output)."""
+    from edspdf_spark.operators import run_pipeline_fused
 
     masks = masks or [("body", 0.0, 0.0, 1.0, 1.0)]
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if transform is not None:
             batch_df = transform(batch_df)
-        blocs = extract_blocs(batch_df)
-        labeled = classify_mask(blocs, masks, threshold=threshold)
-        agg = aggregate_simple(labeled).withColumn("batch_id", F.lit(batch_id))
+        agg = run_pipeline_fused(batch_df, masks, threshold=threshold)
+        agg = agg.withColumn("batch_id", F.lit(batch_id))
         # idempotent on retry: replace this batch's partition only
         agg.write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"

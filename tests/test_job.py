@@ -67,10 +67,12 @@ def test_job_crash_between_metrics_and_data_commit(spark, tmp_path):
     pages = build_pages_df(spark, 60, partitions=2)
     base = str(tmp_path / "job3")
     from edspdf_spark.job import batch_expr
-    from edspdf_spark.metrics import extract_blocs_with_metrics
+    from edspdf_spark.metrics import run_pipeline_fused_with_metrics
 
     part0 = pages.where(batch_expr(2) == 0)
-    _, metrics, _ = extract_blocs_with_metrics(part0, run_id="batch-00000")
+    _, metrics, _ = run_pipeline_fused_with_metrics(
+        part0, MASKS, 0.1, run_id="batch-00000"
+    )
     agg_t, met_t = job_tables(spark, base)
     met_t.append(metrics, "batch-00000")  # crash here: data never landed
     res = run_snapshot_job(spark, pages, base, masks=MASKS, n_batches=2)
@@ -78,6 +80,40 @@ def test_job_crash_between_metrics_and_data_commit(spark, tmp_path):
     assert _rows(agg_t.read()) == _rows(_expected(pages))
     assert met_t.read().agg(F.sum("n_docs")).first()[0] == 60
     assert sorted(met_t.committed_batches()) == ["batch-00000", "batch-00001"]
+
+
+def test_repeated_url_gives_one_aggregate_set_per_record(spark, tmp_path):
+    """One url in two input rows (two crawls of one page) is two
+    documents: the snapshot job and the stream job give exactly
+    run_pipeline_fused's per-record rows, not one merged set per url."""
+    from edspdf_spark.operators import run_pipeline_fused
+    from edspdf_spark.streaming import read_pages_stream, run_pipeline_stream
+
+    first = build_pages_df(spark, 40, partitions=2)
+    a, b = first.orderBy("url").limit(2).collect()
+    # doc b's payload under doc a's url
+    recrawl = spark.createDataFrame(
+        [(a.url, b.warc_ts, b.html, b.text, b.lang)], first.schema
+    )
+    pages = first.union(recrawl)
+    expected = _rows(run_pipeline_fused(pages, MASKS, threshold=0.1))
+    assert [r[:2] for r in expected].count((a.url, "body")) == 2
+
+    base = str(tmp_path / "rjob")
+    run_snapshot_job(spark, pages, base, masks=MASKS, n_batches=2)
+    agg_t, _ = job_tables(spark, base)
+    assert _rows(agg_t.read()) == expected
+
+    src, out = str(tmp_path / "rsrc"), str(tmp_path / "rout")
+    pages.write.parquet(src)
+    q = run_pipeline_stream(
+        read_pages_stream(spark, src, max_files_per_trigger=1),
+        out,
+        str(tmp_path / "rckpt"),
+        masks=MASKS,
+    )
+    q.awaitTermination(120)
+    assert _rows(spark.read.parquet(out)) == expected
 
 
 def test_stream_job_exactly_once(spark, tmp_path):

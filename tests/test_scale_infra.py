@@ -63,29 +63,33 @@ def test_apply_scan_partitioning_sizes_the_scan(spark, tmp_path):
 
 
 def test_extract_with_metrics(spark):
-    from edspdf_spark.metrics import extract_blocs_with_metrics
-    from edspdf_spark.operators import extract_blocs
+    from edspdf_spark.metrics import run_pipeline_fused_with_metrics
+    from edspdf_spark.operators import extract_blocs, run_pipeline_fused
 
     pages = (
         build_pages_df(spark, 600, partitions=4)
         .select("url", "html")
         .union(spark.createDataFrame([("https://synth.test/null-html", None)], "url string, html binary"))
     )
-    blocs, metrics, cached = extract_blocs_with_metrics(pages, run_id="r1")
+    masks = [("body", 0.2, 0.3, 0.9, 0.6)]
+    agg, metrics, cached = run_pipeline_fused_with_metrics(pages, masks, 0.1, run_id="r1")
     try:
         m = metrics.collect()
+        blocs = extract_blocs(pages)
         assert sum(r.n_docs for r in m) == 601
         assert sum(r.n_errors for r in m) == 2  # doc 500 is corrupt, plus the NULL html
+        assert sum(r.n_errors for r in m) == blocs.filter(F.col("error")).count()
         assert sum(r.n_blocs for r in m) == blocs.filter(~F.col("error")).count()
         assert all(r.run_id == "r1" for r in m)
         assert all(r.wall_ms >= 0 for r in m)
         total_len, max_len = pages.agg(F.sum(F.length("html")), F.max(F.length("html"))).first()
         assert sum(r.bytes_in for r in m) == total_len
         assert max(r.bucket for r in m) == max_len.bit_length()
-        # the bloc face is exactly extract_blocs on the same pages
-        plain = extract_blocs(pages)
-        assert blocs.exceptAll(plain).count() == 0
-        assert plain.exceptAll(blocs).count() == 0
+        # the aggregate face is exactly run_pipeline_fused on the same pages
+        plain = run_pipeline_fused(pages, masks, threshold=0.1)
+        assert agg.count() > 0
+        assert agg.exceptAll(plain).count() == 0
+        assert plain.exceptAll(agg).count() == 0
     finally:
         cached.unpersist()
 

@@ -14,10 +14,13 @@ which is the point of auditing plans rather than timings).
 
 from __future__ import annotations
 
+import atexit
 import io
 import os
 import re
+import shutil
 import sys
+import tempfile
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -101,14 +104,15 @@ def main() -> None:
         run_pipeline_fused,
     )
 
+    # the bucketed-join entry saveAsTable's into the warehouse: a fresh
+    # directory per run (a table directory left by an earlier run makes
+    # saveAsTable fail with LOCATION_ALREADY_EXISTS), outside the repo tree
+    warehouse = tempfile.mkdtemp(prefix="edspdf_plans_warehouse_")
+    atexit.register(shutil.rmtree, warehouse, ignore_errors=True)
     spark = get_spark(
         master="local[4]",
         shuffle_partitions=8,
-        extra_conf={
-            # the bucketed-join entry saveAsTable's into the warehouse;
-            # keep it out of the repo tree
-            "spark.sql.warehouse.dir": "/tmp/edspdf_plans_warehouse",
-        },
+        extra_conf={"spark.sql.warehouse.dir": warehouse},
     )
     spark.sparkContext.setLogLevel("ERROR")
     # AQE stays ON in production; for plan INSPECTION a static plan is the
