@@ -5555,13 +5555,12 @@ FROM pages GROUP BY 1, 2
 """
 
 
-# --- trainable-head serve queries (quantized compiled twins) ----------------
-# Rounds 1-2 ran these as rows-only checks over NumPy float inference. They
-# now bind the ml/compiled.py quantized serve twins (constant fixture-trained
-# models, int64 micro-grid traversal), so every one of the 50 registered
-# queries carries a value-level DuckDB oracle — see entry_queries.py
-# q_forest_classifier / q_begin_last_classifier / q_type_classifier /
-# q_order_following / q_order_rank / q_random_classifier.
+# --- trainable-head serve queries (quantized compiled serve path) -----------
+# These bind the heads' one serve path, ml/compiled.py (constant
+# fixture-trained models, int64 micro-grid traversal), so every one of the
+# 50 registered queries carries a value-level DuckDB oracle — see
+# entry_queries.py q_forest_classifier / q_begin_last_classifier /
+# q_type_classifier / q_order_following / q_order_rank / q_random_classifier.
 
 
 def _q_baseline_classifiers(spark, sf_dir):

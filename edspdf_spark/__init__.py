@@ -19,7 +19,6 @@ from edspdf_spark.schemas import (
     PAGES_SCHEMA,
     BLOC_SCHEMA,
     AGG_SCHEMA,
-    MASK_SCHEMA,
     METRICS_SCHEMA,
 )
 
@@ -28,6 +27,5 @@ __all__ = [
     "PAGES_SCHEMA",
     "BLOC_SCHEMA",
     "AGG_SCHEMA",
-    "MASK_SCHEMA",
     "METRICS_SCHEMA",
 ]

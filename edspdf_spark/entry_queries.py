@@ -96,7 +96,7 @@ def mask_sql_rows() -> str:
 
 
 def q_mask_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P3/A1 — broadcast overlap join + window argmax via the REAL operator."""
+    """P3/A1 — literal-mask overlap argmax (one Project) via the REAL operator."""
     from edspdf_spark.operators.classify import classify_mask
 
     blocs = blocs_from_lineitem(spark, sf_dir)
@@ -566,15 +566,14 @@ FROM lab GROUP BY url, label2
 # ---------------------------------------------------------------------------
 # P5 / P8–P12 — value-checkable serve paths of the trainable heads
 # ---------------------------------------------------------------------------
-# The heads were rows-only driver checks in rounds 1–2 (float inference is
-# not cross-engine bit-reproducible). These queries bind the quantized
-# compiled twins from ml/compiled.py: the model is a deterministic constant
-# (trained on the fixed seeded fixture corpus), thresholds / leaves / serve
-# features live on an int64 micro grid, and the oracle SQL inlines the same
-# constant as nested CASE trees — so traversal, voting and argmax-j are
-# exact in both engines. Training-path coverage stays in pytest
-# (tests/test_forest_heads.py), mirroring the IVF serve-path split the r2
-# verdict prescribed.
+# Float inference is not cross-engine bit-reproducible, so these queries
+# bind the heads' one serve path, the quantized operators of
+# ml/compiled.py: the model is a deterministic constant (trained on the
+# fixed seeded fixture corpus), thresholds / leaves / serve features live
+# on an int64 micro grid, and the oracle SQL inlines the same constant as
+# nested CASE trees — so traversal, voting and argmax-j are exact in both
+# engines. Training-path coverage stays in pytest
+# (tests/test_forest_heads.py), like the IVF serve/train split.
 
 #: E1 feature expressions over a blocs CTE named `b2`, in FEATURE_COLS order.
 _E1_SQL_EXPRS = [

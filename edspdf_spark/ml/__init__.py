@@ -2,7 +2,6 @@ from edspdf_spark.ml.forest import (
     RandomForest,
     RegressionForest,
     train_forest_on_masks,
-    classify_forest,
 )
 from edspdf_spark.ml.embeddings import (
     box_layout_embedding,
@@ -21,7 +20,6 @@ __all__ = [
     "RandomForest",
     "RegressionForest",
     "train_forest_on_masks",
-    "classify_forest",
     "box_layout_embedding",
     "box_transformer_embedding",
     "build_vocab",

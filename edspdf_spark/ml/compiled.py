@@ -1,17 +1,25 @@
-"""Quantized, SQL-compilable serve twins of the trainable forest heads.
+"""Quantized, SQL-compilable serve path of the trainable forest heads.
 
-Why this module exists
-----------------------
-The P5/P8–P12 heads are deterministic (seeded NumPy CART, see
-:mod:`edspdf_spark.ml.forest`), but their float inference is not
-cross-engine reproducible at the bit level, so round 1–2 driver checks for
-those queries were rows-only (``no_oracle``). This module makes the SERVE
-path value-checkable with the same technique that flipped E4/E6/IVF green:
+Train → compile → serve
+-----------------------
+A forest head is fitted by a ``train_*`` function
+(:mod:`edspdf_spark.ml.forest`, :mod:`edspdf_spark.operators.order`),
+compiled once on the driver, and served on Spark by one operator:
 
-* the model is trained once on a **fixed, seeded, sf-independent fixture
-  corpus** (generated in-code, below) — so the fitted forest is a
-  deterministic constant that both the Spark query and the DuckDB oracle
-  SQL can share;
+* P8/P12 class labels: ``train_forest_on_masks`` / ``train_forest_on_types``
+  → :func:`compile_class_forest` → :func:`classify_forest_compiled`;
+* P9 begin/last: ``train_begin_last`` → :func:`compile_class_forest` on
+  each of its two forests → :func:`classify_begin_last_compiled`;
+* P10 following links: ``train_order_following`` →
+  :func:`compile_proba_forest` (``pos_class="F"``) →
+  :func:`order_followings_compiled`;
+* P11 order rank: ``train_order_rank`` → :func:`compile_reg_forest` →
+  :func:`score_order_rank_compiled`.
+
+The float forests are deterministic (seeded NumPy CART), but float
+inference is not cross-engine reproducible at the bit level, so the serve
+path is integer:
+
 * thresholds, leaf payloads and serve-time features are quantized to an
   integer **micro grid** (``floor(x * 1e6 + 0.5)`` — round-half-up, an
   exact IEEE754 sequence in both engines), so tree traversal, voting and
@@ -20,12 +28,20 @@ path value-checkable with the same technique that flipped E4/E6/IVF green:
   integer leaf counts, forest argmax of the integer vote counts, ties to
   the lexicographically-first class) — the classic RF voting rule, fully
   integer; value forests (P10 follow score, P11 rank regression) inline
-  each leaf's payload as a micro int and serve the **sum over trees**.
+  each leaf's payload as a micro int and serve the **sum over trees**;
+* NULLs route as in the float forest and in SQL ``CASE WHEN NULL <= t``:
+  a NULL/NaN feature goes right at every node (it quantizes to
+  :data:`NULL_MICRO`, above every threshold), and a node whose threshold
+  was learned from a NULL feature sends every row right (compiling
+  replaces it by its right child);
+* an ``error`` bloc gets a NULL prediction.
 
-Training-path correctness (bounded distributed sampling, Gini/SSE splits)
-keeps its own pytest coverage in ``tests/test_forest_heads.py`` — exactly
-the split the round-2 verdict prescribed for IVF ("oracle the serve half
-even if training stays rows-only").
+The driver oracle checks each ``*_compiled`` operator against DuckDB SQL
+that inlines the same compiled trees as nested CASE expressions
+(:func:`tree_sql`), on a model trained once on a **fixed, seeded,
+sf-independent fixture corpus** (generated in-code, below). Training
+(bounded distributed sampling, Gini/SSE splits) is covered by pytest in
+``tests/test_forest_heads.py`` and ``tests/test_order_and_config.py``.
 
 Reference parity: serve semantics mirror
 ``edspdf/pipes/classifiers/trainable.py:176-201`` (argmax class per line),
@@ -51,12 +67,21 @@ import pandas as pd
 
 MICRO = 1_000_000
 
+#: Quantized NULL/NaN feature: above every finite threshold, so
+#: ``x <= thr`` is False and the row goes right. Built in int64 —
+#: ``float(2**63)`` cast to int64 wraps to INT64_MIN.
+NULL_MICRO = np.iinfo(np.int64).max
+
 
 def quantize(x: np.ndarray) -> np.ndarray:
     """Round-half-up to the micro grid — matches SQL
     ``CAST(FLOOR(x * 1000000.0 + 0.5) AS BIGINT)`` bit-for-bit (multiply,
-    add and floor are all exactly-rounded IEEE754 ops)."""
-    return np.floor(np.asarray(x, dtype=np.float64) * MICRO + 0.5).astype(np.int64)
+    add and floor are all exactly-rounded IEEE754 ops). NaN maps to
+    :data:`NULL_MICRO`, where SQL has NULL."""
+    x = np.asarray(x, dtype=np.float64)
+    null = np.isnan(x)
+    q = np.floor(np.where(null, 0.0, x) * MICRO + 0.5).astype(np.int64)
+    return np.where(null, NULL_MICRO, q)
 
 
 @dataclass
@@ -74,21 +99,31 @@ class CompiledForest:
     classes: Optional[List[str]]  # None for value forests
 
 
+def _compile_tree(t: dict, leaf: np.ndarray) -> CompiledTree:
+    """One flat float tree → int64 form with ``leaf`` as the payload.
+
+    A NaN threshold (learned from a NULL feature) sends every row right
+    under the float rule, so its node is replaced by its right child.
+    Children sit after their parent in the flat arrays, so one pass from
+    the last node collapses chains of such nodes."""
+    feature = t["feature"].astype(np.int64)
+    thr = t["threshold"].astype(np.float64)
+    left = t["left"].astype(np.int64)
+    right = t["right"].astype(np.int64)
+    leaf = np.array(leaf, dtype=np.int64)
+    for n in np.nonzero((feature >= 0) & np.isnan(thr))[0][::-1]:
+        r = right[n]
+        feature[n], thr[n], left[n], right[n], leaf[n] = (
+            feature[r], thr[r], left[r], right[r], leaf[r]
+        )
+    return CompiledTree(feature=feature, thr=quantize(thr), left=left, right=right, leaf=leaf)
+
+
 def compile_class_forest(rf) -> CompiledForest:
     """RandomForest → hard-vote compiled form: leaf payload = argmax of the
     integer class counts (np.argmax tie rule: lowest index = first class in
     the sorted class list)."""
-    trees = []
-    for t in rf.trees:
-        trees.append(
-            CompiledTree(
-                feature=t["feature"].astype(np.int64),
-                thr=quantize(t["threshold"]),
-                left=t["left"].astype(np.int64),
-                right=t["right"].astype(np.int64),
-                leaf=t["counts"].argmax(axis=1).astype(np.int64),
-            )
-        )
+    trees = [_compile_tree(t, t["counts"].argmax(axis=1)) for t in rf.trees]
     return CompiledForest(trees=trees, classes=list(rf.classes_))
 
 
@@ -101,34 +136,15 @@ def compile_proba_forest(rf, pos_class: str) -> CompiledForest:
     for t in rf.trees:
         c = t["counts"]
         s = c.sum(axis=1)
-        s_safe = np.where(s == 0, 1, s)
-        p = c[:, ci] / s_safe
-        trees.append(
-            CompiledTree(
-                feature=t["feature"].astype(np.int64),
-                thr=quantize(t["threshold"]),
-                left=t["left"].astype(np.int64),
-                right=t["right"].astype(np.int64),
-                leaf=quantize(p),
-            )
-        )
+        trees.append(_compile_tree(t, quantize(c[:, ci] / np.where(s == 0, 1, s))))
     return CompiledForest(trees=trees, classes=None)
 
 
 def compile_reg_forest(rf) -> CompiledForest:
     """RegressionForest → value form: leaf payload = micro-quantized mean."""
-    trees = []
-    for t in rf.trees:
-        trees.append(
-            CompiledTree(
-                feature=t["feature"].astype(np.int64),
-                thr=quantize(t["threshold"]),
-                left=t["left"].astype(np.int64),
-                right=t["right"].astype(np.int64),
-                leaf=quantize(t["mean"]),
-            )
-        )
-    return CompiledForest(trees=trees, classes=None)
+    return CompiledForest(
+        trees=[_compile_tree(t, quantize(t["mean"])) for t in rf.trees], classes=None
+    )
 
 
 def _traverse(tree: CompiledTree, Xm: np.ndarray) -> np.ndarray:
@@ -175,9 +191,8 @@ def micro_sql(expr: str) -> str:
 def tree_sql(tree: CompiledTree, feat_cols: List[str], node: int = 0) -> str:
     """Nested ``CASE WHEN m_f <= thr THEN … ELSE … END`` over pre-quantized
     BIGINT feature columns; leaves inline their int payload. A NULL feature
-    falls to ELSE (right child) — matching NumPy where a NaN comparison is
-    False (serve features are non-null by construction; this just pins the
-    degenerate case to the same branch in both engines)."""
+    falls to ELSE (right child), as :data:`NULL_MICRO` does in
+    :func:`_traverse` and NaN does in the float forest."""
     f = int(tree.feature[node])
     if f < 0:
         return str(int(tree.leaf[node]))
@@ -409,71 +424,65 @@ def fixture_forest_rank() -> CompiledForest:
 
 
 # ---------------------------------------------------------------------------
-# Spark serve operators (quantized twins)
+# Spark serve operators
 # ---------------------------------------------------------------------------
 
+_KEYS = ["url", "page_num", "bloc_ord"]
 
-def _layout_micro(pdf: pd.DataFrame) -> np.ndarray:
-    return quantize(pdf[_FEATURES].to_numpy(dtype=np.float64))
+
+def _serve_layout(blocs, schema_ddl: str, predict_head):
+    """Shared E1-feature serve stage: ``predict_head(Xm)`` maps the micro
+    feature matrix of a batch to ``{column: values}`` for the schema's
+    columns after the bloc key; an ``error`` bloc gets NULL in each."""
+    import pyspark.sql.types as T
+
+    from edspdf_spark.operators.features import with_layout_features
+
+    feat = with_layout_features(blocs)
+    schema = T.StructType.fromDDL(schema_ddl)
+    head_cols = schema.fieldNames()[len(_KEYS):]
+
+    def predict(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = pdf[_KEYS]
+            if not len(pdf):
+                yield out.assign(**{c: pd.Series(dtype=object) for c in head_cols})
+                continue
+            err = pdf["error"].to_numpy(dtype=bool)
+            heads = predict_head(quantize(pdf[_FEATURES].to_numpy(dtype=np.float64)))
+            yield out.assign(
+                **{c: pd.Series(v, dtype=object).mask(err, None) for c, v in heads.items()}
+            )
+
+    return feat.select(*_KEYS, "error", *_FEATURES).mapInPandas(predict, schema=schema)
 
 
 def classify_forest_compiled(blocs, cf: CompiledForest):
     """P8/P12 quantized serve: (url, page_num, bloc_ord, label) by hard
     vote — vectorized int64 traversal per Arrow batch, model in closure."""
-    import pyspark.sql.types as T
-
-    from edspdf_spark.operators.features import with_layout_features
-
-    feat = with_layout_features(blocs)
-    schema = T.StructType.fromDDL(
-        "url string, page_num int, bloc_ord int, label string"
+    return _serve_layout(
+        blocs,
+        "url string, page_num int, bloc_ord int, label string",
+        lambda Xm: {"label": predict_label(cf, Xm)},
     )
-    keys = ["url", "page_num", "bloc_ord"]
-
-    def predict(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                yield pdf.reindex(columns=keys).assign(label=pd.Series(dtype=object))
-                continue
-            yield pdf[keys].assign(label=predict_label(cf, _layout_micro(pdf)))
-
-    return feat.select(*keys, *_FEATURES).mapInPandas(predict, schema=schema)
 
 
 def classify_begin_last_compiled(blocs, models: dict):
     """P9 quantized serve: boolean is_begin/is_last per line (majority of
     the two-class votes; a 2–2 tie is False, the first sorted class)."""
-    import pyspark.sql.types as T
-
-    from edspdf_spark.operators.features import with_layout_features
-
-    feat = with_layout_features(blocs)
-    schema = T.StructType.fromDDL(
-        "url string, page_num int, bloc_ord int, is_begin boolean, is_last boolean"
+    return _serve_layout(
+        blocs,
+        "url string, page_num int, bloc_ord int, is_begin boolean, is_last boolean",
+        lambda Xm: {name: predict_label(m, Xm) == "True" for name, m in models.items()},
     )
-    keys = ["url", "page_num", "bloc_ord"]
-
-    def predict(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                yield pdf.reindex(columns=keys).assign(
-                    is_begin=pd.Series(dtype=bool), is_last=pd.Series(dtype=bool)
-                )
-                continue
-            Xm = _layout_micro(pdf)
-            out = {
-                name: predict_label(m, Xm) == "True" for name, m in models.items()
-            }
-            yield pdf[keys].assign(**out)
-
-    return feat.select(*keys, *_FEATURES).mapInPandas(predict, schema=schema)
 
 
 def order_followings_compiled(blocs, cf: CompiledForest):
     """P10 quantized serve: per line i, follow_ord = argmax_j of the exact
     int pair score (sum of micro P(follow) leaves over trees), ties to the
     smallest ord_j — the torch argmax rule. One co-partitioned self-join,
-    one vectorized scoring stage, one max_by agg."""
+    one vectorized scoring stage, one max_by agg. Error blocs never enter
+    the pair join, so they get no row."""
     import pyspark.sql.types as T
     from pyspark.sql import functions as F
 
@@ -507,25 +516,8 @@ def order_followings_compiled(blocs, cf: CompiledForest):
 def score_order_rank_compiled(blocs, cf: CompiledForest):
     """P11 quantized serve: rank_micro = exact int sum of micro leaf means
     over trees (n_trees × the forest average, in micro units)."""
-    import pyspark.sql.types as T
-
-    from edspdf_spark.operators.features import with_layout_features
-
-    feat = with_layout_features(blocs)
-    schema = T.StructType.fromDDL(
-        "url string, page_num int, bloc_ord int, rank_micro bigint"
+    return _serve_layout(
+        blocs,
+        "url string, page_num int, bloc_ord int, rank_micro bigint",
+        lambda Xm: {"rank_micro": predict_value_sum(cf, Xm)},
     )
-    keys = ["url", "page_num", "bloc_ord"]
-
-    def predict(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                yield pdf.reindex(columns=keys).assign(
-                    rank_micro=pd.Series(dtype="int64")
-                )
-                continue
-            yield pdf[keys].assign(
-                rank_micro=predict_value_sum(cf, _layout_micro(pdf))
-            )
-
-    return feat.select(*keys, *_FEATURES).mapInPandas(predict, schema=schema)

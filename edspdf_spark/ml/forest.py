@@ -1,24 +1,28 @@
-"""P8 — trainable classifier as a NumPy random forest served in a
-vectorized pandas UDF.
+"""P8 — trainable classifier as a NumPy random forest.
 
 The north-star mandates "a re-trained sklearn random-forest on the same
-bbox/layout features" (BASELINE.json). sklearn is not installed in this
-sandbox, so this is a small, self-contained NumPy CART ensemble with the
-same contract: fit on the E1 feature matrix
+bbox/layout features" (BASELINE.json). sklearn is not installed here, so
+this is a small, self-contained NumPy CART ensemble with the same
+contract: fit on the E1 feature matrix
 (xmin/ymin/xmax/ymax/width/height/first_page/last_page/page_num/n_chars —
 reference ``edspdf/pipes/embeddings/box_layout_preprocessor.py:25-95``),
 predict argmax class per bloc. Deterministic (seeded bootstrap + feature
-subsampling).
+subsampling). A NULL (NaN) feature goes right at every node, and so does
+every row at a node whose threshold was learned from a NULL feature
+(``NaN <= t`` and ``x <= NaN`` are both False).
 
-Serving: the fitted model is pickled into the UDF closure (≙ broadcast —
-cloudpickle ships it once per executor); prediction is vectorized NumPy
-array traversal per Arrow batch, no per-row Python. Replaces the reference
-torch path (``pipes/classifiers/trainable.py:176-201``) per SURVEY.md P8.
+This module trains; it does not serve. A fitted forest is served on
+Spark through :mod:`edspdf_spark.ml.compiled`: ``train_*`` →
+``compile_class_forest`` / ``compile_proba_forest`` /
+``compile_reg_forest`` → the ``*_compiled`` operators. ``predict`` /
+``predict_proba`` stay as the float reference the compiled form is
+tested against. Replaces the reference torch path
+(``pipes/classifiers/trainable.py:176-201``) per SURVEY.md P8.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, List, Optional
+from typing import List, Optional
 
 import numpy as np
 import pandas as pd
@@ -299,7 +303,8 @@ def train_forest_on_masks(
     or any labeled blocs — node types for P12): features = E1 layout
     columns, labels = the ``label`` column. The training sample is
     collected to the driver bounded by ``sample_fraction`` AND ``max_rows``;
-    serving (:func:`classify_forest`) is distributed."""
+    serving (``compile_class_forest`` → ``classify_forest_compiled``) is
+    distributed."""
     from edspdf_spark.operators.features import with_layout_features
     from pyspark.sql import functions as F
 
@@ -332,7 +337,8 @@ def train_begin_last(
     head predicting ``(is_begin, is_last)`` per line. Re-expressed as two
     binary forests over the E1 features, trained on ``align_bioul``-derived
     ``is_begin`` / ``is_last`` truth columns. Returns ``{"is_begin": rf,
-    "is_last": rf}``."""
+    "is_last": rf}``; serve it with ``classify_begin_last_compiled`` after
+    ``compile_class_forest`` on each forest."""
     from edspdf_spark.operators.features import with_layout_features
     from pyspark.sql import functions as F
 
@@ -347,67 +353,3 @@ def train_begin_last(
         rf.fit(X, [str(bool(v)) for v in pdf[out_col]])
         models[out_col] = rf
     return models
-
-
-def classify_begin_last(blocs, models):
-    """Serve the P9 2-output head: adds BOOLEAN ``is_begin`` / ``is_last``
-    columns — vectorized mapInPandas, models ride the closure (broadcast
-    once per executor)."""
-    import pyspark.sql.types as T
-
-    from edspdf_spark.operators.features import with_layout_features
-    from edspdf_spark.schemas import BLOC_SCHEMA
-
-    feat = with_layout_features(blocs)
-    cols = [f.name for f in BLOC_SCHEMA.fields]
-    out_schema = T.StructType(
-        BLOC_SCHEMA.fields
-        + [
-            T.StructField("is_begin", T.BooleanType(), True),
-            T.StructField("is_last", T.BooleanType(), True),
-        ]
-    )
-
-    def predict(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                yield pdf[cols].assign(
-                    is_begin=pd.Series(dtype=bool), is_last=pd.Series(dtype=bool)
-                )
-                continue
-            good = ~pdf["error"].to_numpy()
-            out = {}
-            for out_col, rf in models.items():
-                # error blocs keep None (like classify_forest's label=None)
-                # so "unknown" stays distinguishable from a confident False
-                vals = np.full(len(pdf), None, dtype=object)
-                if good.any():
-                    vals[good] = rf.predict(_feature_matrix(pdf[good])) == "True"
-                out[out_col] = vals
-            yield pdf[cols].assign(**out)
-
-    return feat.mapInPandas(predict, schema=out_schema)
-
-
-def classify_forest(blocs, model: RandomForest):
-    """Label blocs with the fitted forest — vectorized mapInPandas; the
-    model rides the UDF closure (broadcast once per executor)."""
-    from edspdf_spark.operators.features import with_layout_features
-    from edspdf_spark.schemas import BLOC_SCHEMA
-    from pyspark.sql import functions as F
-
-    feat = with_layout_features(blocs)
-    cols = [f.name for f in BLOC_SCHEMA.fields]
-
-    def predict(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                yield pdf[cols]
-                continue
-            good = ~pdf["error"].to_numpy()
-            labels = np.asarray(pdf["label"], dtype=object)
-            if good.any():
-                labels[good] = model.predict(_feature_matrix(pdf[good]))
-            yield pdf.assign(label=labels)[cols]
-
-    return feat.mapInPandas(predict, schema=BLOC_SCHEMA)

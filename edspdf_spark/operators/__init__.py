@@ -9,12 +9,10 @@ from edspdf_spark.operators.extract_html import (
     sections_to_markdown,
 )
 from edspdf_spark.operators.classify import (
-    align_labels,
     classify_mask,
     simple_mask_classifier,
     classify_dummy,
-    classify_random,
-    masks_df,
+    classify_random_hash,
 )
 from edspdf_spark.operators.aggregate import aggregate_simple, aggregate_markdown
 from edspdf_spark.operators.align import (
@@ -27,10 +25,8 @@ from edspdf_spark.operators.fused import run_pipeline_fused
 from edspdf_spark.operators.order import (
     pairwise_order_features,
     train_order_following,
-    order_followings,
     append_following_to_labels,
     train_order_rank,
-    score_order_rank,
 )
 from edspdf_spark.operators.merge import merge_boxes
 from edspdf_spark.operators.features import with_layout_features, FEATURE_COLS
@@ -44,12 +40,10 @@ __all__ = [
     "extract_sections",
     "sections_to_markdown",
     "extract_tables",
-    "align_labels",
     "classify_mask",
     "simple_mask_classifier",
     "classify_dummy",
-    "classify_random",
-    "masks_df",
+    "classify_random_hash",
     "aggregate_simple",
     "aggregate_markdown",
     "align_bioul",
@@ -60,10 +54,8 @@ __all__ = [
     "run_pipeline_fused",
     "pairwise_order_features",
     "train_order_following",
-    "order_followings",
     "append_following_to_labels",
     "train_order_rank",
-    "score_order_rank",
     "with_layout_features",
     "FEATURE_COLS",
 ]

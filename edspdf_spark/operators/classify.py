@@ -1,163 +1,53 @@
-"""Bloc classifiers P3 (mask), P4 (dummy), P5 (random), P8 (forest).
+"""Bloc classifiers P3 (mask), P4 (dummy), P5 (random).
 
 The mask classifier / label alignment (reference
 ``edspdf/pipes/classifiers/mask.py:182-224`` over the NumPy kernel
-``edspdf/utils/alignment.py:14-112``) is re-expressed as a PURE DataFrame
-plan — broadcast join + window argmax — with no UDF at all:
-
-    blocs × broadcast(masks ∪ catch-alls)      (no shuffle of the big side)
-      → overlap/ratio column expressions        (whole-stage codegen)
-      → row_number() over (score DESC, rank ASC) == 1   (argmax, first-wins)
-
-``np.argmax`` picks the FIRST maximal index (alignment.py:55-56), hence the
-``rank ASC`` tie-break; the pollution catch-all ranks last (mask.py:204-212).
-At scale the masks side is a handful of rows — Spark broadcasts it, so the
-only shuffle in this stage is the window's hash partition by (url, page,
-bloc), which AQE coalesces; when the classifier directly follows the extract
-UDF the partitioning by url is already compatible.
+``edspdf/utils/alignment.py:14-112``) takes a literal mask list and is
+re-expressed as ONE Project of column expressions — no UDF, no join, no
+shuffle: per-mask overlap scores, ``greatest(...)`` for the max, and a
+first-match when-chain for the label. ``np.argmax`` picks the FIRST
+maximal index (alignment.py:55-56), so the chain runs in insertion order;
+the pollution catch-all ranks after the user masks (mask.py:204-212).
+Per-page annotation boxes are aligned by ``operators/align.py`` instead.
 """
 
 from __future__ import annotations
 
-import hashlib
-from typing import Dict, Iterator, List, Optional, Sequence, Tuple, Union
+from typing import Dict, List, Optional, Sequence, Tuple, Union
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from edspdf_spark.schemas import BLOC_SCHEMA, MASK_SCHEMA
+from edspdf_spark.schemas import BLOC_SCHEMA
 
 ALIGN_INF = 100000.0  # reference utils/alignment.py:9
 MASK_INF = 10000.0  # reference pipes/classifiers/mask.py:205-211
 
-_BLOC_KEY = ["url", "page_num", "bloc_ord"]
+Mask = Tuple[Optional[str], float, float, float, float]
 
 
-def masks_df(
-    spark: SparkSession,
-    masks: Sequence[Tuple[Optional[str], float, float, float, float]],
-    page_nums: Optional[Sequence[Optional[int]]] = None,
-) -> DataFrame:
-    """Build the broadcast-side masks table; rank = insertion order."""
-    rows = []
-    for i, m in enumerate(masks):
-        label, x0, y0, x1, y1 = m
-        page = page_nums[i] if page_nums is not None else None
-        rows.append((label, float(x0), float(y0), float(x1), float(y1), page, i))
-    return spark.createDataFrame(rows, MASK_SCHEMA)
-
-
-def align_labels(
-    blocs: DataFrame,
-    masks: DataFrame,
-    threshold: float = 0.0001,
-    pollution_label: Optional[str] = None,
-) -> DataFrame:
-    """A1 ``align_box_labels`` (alignment.py:14-112) as a DataFrame plan.
-
-    Appends the implicit catch-all src box ``(-1e5..1e5)`` labeled
-    ``pollution_label`` AFTER all user masks (alignment.py:28-34), scores
-    every (bloc, mask) pair by covered-src-ratio with the covered-dst-ratio
-    threshold gate, and keeps the argmax with first-mask-wins ties.
-
-    Faithful edge case: a dst page with ZERO real (non-catch-all) source
-    candidates drops its blocs entirely (alignment.py:20-21 returns [] when
-    src_boxes is empty — the catch-all is only appended afterwards).
-
-    Error-sentinel rows bypass the join and come back untouched.
-    """
-    spark = blocs.sparkSession
-    n_masks = masks.agg(F.max("rank")).first()[0]
-    n_masks = -1 if n_masks is None else n_masks
-    catchall = spark.createDataFrame(
-        [(pollution_label, -ALIGN_INF, -ALIGN_INF, ALIGN_INF, ALIGN_INF, None, n_masks + 1)],
-        MASK_SCHEMA,
-    )
-    src = masks.unionByName(catchall).select(
-        F.col("label").alias("m_label"),
-        F.col("x0").alias("m_x0"),
-        F.col("y0").alias("m_y0"),
-        F.col("x1").alias("m_x1"),
-        F.col("y1").alias("m_y1"),
-        F.col("page_num").alias("m_page"),
-        F.col("rank").alias("m_rank"),
-        (F.col("rank") > n_masks).alias("m_is_catchall"),
-    )
-
-    good = blocs.filter(~F.col("error"))
-    err = blocs.filter(F.col("error"))
-
-    page_cond = (
-        F.col("m_page").isNull()
-        | F.col("page_num").isNull()
-        | (F.col("m_page") == F.col("page_num"))
-    )
-    joined = good.join(F.broadcast(src), on=page_cond, how="inner")
-
-    dx = F.least("m_x1", "x1") - F.greatest("m_x0", "x0")
-    dy = F.least("m_y1", "y1") - F.greatest("m_y0", "y0")
-    overlap = F.greatest(dx, F.lit(0.0)) * F.greatest(dy, F.lit(0.0))
-    src_area_raw = (F.col("m_x1") - F.col("m_x0")) * (F.col("m_y1") - F.col("m_y0"))
-    dst_area_raw = (F.col("x1") - F.col("x0")) * (F.col("y1") - F.col("y0"))
-    src_area = F.when(src_area_raw == 0.0, F.lit(1.0)).otherwise(src_area_raw)
-    dst_area = F.when(dst_area_raw == 0.0, F.lit(1.0)).otherwise(dst_area_raw)
-    score = F.when(overlap / dst_area < F.lit(float(threshold)), F.lit(0.0)).otherwise(
-        overlap / src_area
-    )
-
-    scored = joined.withColumn("m_score", score)
-
-    w = Window.partitionBy(*_BLOC_KEY)
-    ranked = (
-        scored.withColumn(
-            "m_rn",
-            F.row_number().over(w.orderBy(F.col("m_score").desc(), F.col("m_rank").asc())),
-        )
-        .withColumn(
-            "m_n_real",
-            F.sum(F.when(F.col("m_is_catchall"), 0).otherwise(1)).over(w),
-        )
-        .filter((F.col("m_rn") == 1) & (F.col("m_n_real") > 0))
-    )
-
-    out_cols = [f.name for f in BLOC_SCHEMA.fields]
-    labeled = ranked.select(
-        *[F.col(c) for c in out_cols if c != "label"],
-        F.col("m_label").alias("label"),
-    ).select(*out_cols)
-    return labeled.unionByName(err.select(*out_cols))
-
-
-def _align_labels_expr(
-    blocs: DataFrame,
-    stack: List[Tuple[Optional[str], float, float, float, float, Optional[int], int, bool]],
-    threshold: float,
-) -> DataFrame:
+def _align_labels_expr(blocs: DataFrame, stack: List[Mask], threshold: float) -> DataFrame:
     """A1 alignment for a LITERAL mask stack as pure column expressions.
 
-    When the masks are known driver-side (the overwhelmingly common case:
-    a handful of rectangles), the broadcast join + window argmax collapses
-    to one Project: per-mask scores (invalid wrong-page entries pinned to a
-    ``-1`` sentinel below every real score), ``greatest(...)`` for the max,
-    and a first-match when-chain ``score_i == max`` for the label — exactly
-    ``np.argmax`` first-wins (alignment.py:55-56). ZERO shuffles, no union
-    for the error rows, every expression codegen'd, and each score
-    subexpression appears a constant number of times. (Two earlier
+    The masks are known driver-side (a handful of rectangles), so the
+    argmax is one Project: per-mask scores, ``greatest(...)`` for the max,
+    and a first-match when-chain ``score_i == max`` for the label —
+    exactly ``np.argmax`` first-wins (alignment.py:55-56). ZERO shuffles,
+    no union for the error rows, every expression codegen'd, and each
+    score subexpression appears a constant number of times. (Two earlier
     formulations were ~10× slower on 600k blocs: a struct-array
     ``array_min`` evaluates interpreted, and an iterative
     ``when(score > best_score)`` fold re-inlines the whole accumulated
     tree per step — exponential expression size.)
 
-    ``stack`` entries: (label, x0, y0, x1, y1, page_num, rank, is_real).
+    ``stack`` entries: (label, x0, y0, x1, y1), in rank order.
     """
     dst_raw = (F.col("x1") - F.col("x0")) * (F.col("y1") - F.col("y0"))
     dst_area = F.when(dst_raw == 0.0, F.lit(1.0)).otherwise(dst_raw)
 
     scores = []
-    n_real = F.lit(0)
-    for label, mx0, my0, mx1, my1, mpage, rank, is_real in stack:
+    for label, mx0, my0, mx1, my1 in stack:
         dx = F.least(F.lit(float(mx1)), F.col("x1")) - F.greatest(
             F.lit(float(mx0)), F.col("x0")
         )
@@ -170,60 +60,31 @@ def _align_labels_expr(
         score = F.when(
             overlap / dst_area < F.lit(float(threshold)), F.lit(0.0)
         ).otherwise(overlap / F.lit(float(src_area)))
-        if mpage is None:
-            valid = None
-        else:
-            valid = F.col("page_num").isNull() | (F.col("page_num") == int(mpage))
-            score = F.when(valid, score).otherwise(F.lit(-1.0))
         scores.append((score, label))
-        if is_real:
-            n_real = n_real + (F.when(valid, 1).otherwise(0) if valid is not None else F.lit(1))
 
-    mx = F.greatest(*[s for s, _ in scores]) if len(scores) > 1 else scores[0][0]
+    mx = F.greatest(*[s for s, _ in scores])
     best_label = F.lit(None).cast("string")
     for score, label in reversed(scores):
         best_label = F.when(score == mx, F.lit(label).cast("string")).otherwise(best_label)
 
     out_cols = [f.name for f in BLOC_SCHEMA.fields]
-    return (
-        blocs.filter(F.col("error") | (n_real > 0))
-        .withColumn(
-            "label",
-            F.when(F.col("error"), F.col("label")).otherwise(best_label),
-        )
-        .select(*out_cols)
-    )
+    return blocs.withColumn(
+        "label", F.when(F.col("error"), F.col("label")).otherwise(best_label)
+    ).select(*out_cols)
 
 
-def classify_mask(
-    blocs: DataFrame,
-    masks: Union[DataFrame, Sequence[Tuple[Optional[str], float, float, float, float]]],
-    threshold: float = 1.0,
-) -> DataFrame:
+def classify_mask(blocs: DataFrame, masks: Sequence[Mask], threshold: float = 1.0) -> DataFrame:
     """P3 MaskClassifier (mask.py:182-224): user masks + a ``pollution``
     catch-all box (±1e4) appended last, then A1 alignment (whose own ±1e5
     null-label catch-all ranks after pollution, exactly as in the
-    reference's double-catch-all stack).
-
-    Literal mask lists take the zero-shuffle expression path
-    (:func:`_align_labels_expr`); DataFrame masks keep the broadcast-join +
-    window plan (:func:`align_labels`)."""
-    spark = blocs.sparkSession
-    if not isinstance(masks, DataFrame):
-        n = len(masks)
-        stack = [
-            (label, x0, y0, x1, y1, None, i, True)
-            for i, (label, x0, y0, x1, y1) in enumerate(masks)
-        ]
-        stack.append(("pollution", -MASK_INF, -MASK_INF, MASK_INF, MASK_INF, None, n, True))
-        stack.append((None, -ALIGN_INF, -ALIGN_INF, ALIGN_INF, ALIGN_INF, None, n + 1, False))
-        return _align_labels_expr(blocs, stack, threshold)
-    n = masks.agg(F.count("*")).first()[0]
-    pollution = spark.createDataFrame(
-        [("pollution", -MASK_INF, -MASK_INF, MASK_INF, MASK_INF, None, int(n))],
-        MASK_SCHEMA,
-    )
-    return align_labels(blocs, masks.unionByName(pollution), threshold=threshold)
+    reference's double-catch-all stack). Error-sentinel rows keep their
+    label."""
+    stack = [
+        *masks,
+        ("pollution", -MASK_INF, -MASK_INF, MASK_INF, MASK_INF),
+        (None, -ALIGN_INF, -ALIGN_INF, ALIGN_INF, ALIGN_INF),
+    ]
+    return _align_labels_expr(blocs, stack, threshold)
 
 
 def simple_mask_classifier(
@@ -240,71 +101,18 @@ def classify_dummy(blocs: DataFrame, label: str) -> DataFrame:
     )
 
 
-def classify_random(
-    blocs: DataFrame,
-    labels: Union[List[str], Dict[str, float]],
-    seed: int = 0,
-) -> DataFrame:
-    """P5 RandomClassifier (random.py:8-51), distributed-deterministic.
-
-    The reference draws from ONE stateful generator across documents in
-    iteration order — meaningless under distribution. We keep the exact
-    per-document draw semantics (one ``rng.choice(labels, p, size=n_lines)``
-    array per doc) but seed per document: ``default_rng((seed,
-    sha256(url)))``, so results are independent of partitioning and doc
-    order. Documented deviation; same label marginals.
-    """
-    from pyspark.sql.functions import asc_nulls_last
-
-    from edspdf_spark.operators.grouped import group_bounds, map_url_groups
-
-    if isinstance(labels, list):
-        labels = {c: 1.0 for c in labels}
-    total = sum(labels.values())
-    names = list(labels.keys())
-    probs = [w / total for w in labels.values()]
-    cols = [f.name for f in BLOC_SCHEMA.fields]
-
-    def flush(pdf: pd.DataFrame) -> pd.DataFrame:
-        urls = pdf["url"].to_numpy()
-        starts, ends = group_bounds(urls)
-        mask_err = pdf["error"].to_numpy()
-        lab = np.asarray(pdf["label"], dtype=object)
-        for s, e in zip(starts, ends):
-            doc_seed = int.from_bytes(
-                hashlib.sha256(str(urls[s]).encode()).digest()[:8], "big"
-            )
-            rng = np.random.default_rng((seed, doc_seed))
-            good = ~mask_err[s:e]
-            draw = rng.choice(names, p=probs, size=int(good.sum()))
-            seg = lab[s:e]
-            seg[good] = draw
-            lab[s:e] = seg
-        return pdf.assign(label=lab)[cols]
-
-    # streaming sorted-partition form (operators/grouped.py) instead of
-    # groupBy.applyInPandas — the per-doc generator still sees one whole
-    # document at a time (groups never split across flushes); nulls-last
-    # ordering matches the previous pandas sort_values (NaN last), so the
-    # draw→row assignment is unchanged
-    return map_url_groups(
-        blocs,
-        flush,
-        BLOC_SCHEMA,
-        order_cols=(asc_nulls_last("page_num"), asc_nulls_last("bloc_ord")),
-    )
-
-
 def classify_random_hash(
     blocs: DataFrame,
     labels: Union[List[str], Dict[str, float]],
     salt: int = 0,
 ) -> DataFrame:
-    """P5 RandomClassifier, hash-draw variant (random.py:8-51 semantics:
-    one categorical draw per line from the label distribution).
+    """P5 RandomClassifier (random.py:8-51 semantics: one categorical
+    draw per line from the label distribution).
 
-    The draw is ``md5(url:page:ord:salt)``'s first 32 bits mapped through
-    the cumulative distribution — a counter-based RNG in the Philox spirit
+    The reference draws from ONE stateful generator across documents in
+    iteration order — meaningless under distribution. Here the draw is
+    ``md5(url:page:ord:salt)``'s first 32 bits mapped through the
+    cumulative distribution — a counter-based RNG in the Philox spirit
     but built from engine built-ins only. Unlike a stateful generator it
     is **stable under retries, partitioning and speculative execution**
     (the draw depends only on the row key), which is the property that

@@ -26,10 +26,11 @@ record): a url in two rows gets one aggregate set per row, where the
 composed ``aggregate_simple`` merges both rows' lines. An error document
 emits no aggregate row; the metrics face counts it.
 
-Limitations vs the composed path: masks must be a literal page-agnostic
-list (the standard case — reference ``simple_mask_classifier_factory``,
-``pipes/classifiers/mask.py:69-82``); for DataFrame masks, per-page masks
-or the forest classifier, compose the stage operators instead.
+Limitations vs the composed path: it runs the mask classifier only —
+a literal page-agnostic list, the one form ``classify_mask`` takes
+(reference ``simple_mask_classifier_factory``,
+``pipes/classifiers/mask.py:69-82``); for the forest or other heads,
+compose the stage operators instead.
 """
 
 from __future__ import annotations

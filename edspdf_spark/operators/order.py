@@ -13,7 +13,11 @@ CONTRACT is covered deterministically by the ``Box.__lt__`` sort in P1);
 this module claims the relational half: the pairwise feature generation as
 a pure DataFrame plan — a self-join on (url, page_num) plus 18 codegen'd
 column expressions, no UDF — with a pluggable ``scorer`` hook where a
-broadcast model (Pandas UDF) would slot in.
+broadcast model (Pandas UDF) would slot in. The P10/P11 heads train here
+(``train_order_following``, ``train_order_rank``) and serve through
+:mod:`edspdf_spark.ml.compiled` (``compile_proba_forest`` →
+``order_followings_compiled``, ``compile_reg_forest`` →
+``score_order_rank_compiled``).
 
 Faithfulness notes (semantics mirrored verbatim, quirks included):
 
@@ -181,56 +185,12 @@ def train_order_following(
     return model
 
 
-def score_order_pairs(feats: DataFrame, model) -> DataFrame:
-    """Add a ``score`` column (P(follow)) to a pairwise-feature frame —
-    vectorized mapInPandas; the forest rides the closure (broadcast once
-    per executor). This is the pluggable ``scorer`` slot of
-    :func:`pairwise_order_features` made concrete."""
-    import pandas as pd
-    import pyspark.sql.types as T
-
-    cols = ["url", "page_num", "ord_i", "ord_j", *ORDER_FEATURE_COLS]
-    schema = T.StructType.fromDDL(
-        "url string, page_num int, ord_i int, ord_j int, score double"
-    )
-    f_idx = model.classes_.index(_FOLLOW)
-
-    def score(batches):
-        for pdf in batches:
-            out = pdf[["url", "page_num", "ord_i", "ord_j"]]
-            if not len(pdf):
-                yield out.assign(score=pd.Series(dtype="float64"))
-                continue
-            proba = model.predict_proba(pdf[ORDER_FEATURE_COLS].to_numpy("float64"))
-            yield out.assign(score=proba[:, f_idx])
-
-    return feats.select(*cols).mapInPandas(score, schema=schema)
-
-
-def order_followings(blocs: DataFrame, model) -> DataFrame:
-    """P10 serving: per line i, the predicted following line
-    ``follow_ord = argmax_j score(i, j)`` (reference ``forward``'s
-    ``scores.argmax(-1)``, ``trainable_order_ba.py:434-443``). Ties break
-    to the SMALLEST ``ord_j`` — torch ``argmax`` returns the first maximal
-    index and j is tensor-ordered by line rank.
-
-    Plan: one co-partitioned self-join (the pairwise features), one
-    vectorized scoring stage, one ``max_by`` aggregation (partial
-    map-side) — no per-group pandas, no driver collect. The per-page pair
-    blowup stays O(lines²) strictly within a page."""
-    scored = score_order_pairs(pairwise_order_features(blocs), model)
-    return scored.groupBy("url", "page_num", "ord_i").agg(
-        F.max_by(
-            "ord_j", F.struct(F.col("score"), (-F.col("ord_j")).alias("neg_j"))
-        ).alias("follow_ord"),
-        F.max("score").alias("follow_score"),
-    )
-
-
 def append_following_to_labels(composite_blocs: DataFrame, follows: DataFrame) -> DataFrame:
     """Reference ``postprocess`` parity (``trainable_order_ba.py:443-466``):
     extend the ``label|node|rank`` composite (A4) with ``|follow_ord``,
-    ``-1`` when no prediction exists. One co-partitioned left join."""
+    ``-1`` when no prediction exists. ``follows`` is
+    ``order_followings_compiled``'s ``(url, page_num, ord_i, follow_ord)``.
+    One co-partitioned left join."""
     f = follows.select(
         "url", "page_num", F.col("ord_i").alias("bloc_ord"), "follow_ord"
     )
@@ -282,42 +242,3 @@ def train_order_rank(
     model = RegressionForest(seed=seed, **forest_kw)
     model.fit(pdf[FEATURE_COLS].to_numpy(dtype="float64"), pdf["rank_frac"])
     return model
-
-
-def score_order_rank(blocs: DataFrame, model) -> DataFrame:
-    """P11 serving: add ``rank_score`` (the regressed normalized order) and
-    ``pred_rank`` (its per-page dense ordering, ties broken by the P1
-    order so the output is deterministic). The reference appends the raw
-    score to body-line labels (``trainable_order_num.py:377-397``); the
-    engine exposes it as typed columns instead."""
-    import pandas as pd
-    import pyspark.sql.types as T
-
-    from edspdf_spark.operators.features import FEATURE_COLS, with_layout_features
-    from edspdf_spark.schemas import BLOC_SCHEMA
-    from pyspark.sql import Window
-
-    feat = with_layout_features(blocs)
-    cols = [f.name for f in BLOC_SCHEMA.fields]
-    schema = T.StructType(
-        BLOC_SCHEMA.fields + [T.StructField("rank_score", T.DoubleType(), True)]
-    )
-
-    def predict(batches):
-        for pdf in batches:
-            if not len(pdf):
-                yield pdf[cols].assign(rank_score=pd.Series(dtype="float64"))
-                continue
-            good = ~pdf["error"].to_numpy()
-            scores = pd.Series([None] * len(pdf), dtype="object")
-            if good.any():
-                scores[good] = model.predict(
-                    pdf.loc[good, FEATURE_COLS].to_numpy("float64")
-                )
-            yield pdf[cols].assign(rank_score=scores.astype("float64"))
-
-    scored = feat.mapInPandas(predict, schema=schema)
-    w = Window.partitionBy("url", "page_num").orderBy(
-        F.col("rank_score").asc_nulls_last(), F.col("bloc_ord").asc()
-    )
-    return scored.withColumn("pred_rank", F.row_number().over(w) - F.lit(1))

@@ -59,9 +59,9 @@ def _dummy_classifier(df: DataFrame, label: str = "body", **_):
 
 
 def _random_classifier(df: DataFrame, labels=None, seed: int = 0, **_):
-    from edspdf_spark.operators.classify import classify_random
+    from edspdf_spark.operators.classify import classify_random_hash
 
-    return classify_random(df, labels or ["body", "pollution"], seed=seed)
+    return classify_random_hash(df, labels or ["body", "pollution"], salt=seed)
 
 
 def _simple_aggregator(

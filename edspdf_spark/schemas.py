@@ -80,22 +80,6 @@ AGG_SCHEMA = T.StructType(
     ]
 )
 
-# masks: classifier configuration table (broadcast side of the overlap join).
-#   rank encodes insertion order — the argmax tie-break (np.argmax returns the
-#   first maximal index, reference utils/alignment.py:55-56); the pollution
-#   catch-all is appended last (mask.py:204-212).
-MASK_SCHEMA = T.StructType(
-    [
-        T.StructField("label", T.StringType(), True),
-        T.StructField("x0", T.DoubleType(), False),
-        T.StructField("y0", T.DoubleType(), False),
-        T.StructField("x1", T.DoubleType(), False),
-        T.StructField("y1", T.DoubleType(), False),
-        T.StructField("page_num", T.IntegerType(), True),
-        T.StructField("rank", T.IntegerType(), False),
-    ]
-)
-
 # metrics: per-partition lineage sink (custom — the reference has none,
 # SURVEY.md §4 "Lineage/metrics").
 METRICS_SCHEMA = T.StructType(

@@ -11,8 +11,7 @@ import pytest
 from edspdf_spark.operators.classify import (
     classify_dummy,
     classify_mask,
-    classify_random,
-    masks_df,
+    classify_random_hash,
     simple_mask_classifier,
 )
 
@@ -40,13 +39,6 @@ def test_multi_page_page_agnostic_masks(spark, multi_page_blocs):
     # page-agnostic masks apply on every page (reference test_align.py)
     out = simple_mask_classifier(multi_page_blocs, 0, 0.5, 0.5, 1, threshold=0.4)
     assert labels_of(out) == ["pollution", "body", "body"] * 2
-
-
-def test_page_scoped_mask(spark, multi_page_blocs):
-    # a mask pinned to page 0 must not label page 1
-    m = masks_df(spark, [("body", 0.0, 0.5, 0.5, 1.0)], page_nums=[0])
-    out = classify_mask(multi_page_blocs, m, threshold=0.4)
-    assert labels_of(out) == ["pollution", "body", "body"] + ["pollution"] * 3
 
 
 def test_mask_tie_breaks_to_first_mask(spark, single_page_blocs):
@@ -90,12 +82,12 @@ def test_dummy(spark, single_page_blocs):
 
 
 def test_random_deterministic(spark, single_page_blocs):
-    out1 = labels_of(classify_random(single_page_blocs, ["a", "b"], seed=7))
-    out2 = labels_of(classify_random(single_page_blocs, ["a", "b"], seed=7))
+    out1 = labels_of(classify_random_hash(single_page_blocs, ["a", "b"], salt=7))
+    out2 = labels_of(classify_random_hash(single_page_blocs, ["a", "b"], salt=7))
     assert out1 == out2
     assert set(out1) <= {"a", "b"}
 
 
 def test_random_weighted_all_one_label(spark, single_page_blocs):
-    out = labels_of(classify_random(single_page_blocs, {"only": 1.0}, seed=0))
+    out = labels_of(classify_random_hash(single_page_blocs, {"only": 1.0}, salt=0))
     assert out == ["only"] * 3

@@ -1,5 +1,6 @@
-"""Quantized compiled serve twins (ml/compiled.py): determinism,
-float↔int consistency, DuckDB CASE-tree parity, hash-draw P5."""
+"""Quantized compiled serve path (ml/compiled.py): determinism,
+float↔int consistency, DuckDB CASE-tree parity (NULL routing included),
+hash-draw P5."""
 
 from __future__ import annotations
 
@@ -54,6 +55,38 @@ def test_compiled_tracks_float_forest_closely():
     assert (soft == hard).mean() >= 0.95
 
 
+def _null_trained(fit):
+    """Fit on the fixture with ``f_n_chars`` NULL on every row (as on
+    blocs with NULL text), so some nodes learn a NaN threshold."""
+    df = C.fixture_blocs()
+    X = C._fixture_features(df)
+    X[:, 9] = np.nan
+    model = fit(df, X)
+    assert any(np.isnan(t["threshold"][t["feature"] >= 0]).any() for t in model.trees)
+    return model
+
+
+def null_trained_types():
+    from edspdf_spark.ml.forest import RandomForest
+
+    return C.compile_class_forest(
+        _null_trained(
+            lambda df, X: RandomForest(seed=42, n_trees=4, max_depth=6).fit(X, C._type_labels(df))
+        )
+    )
+
+
+def null_trained_rank():
+    from edspdf_spark.ml.forest import RegressionForest
+
+    def fit(df, X):
+        n_page = df.groupby(["url", "page_num"])["bloc_ord"].transform("count")
+        target = df["bloc_ord"].to_numpy(np.float64) / n_page.to_numpy(np.float64)
+        return RegressionForest(seed=42, n_trees=4, max_depth=6).fit(X, target)
+
+    return C.compile_reg_forest(_null_trained(fit))
+
+
 @pytest.mark.parametrize(
     "factory,kind",
     [
@@ -61,34 +94,50 @@ def test_compiled_tracks_float_forest_closely():
         (C.fixture_forest_types, "class"),
         (C.fixture_forest_following, "value"),
         (C.fixture_forest_rank, "value"),
+        (null_trained_types, "class"),
+        (null_trained_rank, "value"),
     ],
 )
 def test_duckdb_case_tree_parity(factory, kind):
-    """The SQL compilation of each fixture forest reproduces the NumPy
-    serve exactly on a synthetic micro-grid feature frame (engine-level
-    parity without Spark; the Spark side is driver-oracle-checked)."""
+    """The SQL compilation of each forest reproduces the NumPy serve
+    exactly on a synthetic feature frame (engine-level parity without
+    Spark; the Spark side is driver-oracle-checked). Both sides quantize
+    the float features themselves — the serve with :func:`C.quantize`,
+    DuckDB with ``micro_sql`` — and the frame carries NULL features
+    (NaN in pandas, NULL once scanned by DuckDB): both must route them
+    right. The ``null_trained_*`` forests add NaN thresholds."""
     cf = factory()
     n_feat = int(max(t.feature.max() for t in cf.trees)) + 1
     rng = np.random.default_rng(7)
     # span the thresholds' range so both branches of most nodes are hit
     thr_all = np.concatenate([t.thr[t.feature >= 0] for t in cf.trees])
     lo, hi = int(thr_all.min()) - 5, int(thr_all.max()) + 5
-    Xm = rng.integers(lo, hi, size=(500, max(n_feat, 1)), dtype=np.int64)
-    pdf = pd.DataFrame({f"m{i}": Xm[:, i] for i in range(Xm.shape[1])})
+    width = max(n_feat, 1)
+    X = rng.integers(lo, hi, size=(700, width), dtype=np.int64) / C.MICRO
+    # rows 500+: NULL features, from one NULL cell per row to all-NULL rows
+    null = rng.uniform(size=(200, width)) < np.linspace(0.0, 1.0, 200)[:, None]
+    null[np.arange(200), np.arange(200) % width] = True
+    X[500:][null] = np.nan
+    pdf = pd.DataFrame({f"f{i}": X[:, i] for i in range(width)})
     con = duckdb.connect()
-    con.register("fm", pdf)
-    feat = [f"m{i}" for i in range(Xm.shape[1])]
+    con.register("fx", pdf)
+    feat = [f"m{i}" for i in range(width)]
+    ms = ", ".join(f"{C.micro_sql(f'f{i}')} AS m{i}" for i in range(width))
+    fm = f"(SELECT {ms} FROM fx)"
+    Xm = C.quantize(X)
     if kind == "class":
         ts = ", ".join(f"{C.tree_sql(t, feat)} AS t{k}" for k, t in enumerate(cf.trees))
         vote = C.vote_label_sql(cf, [f"t{k}" for k in range(len(cf.trees))])
-        got = con.execute(f"SELECT {vote} AS r FROM (SELECT {ts} FROM fm) tv").df()["r"]
+        got = con.execute(f"SELECT {vote} AS r FROM (SELECT {ts} FROM {fm}) tv").df()["r"]
         want = C.predict_label(cf, Xm)
     else:
         got = con.execute(
-            f"SELECT CAST({C.value_sum_sql(cf, feat)} AS BIGINT) AS r FROM fm"
+            f"SELECT CAST({C.value_sum_sql(cf, feat)} AS BIGINT) AS r FROM {fm}"
         ).df()["r"]
         want = C.predict_value_sum(cf, Xm)
     assert (got.to_numpy() == want).all()
+    # the finite rows round-trip the quantizer onto their micro ints
+    assert (Xm[:500] == np.rint(X[:500] * C.MICRO)).all()
 
 
 def test_begin_last_majority_rule_sql_parity():

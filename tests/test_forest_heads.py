@@ -7,6 +7,10 @@ Like the reference's training smoke test (``tests/recipes/test_train.py``),
 the assertion is an agreement metric against the distant-supervision truth:
 the layout features fully determine the truth labels here (both derive from
 the bloc geometry), so a working forest must reach high train-set agreement.
+Each head is served the production way: ``train_*`` → ``compile_*`` →
+``*_compiled``. The lineitem blocs have NULL ``text``, so ``f_n_chars`` is
+NULL on every row — the compiled serve must route it as the float forest
+does.
 """
 
 from __future__ import annotations
@@ -15,14 +19,19 @@ import pytest
 from pyspark.sql import functions as F
 
 from edspdf_spark.entry_queries import _ALIGN_THRESHOLD, blocs_from_lineitem, src_boxes_for
+from edspdf_spark.ml.compiled import (
+    classify_begin_last_compiled,
+    classify_forest_compiled,
+    compile_class_forest,
+)
 from edspdf_spark.ml.forest import (
     TRAIN_MAX_ROWS,
-    classify_begin_last,
-    classify_forest,
+    _feature_matrix,
     train_begin_last,
     train_forest_on_types,
 )
 from edspdf_spark.operators.align import align_bioul, align_plain
+from edspdf_spark.operators.features import FEATURE_COLS, with_layout_features
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -40,7 +49,7 @@ def src(spark, blocs):
 def test_type_forest_agreement(spark, blocs, src):
     truth = align_plain(blocs, src, threshold=_ALIGN_THRESHOLD, pollution_label="pollution")
     model = train_forest_on_types(truth, seed=42, n_trees=8, max_depth=8)
-    pred = classify_forest(blocs, model).select("url", "page_num", "bloc_ord", "label")
+    pred = classify_forest_compiled(blocs, compile_class_forest(model))
     t = truth.select("url", "page_num", "bloc_ord", F.col("label").alias("t_label"))
     joined = pred.join(t, ["url", "page_num", "bloc_ord"]).cache()
     n = joined.count()
@@ -53,13 +62,17 @@ def test_type_forest_agreement(spark, blocs, src):
     assert pred_labels <= {"title", "text", "table", "list", "pollution"}
 
 
-def test_begin_last_forest_agreement(spark, blocs, src):
+@pytest.fixture(scope="module")
+def begin_last(spark, blocs, src):
     truth = align_bioul(blocs, src, threshold=_ALIGN_THRESHOLD)
-    models = train_begin_last(truth, seed=42, n_trees=8, max_depth=8)
+    return truth, train_begin_last(truth, seed=42, n_trees=8, max_depth=8)
+
+
+def test_begin_last_forest_agreement(spark, blocs, begin_last):
+    truth, models = begin_last
     assert set(models) == {"is_begin", "is_last"}
-    pred = classify_begin_last(blocs, models).select(
-        "url", "page_num", "bloc_ord", "is_begin", "is_last"
-    )
+    compiled = {name: compile_class_forest(rf) for name, rf in models.items()}
+    pred = classify_begin_last_compiled(blocs, compiled)
     t = truth.select(
         "url",
         "page_num",
@@ -79,6 +92,30 @@ def test_begin_last_forest_agreement(spark, blocs, src):
     )
     assert agree_b >= base_b, f"is_begin agreement {agree_b}/{n} vs baseline {base_b}"
     assert agree_l / n > 0.5
+
+
+def test_begin_last_compiled_tracks_float_on_null_features(spark, blocs, begin_last):
+    """Every bloc here has a NULL ``f_n_chars``, and the forests learned
+    NaN thresholds from it. The float forest sends a NaN feature right and
+    every row at a NaN-threshold node right; the compiled serve must do
+    the same, so the two agree except where hard vote and soft vote
+    differ."""
+    _, models = begin_last
+    compiled = {name: compile_class_forest(rf) for name, rf in models.items()}
+    feat = with_layout_features(blocs).select("url", "page_num", "bloc_ord", *FEATURE_COLS)
+    pdf = feat.toPandas().sort_values(["url", "page_num", "bloc_ord"], ignore_index=True)
+    assert pdf["f_n_chars"].isna().all()
+    pred = (
+        classify_begin_last_compiled(blocs, compiled)
+        .toPandas()
+        .sort_values(["url", "page_num", "bloc_ord"], ignore_index=True)
+    )
+    assert len(pred) == len(pdf)
+    X = _feature_matrix(pdf)
+    for name, rf in models.items():
+        floats = rf.predict(X) == "True"
+        agree = (pred[name].to_numpy(dtype=bool) == floats).mean()
+        assert agree >= 0.95, f"{name}: compiled/float agreement {agree:.3f}"
 
 
 def test_training_sample_is_bounded(spark, blocs, src):

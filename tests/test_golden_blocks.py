@@ -187,18 +187,14 @@ def test_golden_order_is_fixed_point_for_single_column_pages(golden):
 
 
 def test_mask_classifier_on_golden_geometry(spark, golden):
-    """Literal-expression plan == broadcast-join plan on real geometry; the
-    reference's single-mask factory semantics (mask.py:69-82): top-half mask
-    labels the upper boxes body, the rest pollution."""
-    from edspdf_spark.operators.classify import classify_mask, masks_df
+    """The reference's single-mask factory semantics (mask.py:69-82) on real
+    geometry: top-half mask labels the upper boxes body, the rest
+    pollution."""
+    from edspdf_spark.operators.classify import classify_mask
 
     blocs = _blocs_df(spark, golden["pdf_blocks"], "test.pdf")
-    masks = [("body", 0.0, 0.0, 1.0, 0.5)]
-    lit_out = classify_mask(blocs, masks, threshold=0.1)
-    df_out = classify_mask(blocs, masks_df(spark, masks), threshold=0.1)
-    a = {r["bloc_ord"]: r["label"] for r in lit_out.collect()}
-    b = {r["bloc_ord"]: r["label"] for r in df_out.collect()}
-    assert a == b
+    out = classify_mask(blocs, [("body", 0.0, 0.0, 1.0, 0.5)], threshold=0.1)
+    a = {r["bloc_ord"]: r["label"] for r in out.collect()}
     for i, r in enumerate(golden["pdf_blocks"]):
         # the mask wins iff overlap/box_area >= threshold and covered-src
         # beats the pollution catch-all — for these axis-aligned boxes that

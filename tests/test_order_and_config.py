@@ -241,11 +241,12 @@ def _stacked_corpus(spark, n_docs=12, n_pages=2, n_lines=8):
 
 
 def test_order_following_recovers_reading_order(spark):
-    from edspdf_spark.operators.order import order_followings, train_order_following
+    from edspdf_spark.ml.compiled import compile_proba_forest, order_followings_compiled
+    from edspdf_spark.operators.order import train_order_following
 
     blocs = _stacked_corpus(spark)
     model = train_order_following(blocs, seed=42, n_trees=4, max_depth=6)
-    out = order_followings(blocs, model).collect()
+    out = order_followings_compiled(blocs, compile_proba_forest(model, "F")).collect()
     assert out, "no following predictions"
     scored = [r for r in out if r["ord_i"] < 7]  # last line's true follower
     hits = sum(1 for r in scored if r["follow_ord"] == r["ord_i"] + 1)
@@ -255,26 +256,23 @@ def test_order_following_recovers_reading_order(spark):
 def test_order_following_tie_breaks_to_smallest_j(spark):
     """Constant scorer → argmax must pick the smallest ord_j (torch argmax
     returns the first maximal index, trainable_order_ba.py:434-443)."""
-    import numpy as np
+    from edspdf_spark.ml.compiled import CompiledForest, CompiledTree, order_followings_compiled
 
-    from edspdf_spark.operators.order import order_followings
-
-    class Flat:
-        classes_ = ["F", "O"]
-
-        def predict_proba(self, X):
-            return np.full((len(X), 2), 0.5)
-
+    one_leaf = np.array([-1])
+    flat = CompiledForest(
+        trees=[CompiledTree(one_leaf, np.array([0]), one_leaf, one_leaf, np.array([500_000]))],
+        classes=None,
+    )
     blocs = _stacked_corpus(spark, n_docs=2, n_pages=1, n_lines=4)
-    out = order_followings(blocs, Flat()).collect()
+    out = order_followings_compiled(blocs, flat).collect()
     for r in out:
         expect = 0 if r["ord_i"] != 0 else 1  # smallest j != i
         assert r["follow_ord"] == expect
 
 
 def test_append_following_to_labels(spark):
+    from edspdf_spark.ml.compiled import compile_proba_forest, order_followings_compiled
     from edspdf_spark.operators.order import (
-        order_followings,
         append_following_to_labels,
         train_order_following,
     )
@@ -285,40 +283,50 @@ def test_append_following_to_labels(spark):
     composite = blocs.withColumn(
         "label", F.concat_ws("|", F.lit("body"), F.lit("0"), F.col("bloc_ord"))
     )
-    out = append_following_to_labels(composite, order_followings(blocs, model))
+    follows = order_followings_compiled(blocs, compile_proba_forest(model, "F"))
+    out = append_following_to_labels(composite, follows)
     labels = [r["label"] for r in out.collect()]
     assert all(len(l.split("|")) == 4 for l in labels)
     assert all(l.split("|")[3].lstrip("-").isdigit() for l in labels)
 
 
 def test_order_rank_regression_recovers_order(spark):
-    from edspdf_spark.operators.order import score_order_rank, train_order_rank
+    from pyspark.sql import Window
+
+    from edspdf_spark.ml.compiled import compile_reg_forest, score_order_rank_compiled
+    from edspdf_spark.operators.order import train_order_rank
 
     blocs = _stacked_corpus(spark)
     model = train_order_rank(blocs, seed=42, n_trees=4, max_depth=6)
-    out = score_order_rank(blocs, model).collect()
+    scored = score_order_rank_compiled(blocs, compile_reg_forest(model))
+    w = Window.partitionBy("url", "page_num").orderBy(
+        F.col("rank_micro").asc_nulls_last(), F.col("bloc_ord").asc()
+    )
+    out = scored.withColumn("pred_rank", F.row_number().over(w) - F.lit(1)).collect()
     assert out
-    assert all(r["rank_score"] is not None for r in out)
+    assert all(r["rank_micro"] is not None for r in out)
     hits = sum(1 for r in out if r["pred_rank"] == r["bloc_ord"])
     assert hits / len(out) >= 0.8, f"rank agreement {hits}/{len(out)}"
 
 
 def test_order_serving_plans_are_vectorized(spark):
     """Neither head may fall back to per-group pandas: following = join +
-    mapInPandas + max_by agg; rank = mapInPandas + window."""
-    from edspdf_spark.operators.order import (
-        order_followings,
-        score_order_rank,
-        train_order_following,
-        train_order_rank,
+    mapInPandas + max_by agg; rank = mapInPandas."""
+    from edspdf_spark.ml.compiled import (
+        compile_proba_forest,
+        compile_reg_forest,
+        order_followings_compiled,
+        score_order_rank_compiled,
     )
+    from edspdf_spark.operators.order import train_order_following, train_order_rank
 
     blocs = _stacked_corpus(spark, n_docs=3)
-    f_plan = order_followings(
-        blocs, train_order_following(blocs, seed=1, n_trees=2, max_depth=4)
+    follow = train_order_following(blocs, seed=1, n_trees=2, max_depth=4)
+    f_plan = order_followings_compiled(
+        blocs, compile_proba_forest(follow, "F")
     )._jdf.queryExecution().executedPlan().toString()
-    r_plan = score_order_rank(
-        blocs, train_order_rank(blocs, seed=1, n_trees=2, max_depth=4)
+    r_plan = score_order_rank_compiled(
+        blocs, compile_reg_forest(train_order_rank(blocs, seed=1, n_trees=2, max_depth=4))
     )._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" not in f_plan
     assert "FlatMapGroupsInPandas" not in r_plan

@@ -66,19 +66,6 @@ def test_filter_pushdown_reaches_scan(spark, pages_parquet):
     assert "PushedFilters: [IsNotNull(lang), EqualTo(lang,en)]" in plan
 
 
-def test_small_dim_join_broadcasts(spark):
-    """The masks-as-DataFrame path must broadcast the mask side, never
-    shuffle the blocs side."""
-    from edspdf_spark.operators import extract_blocs
-    from edspdf_spark.operators.classify import align_labels, masks_df
-
-    pages = build_pages_df(spark, 20, partitions=2)
-    blocs = extract_blocs(pages)
-    masks = masks_df(spark, [("body", 0.0, 0.0, 1.0, 0.6)])
-    labeled = align_labels(blocs, masks, threshold=0.1)
-    assert "BroadcastNestedLoopJoin" in plan_of(labeled) or "BroadcastHashJoin" in plan_of(labeled)
-
-
 def test_outline_and_sections_single_url_exchange(spark, pages_parquet):
     """extract_outline/extract_sections: the heading parse is a scan-stage
     projection; the ONLY shuffle is the (url)-keyed window for parent

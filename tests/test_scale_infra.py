@@ -117,14 +117,15 @@ def test_resumable_sink(spark, tmp_path):
 
 
 def test_forest_classifier_agrees_with_masks(spark):
-    from edspdf_spark.ml.forest import classify_forest, train_forest_on_masks
+    from edspdf_spark.ml.compiled import classify_forest_compiled, compile_class_forest
+    from edspdf_spark.ml.forest import train_forest_on_masks
     from edspdf_spark.operators import classify_mask, extract_blocs
 
     pages = build_pages_df(spark, 80, partitions=4)
     blocs = extract_blocs(pages)
     masked = classify_mask(blocs, [("body", 0.1, 0.0, 0.9, 0.5)], threshold=0.1)
     model = train_forest_on_masks(masked, n_trees=4, max_depth=6)
-    pred = classify_forest(blocs, model)
+    pred = classify_forest_compiled(blocs, compile_class_forest(model))
     joined = (
         masked.select("url", "page_num", "bloc_ord", F.col("label").alias("truth"))
         .join(pred.select("url", "page_num", "bloc_ord", "label"),

@@ -2,8 +2,8 @@
 
 * LSH hot-bucket cap: a degenerate bucket of n identical documents must
   emit O(n) (here: zero, the bucket is dropped) candidate pairs, not n²/2.
-* ``classify_random`` / ``merge_boxes`` run on the streaming
-  sorted-partition plan, not per-group pandas (no FlatMapGroupsInPandas).
+* ``merge_boxes`` runs on the streaming sorted-partition plan, not
+  per-group pandas (no FlatMapGroupsInPandas).
 * ``lsh_neardup_pairs`` ⊆ exact ``cosine_neardup_pairs`` (same scores on
   the candidates it keeps, high recall on this corpus).
 * bounded-collect guards: ``cosine_topk`` rejects oversized query sides;
@@ -58,16 +58,13 @@ def test_cap_keeps_normal_buckets(spark):
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
-def test_no_per_group_pandas_in_random_and_merge(spark, single_page_blocs):
-    from edspdf_spark.operators.classify import classify_random
+def test_no_per_group_pandas_in_merge(spark, single_page_blocs):
     from edspdf_spark.operators.merge import merge_boxes
 
-    r_plan = classify_random(single_page_blocs, ["a", "b"], seed=1)._jdf.queryExecution().executedPlan().toString()
-    m_plan = merge_boxes(single_page_blocs.withColumn("label", F.lit("x")))._jdf.queryExecution().executedPlan().toString()
-    for plan in (r_plan, m_plan):
-        assert "FlatMapGroupsInPandas" not in plan
-        assert "MapInPandas" in plan
-        assert "Sort" in plan  # JVM-side sortWithinPartitions
+    plan = merge_boxes(single_page_blocs.withColumn("label", F.lit("x")))._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" not in plan
+    assert "MapInPandas" in plan
+    assert "Sort" in plan  # JVM-side sortWithinPartitions
 
 
 @pytest.fixture(scope="module")
@@ -165,12 +162,8 @@ def test_lsh_neardup_empty_corpus_keeps_id_type(spark):
     assert out.count() == 0
 
 
-def test_begin_last_error_blocs_stay_none(spark):
-    """Error blocs must keep is_begin/is_last = NULL (unknown), not a
-    confident False — mirroring classify_forest's label=None on errors."""
-    from pyspark.sql import functions as F
-
-    from edspdf_spark.ml.forest import classify_begin_last, train_begin_last
+def _blocs_with_error_row(spark):
+    """Four good blocs of one page plus one error-sentinel bloc (``u2``)."""
     from edspdf_spark.schemas import BLOC_SCHEMA
 
     rows = [
@@ -178,15 +171,53 @@ def test_begin_last_error_blocs_stay_none(spark):
         for i in range(4)
     ]
     blocs = spark.createDataFrame(rows, BLOC_SCHEMA)
+    err_row = [("u2", None, None, None, None, None, None, None, [], None, True)]
+    return blocs, blocs.unionByName(spark.createDataFrame(err_row, BLOC_SCHEMA))
+
+
+def test_begin_last_error_blocs_stay_none(spark):
+    """Error blocs must keep is_begin/is_last = NULL (unknown), not a
+    confident False."""
+    from edspdf_spark.ml.compiled import classify_begin_last_compiled, compile_class_forest
+    from edspdf_spark.ml.forest import train_begin_last
+
+    blocs, mixed = _blocs_with_error_row(spark)
     truth = blocs.withColumn("is_begin", F.col("bloc_ord") == 0).withColumn(
         "is_last", F.col("bloc_ord") == 3
     )
-    model = train_begin_last(truth, n_trees=4, max_depth=4)
-    err_row = [("u2", None, None, None, None, None, None, None, [], None, True)]
-    mixed = blocs.unionByName(spark.createDataFrame(err_row, BLOC_SCHEMA))
-    out = classify_begin_last(mixed, model)
-    err = [r for r in out.collect() if r.error]
+    models = train_begin_last(truth, n_trees=4, max_depth=4)
+    compiled = {name: compile_class_forest(rf) for name, rf in models.items()}
+    out = classify_begin_last_compiled(mixed, compiled).collect()
+    err = [r for r in out if r.url == "u2"]
     assert len(err) == 1
     assert err[0].is_begin is None and err[0].is_last is None
-    ok = [r for r in out.collect() if not r.error]
-    assert all(r.is_begin is not None for r in ok)
+    ok = [r for r in out if r.url != "u2"]
+    assert len(ok) == 4 and all(r.is_begin is not None for r in ok)
+
+
+def test_forest_and_rank_error_blocs_stay_none(spark):
+    """The class and rank heads give an error bloc a NULL prediction too
+    (its NULL geometry would otherwise route right to some leaf)."""
+    from edspdf_spark.ml.compiled import (
+        classify_forest_compiled,
+        compile_class_forest,
+        compile_reg_forest,
+        score_order_rank_compiled,
+    )
+    from edspdf_spark.ml.forest import train_forest_on_masks
+    from edspdf_spark.operators.order import train_order_rank
+
+    blocs, mixed = _blocs_with_error_row(spark)
+    labeled = blocs.withColumn(
+        "label", F.when(F.col("bloc_ord") < 2, "top").otherwise("bottom")
+    )
+    cf = compile_class_forest(train_forest_on_masks(labeled, n_trees=2, max_depth=3, min_leaf=1))
+    rank = compile_reg_forest(train_order_rank(blocs, n_trees=2, max_depth=3, min_leaf=1))
+    for out, col in (
+        (classify_forest_compiled(mixed, cf), "label"),
+        (score_order_rank_compiled(mixed, rank), "rank_micro"),
+    ):
+        rows = {r.url + str(r.bloc_ord): r[col] for r in out.collect()}
+        assert len(rows) == 5, col
+        assert rows["u2None"] is None, col
+        assert all(v is not None for k, v in rows.items() if k != "u2None"), col
