@@ -74,6 +74,7 @@ def encode_video(
     return MAGIC_VIDEO + struct.pack(">IIII", width, height, n_frames, fps_milli) + payload
 
 
+# PNG colour type → samples per pixel (3 = palette: one index sample)
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 
 
@@ -268,7 +269,6 @@ def sample_frame_indices(
 # ---------------------------------------------------------------------------
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
-_PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}  # color type → samples/pixel
 
 
 def encode_png(arr: "np.ndarray") -> bytes:
@@ -327,7 +327,7 @@ def decode_png(data: bytes):
             break
     if width is None:
         raise ValueError("PNG without IHDR")
-    if depth != 8 or ctype not in _PNG_CHANNELS or interlace != 0:
+    if depth != 8 or ctype == 3 or ctype not in _PNG_CHANNELS or interlace != 0:
         raise ValueError(
             f"unsupported PNG (depth={depth}, color_type={ctype}, "
             f"interlace={interlace}): 8-bit non-interlaced gray/GA/RGB/RGBA only"

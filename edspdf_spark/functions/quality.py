@@ -180,19 +180,6 @@ def top_ngram_stats(
     )
 
 
-def with_top_ngrams(
-    df: DataFrame,
-    ns: Sequence[int] = (2, 3),
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Join ``top_ngram_stats`` for each ``n`` onto the frame."""
-    out = df
-    for n in ns:
-        out = out.join(top_ngram_stats(df, n, id_col, text_col), on=id_col, how="left")
-    return out
-
-
 def with_pii_signals(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Count PII matches (email / IPv4 / phone) and add an ``md5`` of the
     redacted text (each match class replaced by its ``<CLASS>`` token).

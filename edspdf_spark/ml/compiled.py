@@ -31,9 +31,8 @@ path is integer:
   each leaf's payload as a micro int and serve the **sum over trees**;
 * NULLs route as in the float forest and in SQL ``CASE WHEN NULL <= t``:
   a NULL/NaN feature goes right at every node (it quantizes to
-  :data:`NULL_MICRO`, above every threshold), and a node whose threshold
-  was learned from a NULL feature sends every row right (compiling
-  replaces it by its right child);
+  :data:`NULL_MICRO`, above every threshold; training learns only finite
+  thresholds);
 * an ``error`` bloc gets a NULL prediction.
 
 The driver oracle checks each ``*_compiled`` operator against DuckDB SQL
@@ -100,23 +99,14 @@ class CompiledForest:
 
 
 def _compile_tree(t: dict, leaf: np.ndarray) -> CompiledTree:
-    """One flat float tree → int64 form with ``leaf`` as the payload.
-
-    A NaN threshold (learned from a NULL feature) sends every row right
-    under the float rule, so its node is replaced by its right child.
-    Children sit after their parent in the flat arrays, so one pass from
-    the last node collapses chains of such nodes."""
-    feature = t["feature"].astype(np.int64)
-    thr = t["threshold"].astype(np.float64)
-    left = t["left"].astype(np.int64)
-    right = t["right"].astype(np.int64)
-    leaf = np.array(leaf, dtype=np.int64)
-    for n in np.nonzero((feature >= 0) & np.isnan(thr))[0][::-1]:
-        r = right[n]
-        feature[n], thr[n], left[n], right[n], leaf[n] = (
-            feature[r], thr[r], left[r], right[r], leaf[r]
-        )
-    return CompiledTree(feature=feature, thr=quantize(thr), left=left, right=right, leaf=leaf)
+    """One flat float tree → int64 form with ``leaf`` as the payload."""
+    return CompiledTree(
+        feature=t["feature"].astype(np.int64),
+        thr=quantize(t["threshold"]),
+        left=t["left"].astype(np.int64),
+        right=t["right"].astype(np.int64),
+        leaf=np.asarray(leaf, dtype=np.int64),
+    )
 
 
 def compile_class_forest(rf) -> CompiledForest:

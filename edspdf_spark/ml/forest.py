@@ -7,9 +7,9 @@ contract: fit on the E1 feature matrix
 (xmin/ymin/xmax/ymax/width/height/first_page/last_page/page_num/n_chars —
 reference ``edspdf/pipes/embeddings/box_layout_preprocessor.py:25-95``),
 predict argmax class per bloc. Deterministic (seeded bootstrap + feature
-subsampling). A NULL (NaN) feature goes right at every node, and so does
-every row at a node whose threshold was learned from a NULL feature
-(``NaN <= t`` and ``x <= NaN`` are both False).
+subsampling). A NULL (NaN) feature goes right at every node
+(``NaN <= t`` is False): split points lie between distinct non-NaN
+values only, and NaNs sort last, so training counts them on the right.
 
 This module trains; it does not serve. A fitted forest is served on
 Spark through :mod:`edspdf_spark.ml.compiled`: ``train_*`` →
@@ -28,6 +28,15 @@ import numpy as np
 import pandas as pd
 
 
+def _split_points(xs, min_leaf):
+    """Left sizes ``i`` of the candidate splits of a sorted column: between
+    distinct consecutive non-NaN values (NaN sorts last and never equals
+    itself, so it must not make a candidate), ``min_leaf`` on each side."""
+    n = len(xs)
+    splits = np.nonzero((xs[1:] != xs[:-1]) & ~np.isnan(xs[1:]))[0] + 1
+    return splits[(splits >= min_leaf) & (n - splits >= min_leaf)]
+
+
 def _gini_split(x_col, y, classes, min_leaf):
     """Best threshold on one feature column by Gini impurity.
 
@@ -42,8 +51,7 @@ def _gini_split(x_col, y, classes, min_leaf):
     for ci, c in enumerate(classes):
         counts[1:, ci] = np.cumsum(ys == c)
     total = counts[-1]
-    splits = np.nonzero(xs[1:] != xs[:-1])[0] + 1
-    splits = splits[(splits >= min_leaf) & (n - splits >= min_leaf)]
+    splits = _split_points(xs, min_leaf)
     if not len(splits):
         return (None, np.inf)
     lc = counts[splits].astype(np.float64)
@@ -83,8 +91,7 @@ def _mse_split(x_col, y, min_leaf):
     n = len(ys)
     cum = np.cumsum(ys)
     cum2 = np.cumsum(ys * ys)
-    splits = np.nonzero(xs[1:] != xs[:-1])[0] + 1  # left size i
-    splits = splits[(splits >= min_leaf) & (n - splits >= min_leaf)]
+    splits = _split_points(xs, min_leaf)  # left size i
     if not len(splits):
         return (None, np.inf)
     sl, s2l = cum[splits - 1], cum2[splits - 1]

@@ -18,8 +18,7 @@ The per-document kernels are the composed path's code
 the DuckDB oracles check the fused output against SQL. Callers:
 the flagship ``entry()``, ``bench.py``, ``job.run_snapshot_job`` (via
 ``metrics.run_pipeline_fused_with_metrics``, which adds per-partition
-metrics rows to the same pass), ``job.run_pipeline_stream_snapshot`` and
-``streaming.run_pipeline_stream``.
+metrics rows to the same pass) and ``job.run_pipeline_stream_snapshot``.
 
 One input record is one document (the reference's one ``PDFDoc`` per
 record): a url in two rows gets one aggregate set per row, where the

@@ -11,8 +11,6 @@ whole deployment story; trained forest models ride the UDF closure
 
 from __future__ import annotations
 
-import base64
-import hashlib
 import os
 import zipfile
 from typing import Optional
@@ -52,80 +50,3 @@ def build_pyfiles_zip(
             zf.write(path, arcname)
     return out_path
 
-
-def build_wheel(
-    out_dir: str,
-    version: str = "0.1.0",
-    dist_name: str = "edspdf_spark",
-    pipeline=None,
-) -> str:
-    """X9 — build an installable PEP-427 wheel of the package, pure stdlib
-    (zipfile + hashlib; no setuptools/poetry in the sandbox).
-
-    ≙ reference ``Pipeline.package()`` (``edspdf/pipeline.py:891-922`` →
-    ``utils/package.py``, a poetry-driven wheel builder): same artifact
-    contract — ``pip install <wheel>`` makes the pipeline importable — with
-    the trained-pipeline config embedded as package data
-    (``edspdf_spark/artifact/config.json``) when ``pipeline`` is given.
-    Returns the wheel path.
-    """
-    import json
-
-    pkg_root = os.path.dirname(os.path.abspath(__file__))
-    base = os.path.dirname(pkg_root)
-    tag = "py3-none-any"
-    wheel_name = f"{dist_name}-{version}-{tag}.whl"
-    dist_info = f"{dist_name}-{version}.dist-info"
-    os.makedirs(out_dir, exist_ok=True)
-    out_path = os.path.join(out_dir, wheel_name)
-
-    records = []
-
-    def _add(zf: zipfile.ZipFile, arcname: str, data: bytes) -> None:
-        zf.writestr(zipfile.ZipInfo(arcname, (2020, 1, 1, 0, 0, 0)), data)
-        digest = base64.urlsafe_b64encode(hashlib.sha256(data).digest())
-        records.append(f"{arcname},sha256={digest.decode().rstrip('=')},{len(data)}")
-
-    with zipfile.ZipFile(out_path, "w", zipfile.ZIP_DEFLATED) as zf:
-        for dirpath, dirnames, filenames in os.walk(pkg_root):
-            dirnames[:] = sorted(d for d in dirnames if d != "__pycache__")
-            for fn in sorted(filenames):
-                if not fn.endswith(".py"):
-                    continue
-                full = os.path.join(dirpath, fn)
-                with open(full, "rb") as f:
-                    _add(zf, os.path.relpath(full, base).replace(os.sep, "/"), f.read())
-        if pipeline is not None:
-            _add(
-                zf,
-                "edspdf_spark/artifact/config.json",
-                json.dumps(pipeline.to_config(), indent=1, sort_keys=True).encode(),
-            )
-        _add(
-            zf,
-            f"{dist_info}/METADATA",
-            (
-                "Metadata-Version: 2.1\n"
-                f"Name: {dist_name}\n"
-                f"Version: {version}\n"
-                "Summary: PySpark-native extraction/analytics engine "
-                "(EDS-PDF semantics re-expressed Spark-first)\n"
-                "Requires-Dist: pyspark>=3.4\n"
-                "Requires-Dist: numpy\n"
-                "Requires-Dist: pandas\n"
-            ).encode(),
-        )
-        _add(
-            zf,
-            f"{dist_info}/WHEEL",
-            (
-                "Wheel-Version: 1.0\n"
-                "Generator: edspdf_spark.packaging\n"
-                "Root-Is-Purelib: true\n"
-                f"Tag: {tag}\n"
-            ).encode(),
-        )
-        record_name = f"{dist_info}/RECORD"
-        record_body = "\n".join(records + [f"{record_name},,"]) + "\n"
-        zf.writestr(zipfile.ZipInfo(record_name, (2020, 1, 1, 0, 0, 0)), record_body)
-    return out_path

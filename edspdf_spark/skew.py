@@ -138,16 +138,3 @@ def repartition_pages(
     return bucketed.repartition(num_partitions, F.col("_salt")).drop(
         "_len_bucket", "_salt"
     )
-
-
-def partition_size_stats(pages: DataFrame) -> DataFrame:
-    """Diagnostic: per-partition doc count and payload bytes (used by tests
-    to assert the layout is balanced)."""
-    return (
-        pages.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.octet_length("html")).alias("bytes_in"),
-        )
-    )

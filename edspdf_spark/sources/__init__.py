@@ -12,7 +12,6 @@ from edspdf_spark.sources.writers import (
     write_training_shards,
 )
 from edspdf_spark.sources.bucketed import table_bucketing, write_bucketed_table
-from edspdf_spark.sources.resume import ResumableSink
 from edspdf_spark.sources.warc import (
     build_cdx,
     decode_payload,
@@ -44,5 +43,4 @@ __all__ = [
     "write_training_shards",
     "write_bucketed_table",
     "table_bucketing",
-    "ResumableSink",
 ]

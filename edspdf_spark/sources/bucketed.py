@@ -3,7 +3,7 @@ shuffle.
 
 Every repeated operation of the production pipeline keys on the document
 identity: blocs ⨝ pages (url), aggregates ⨝ metrics (url), dedup-label ⨝
-corpus (doc_id), resume anti-joins (url), ANN codes ⨝ embeddings
+corpus (doc_id), ANN codes ⨝ embeddings
 (vec_id). On an unbucketed corpus each of those joins shuffles BOTH
 sides every time it runs — at the 10^12-document north star that is the
 dominant recurring cost. Bucketing moves that shuffle to WRITE time,

@@ -39,7 +39,7 @@ import hashlib
 import io
 import re
 import zlib
-from typing import Iterator, List, Optional, Tuple
+from typing import Iterator, Optional, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -160,13 +160,6 @@ def iter_warc_responses(
             payload = block
         ts = _parse_warc_date(headers.get("warc-date", ""))
         yield url, ts, payload
-
-
-def parse_warc_responses(
-    data,
-) -> List[Tuple[str, Optional[_dt.datetime], bytes]]:
-    """Eager form of :func:`iter_warc_responses` (tests/small files)."""
-    return list(iter_warc_responses(data))
 
 
 def read_warc(

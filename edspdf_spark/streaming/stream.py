@@ -1,21 +1,25 @@
 """Structured Streaming ingest for the pages pipeline.
 
 The reference is batch-only (SURVEY.md §2.6); a Common-Crawl-scale ingest
-is naturally a stream of WARC drops. Two patterns:
+is naturally a stream of WARC drops. The stream jobs here:
 
-* ``run_pipeline_stream`` — file-source stream over a pages parquet
-  directory, the fused extract → classify → aggregate operator
-  (``operators/fused.py``) per micro-batch via ``foreachBatch`` (one
-  input record is one document, so the per-document pipeline has no
-  cross-batch state and the sink is idempotent by batch id).
+* ``read_pages_stream`` — file-source stream over a pages parquet
+  directory. The pipeline job over it is
+  ``job.run_pipeline_stream_snapshot``: the fused extract → classify →
+  aggregate operator per micro-batch, committed exactly-once into the
+  same ``SnapshotTable`` as the batch snapshot job.
+* ``dedup_stream_first_seen`` — cross-batch url dedup lineage through
+  ``applyInPandasWithState``.
 * ``windowed_ingest_metrics`` — a genuinely stateful streaming aggregation:
   doc/byte counts per (1-minute warc_ts window, lang) with a watermark for
   late arrivals — the streaming face of the metrics table.
+* ``stream_neardup_gate`` — per-batch MinHash-LSH flags against a corpus
+  snapshot.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Optional
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,42 +35,6 @@ def read_pages_stream(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(path)
     )
-
-
-def run_pipeline_stream(
-    pages_stream: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    masks=None,
-    threshold: float = 0.1,
-    transform: Optional[Callable[[DataFrame], DataFrame]] = None,
-    trigger_available_now: bool = True,
-):
-    """Stream → fused extract → classify → aggregate → parquet,
-    exactly-once per micro-batch (checkpointed batch ids + idempotent
-    per-batch overwrite into batch-partitioned output)."""
-    from edspdf_spark.operators import run_pipeline_fused
-
-    masks = masks or [("body", 0.0, 0.0, 1.0, 1.0)]
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if transform is not None:
-            batch_df = transform(batch_df)
-        agg = run_pipeline_fused(batch_df, masks, threshold=threshold)
-        agg = agg.withColumn("batch_id", F.lit(batch_id))
-        # idempotent on retry: replace this batch's partition only
-        agg.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("batch_id").parquet(out_dir)
-
-    writer = (
-        pages_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def dedup_stream_first_seen(
@@ -266,11 +234,11 @@ def stream_neardup_gate(
     The snapshot's signatures are computed ONCE and persisted (at 10^12
     docs a production system stores the banded table between dumps —
     same note as the batch incremental path); each micro-batch computes
-    its own signatures with the pure-expression MinHash (stateless, so
-    streaming-legal) and runs the batch kernel inside ``foreachBatch``,
-    writing distinct ``(url, snap_id)`` flags idempotently into a
-    batch-partitioned sink (retries overwrite their own partition only —
-    the same exactly-once recipe as ``run_pipeline_stream``).
+    its own signatures with the vectorized MinHash kernel (stateless, so
+    streaming-legal) and runs the batch kernel inside ``foreachBatch``.
+    The gate owns its sink: distinct ``(url, snap_id)`` flags go into a
+    ``batch_id``-partitioned parquet directory under dynamic partition
+    overwrite, so a retried micro-batch replaces its own partition only.
 
     Downstream either drops flagged urls or routes them to exact
     rescoring; unflagged pages are certifiably bucket-novel vs the

@@ -57,12 +57,13 @@ def test_compiled_tracks_float_forest_closely():
 
 def _null_trained(fit):
     """Fit on the fixture with ``f_n_chars`` NULL on every row (as on
-    blocs with NULL text), so some nodes learn a NaN threshold."""
+    blocs with NULL text): NaN never equals NaN, yet no split point may
+    come from it, so no node learns a NaN threshold."""
     df = C.fixture_blocs()
     X = C._fixture_features(df)
     X[:, 9] = np.nan
     model = fit(df, X)
-    assert any(np.isnan(t["threshold"][t["feature"] >= 0]).any() for t in model.trees)
+    assert not any(np.isnan(t["threshold"][t["feature"] >= 0]).any() for t in model.trees)
     return model
 
 
@@ -105,7 +106,7 @@ def test_duckdb_case_tree_parity(factory, kind):
     the float features themselves — the serve with :func:`C.quantize`,
     DuckDB with ``micro_sql`` — and the frame carries NULL features
     (NaN in pandas, NULL once scanned by DuckDB): both must route them
-    right. The ``null_trained_*`` forests add NaN thresholds."""
+    right. The ``null_trained_*`` forests were fit with a NULL column."""
     cf = factory()
     n_feat = int(max(t.feature.max() for t in cf.trees)) + 1
     rng = np.random.default_rng(7)

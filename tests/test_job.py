@@ -1,8 +1,6 @@
 """Batched + streaming snapshot-job drivers: resume, exactly-once,
 metrics-table totals, and content identity vs the plain pipeline."""
 
-import os
-
 from pyspark.sql import functions as F
 
 from edspdf_spark.fixtures import build_pages_df
@@ -87,7 +85,7 @@ def test_repeated_url_gives_one_aggregate_set_per_record(spark, tmp_path):
     documents: the snapshot job and the stream job give exactly
     run_pipeline_fused's per-record rows, not one merged set per url."""
     from edspdf_spark.operators import run_pipeline_fused
-    from edspdf_spark.streaming import read_pages_stream, run_pipeline_stream
+    from edspdf_spark.streaming import read_pages_stream
 
     first = build_pages_df(spark, 40, partitions=2)
     a, b = first.orderBy("url").limit(2).collect()
@@ -104,16 +102,19 @@ def test_repeated_url_gives_one_aggregate_set_per_record(spark, tmp_path):
     agg_t, _ = job_tables(spark, base)
     assert _rows(agg_t.read()) == expected
 
-    src, out = str(tmp_path / "rsrc"), str(tmp_path / "rout")
+    src = str(tmp_path / "rsrc")
     pages.write.parquet(src)
-    q = run_pipeline_stream(
+    sbase = str(tmp_path / "rstream")
+    q = run_pipeline_stream_snapshot(
         read_pages_stream(spark, src, max_files_per_trigger=1),
-        out,
-        str(tmp_path / "rckpt"),
+        spark,
+        sbase,
+        checkpoint_dir=str(tmp_path / "rckpt"),
         masks=MASKS,
     )
     q.awaitTermination(120)
-    assert _rows(spark.read.parquet(out)) == expected
+    stream_t, _ = job_tables(spark, sbase)
+    assert _rows(stream_t.read()) == expected
 
 
 def test_stream_job_exactly_once(spark, tmp_path):

@@ -405,10 +405,11 @@ def test_media_meta_real_codec_headers():
     IHDR, JPEG SOFn (past APPn/DQT segments), WebP VP8L/VP8/VP8X, GIF —
     header-only, no entropy decode."""
     import struct as _s
+    import zlib
 
     import numpy as np
 
-    from edspdf_spark.functions.multimodal import _parse_one, encode_png
+    from edspdf_spark.functions.multimodal import _PNG_SIG, _parse_one, encode_png
     from edspdf_spark.kernel.jpeg import encode_jpeg
     from edspdf_spark.kernel.webp import encode_webp_lossless
 
@@ -417,6 +418,14 @@ def test_media_meta_real_codec_headers():
     m = _parse_one(encode_png(arr))
     assert (m["media_type"], m["width"], m["height"], m["channels"]) == (
         "image", 5, 4, 3,
+    )
+    # palette (colour type 3), the common web PNG: one index sample/pixel
+    ihdr = b"IHDR" + _s.pack(">IIBBBBB", 5, 4, 8, 3, 0, 0, 0)
+    m = _parse_one(
+        _PNG_SIG + _s.pack(">I", 13) + ihdr + _s.pack(">I", zlib.crc32(ihdr))
+    )
+    assert (m["media_type"], m["width"], m["height"], m["channels"]) == (
+        "image", 5, 4, 1,
     )
     m = _parse_one(encode_jpeg(arr, quality=80))
     assert (m["media_type"], m["width"], m["height"], m["channels"]) == (

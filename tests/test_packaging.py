@@ -48,53 +48,3 @@ def test_pyfiles_zip_is_importable(tmp_path):
         check=True,
     )
     assert "STAGES 1" in out.stdout
-
-
-def test_build_wheel(tmp_path):
-    """X9 wheel: PEP-427 layout (METADATA/WHEEL/RECORD with sha256), and a
-    clean interpreter importing the package from the extracted wheel —
-    the pip-install contract of reference Pipeline.package()."""
-    import base64
-    import hashlib
-    import subprocess
-    import sys
-    import zipfile
-
-    from edspdf_spark.packaging import build_wheel
-
-    whl = build_wheel(str(tmp_path), version="0.2.0")
-    assert whl.endswith("edspdf_spark-0.2.0-py3-none-any.whl")
-    zf = zipfile.ZipFile(whl)
-    names = zf.namelist()
-    di = "edspdf_spark-0.2.0.dist-info"
-    assert f"{di}/METADATA" in names and f"{di}/WHEEL" in names
-    record = zf.read(f"{di}/RECORD").decode().splitlines()
-    listed = {line.split(",")[0] for line in record}
-    assert set(names) == listed
-    # RECORD hashes verify
-    for line in record:
-        arc, h, _size = line.split(",")
-        if not h:
-            continue
-        digest = base64.urlsafe_b64encode(
-            hashlib.sha256(zf.read(arc)).digest()
-        ).decode().rstrip("=")
-        assert h == f"sha256={digest}", arc
-
-    target = tmp_path / "site"
-    zf.extractall(str(target))
-    out = subprocess.run(
-        [
-            sys.executable,
-            "-c",
-            "import sys; sys.path.insert(0, sys.argv[1]); "
-            "from edspdf_spark.kernel.pdf import is_pdf; "
-            "print('WHEEL_OK', is_pdf(b'%PDF-1.5'))",
-            str(target),
-        ],
-        capture_output=True,
-        text=True,
-        cwd=str(tmp_path),
-        check=True,
-    )
-    assert "WHEEL_OK True" in out.stdout

@@ -20,7 +20,6 @@ from edspdf_spark.functions.quality import (
     top_ngram_stats,
     with_array_repetition,
     with_pii_signals,
-    with_top_ngrams,
 )
 
 
@@ -79,13 +78,6 @@ def test_top_ngram_stats(docs):
     # short/empty docs survive with zeros
     assert got[3] == ("", 0, 0.0)
     assert got[4] == ("", 0, 0.0)
-
-
-def test_with_top_ngrams_joins_all(docs):
-    out = with_top_ngrams(docs, ns=(2, 3))
-    assert out.count() == docs.count()
-    cols = set(out.columns)
-    assert {"top_2gram", "top_3gram", "top_3gram_char_fraction"} <= cols
 
 
 def test_pii_signals(spark):

@@ -17,8 +17,8 @@ import pytest
 from edspdf_spark.fixtures import build_pages_df
 from edspdf_spark.sources.warc import (
     decode_payload,
+    iter_warc_responses,
     pages_to_warc,
-    parse_warc_responses,
     read_warc,
     sniff_charset,
     write_warc,
@@ -84,7 +84,7 @@ def _golden_warc() -> bytes:
 
 def test_parse_golden_stream_plain_and_gzip():
     for data in (_golden_warc(), gzip.compress(_golden_warc())):
-        got = parse_warc_responses(data)
+        got = list(iter_warc_responses(data))
         assert [(u, p) for u, _, p in got] == [
             ("https://a.example/", b"<html>plain</html>\r\n"),
             ("https://b.example/", b"<html>chunked</html>"),
@@ -101,21 +101,19 @@ def test_parse_member_per_record_gzip():
     m2 = gzip.compress(b"WARC/1.0\r\nWARC-Type: resource\r\n"
                        b"WARC-Target-URI: u2\r\nWARC-Date: 2024-01-01T00:00:00Z\r\n"
                        b"Content-Length: 2\r\n\r\nyo\r\n\r\n")
-    got = parse_warc_responses(m1 + m2)
+    got = list(iter_warc_responses(m1 + m2))
     assert [(u, p) for u, _, p in got] == [("u1", b"hi"), ("u2", b"yo")]
 
 
 def test_streaming_parse_matches_eager():
     import io
 
-    from edspdf_spark.sources.warc import iter_warc_responses
-
     data = _golden_warc()
-    eager = parse_warc_responses(data)
+    eager = list(iter_warc_responses(data))
     assert list(iter_warc_responses(io.BytesIO(data))) == eager
     assert list(iter_warc_responses(io.BytesIO(gzip.compress(data)))) == eager
     # truncated file: parse stops cleanly at the cut record
-    cut = parse_warc_responses(data[: len(data) - 40])
+    cut = list(iter_warc_responses(data[: len(data) - 40]))
     assert [u for u, _, _ in cut] == [u for u, _, _ in eager][: len(cut)]
 
 
