@@ -25,6 +25,16 @@ fold as a few runs instead of one run per glyph; the fold result is the
 same (whitespace takes the previous char's style). Glyph text and width
 come from a per-font ``cid → (text, width)`` table filled lazily.
 
+``PdfDocument._scan`` keeps a per-process memo of parsed object bodies
+keyed on their bytes up to the next ``endobj``, so only byte-identical
+objects are shared (``make_pdf``'s font, page-tree and catalog templates
+are; a per-document subset-font tag such as ``ABCDEF+Name`` is not). A body
+is stored only if it is ≤ 2 KB and its value and trailing whitespace end
+inside it, so :func:`parse_value` read nothing but the key and the
+``endobj`` after it. Streams are never stored (RC4 decryption rewrites
+``StreamObj.raw`` in place), no code mutates a parsed value, and the memo
+is cleared at 1 MB of keys (~20 MB of values).
+
 ``all_texts=False``: text inside Form XObjects (pdfminer ``LTFigure``) is
 NOT part of the page's text lines, so ``Do`` is ignored.
 
@@ -47,6 +57,7 @@ exactly like the reference maps ``PDFException`` (pdfminer.py:130-135).
 
 from __future__ import annotations
 
+import hashlib
 import re
 import struct
 import zlib
@@ -329,8 +340,37 @@ def _apply_filters(raw: bytes, d: dict, resolve) -> bytes:
 # the LAST definition of an object number in the file wins, matching the
 # newest xref section; compressed objects come from ObjStm expansion)
 
-_OBJ_RE = re.compile(rb"(\d+)[\x00\t\n\x0c\r ]+(\d+)[\x00\t\n\x0c\r ]+obj\b")
 _TRAILER_RE = re.compile(rb"trailer")
+# "N G obj" read backwards from a literal "obj" followed by a non-word byte
+_OBJ_REV_RE = re.compile(
+    rb"jbo(?<![0-9A-Z_a-z]jbo)[\x00\t\n\x0c\r ]+(\d+)[\x00\t\n\x0c\r ]+(\d+)"
+)
+
+
+def _obj_headers(data: bytes) -> List[Tuple[int, int, int, int]]:
+    """``(start, end, num, gen)`` of every ``N G obj`` header in file order:
+    the spans of the forward ``(?<![0-9])(\\d+) ws+ (\\d+) ws+ obj\\b``, found
+    from each literal ``obj`` on the reversed bytes, where ``rev[i:j]`` is
+    ``data[n - j : n - i]`` and the groups are gen and num, each reversed."""
+    n = len(data)
+    return [
+        (n - m.end(), n - m.start(), int(m[2][::-1]), int(m[1][::-1]))
+        for m in _OBJ_REV_RE.finditer(data[::-1])
+    ][::-1]
+
+
+# parsed non-stream object bodies keyed on their bytes (module docstring)
+_MEMO_SPAN = 2048
+_MEMO_MAX_BYTES = 1 << 20
+_memo: Dict[bytes, Tuple[object, int]] = {}  # body → (value, end offset)
+_memo_bytes = 0
+
+
+def _clear_memo() -> None:
+    global _memo_bytes
+    _memo.clear()
+    _memo_bytes = 0
+
 
 # PDF 32000-1 §7.6.3.3 password padding string (public spec constant)
 _PW_PAD = bytes(
@@ -366,8 +406,6 @@ def _std_file_key(
     password: bytes, o_entry: bytes, p: int, file_id: bytes, r: int, n: int
 ) -> bytes:
     """Algorithm 2: file encryption key from the (empty) user password."""
-    import hashlib
-
     padded = (password + _PW_PAD)[:32]
     h = hashlib.md5(
         padded + o_entry[:32] + (p & 0xFFFFFFFF).to_bytes(4, "little") + file_id
@@ -382,8 +420,6 @@ def _std_file_key(
 def _check_user_password(key: bytes, u_entry: bytes, file_id: bytes, r: int) -> bool:
     """Algorithms 4 (R2) / 5 (R3): does ``key`` open the file — i.e. was
     it derived from the real (empty) user password?"""
-    import hashlib
-
     if r == 2:
         return _rc4(key, _PW_PAD) == u_entry[:32]
     x = _rc4(key, hashlib.md5(_PW_PAD + file_id).digest())
@@ -401,6 +437,7 @@ class PdfDocument:
         self._gens: Dict[int, int] = {}
         self._font_cache: Dict[int, "_Font"] = {}
         self._scan()
+        self.trailers = self._parse_trailers()
         self._decrypt_if_needed()
         self._expand_object_streams()
         self.root = self._find_root()
@@ -422,17 +459,21 @@ class PdfDocument:
 
     # -- scanning ----------------------------------------------------------
     def _scan(self) -> None:
+        global _memo_bytes
         data = self.data
-        covered = 0  # skip matches inside a previously-consumed stream body
-        for m in _OBJ_RE.finditer(data):
-            if m.start() < covered:
+        covered = 0  # skip headers inside a previously-consumed stream body
+        for start, body, num, gen in _obj_headers(data):
+            if start < covered:
                 continue
-            if m.start() > 0 and data[m.start() - 1 : m.start()].isdigit():
+            self._gens[num] = gen
+            end = data.find(b"endobj", body, body + _MEMO_SPAN + 6)
+            key = data[body:end] if end >= 0 else None
+            hit = _memo.get(key)
+            if hit is not None:
+                self.objs[num], covered = hit[0], body + hit[1]
                 continue
-            num = int(m.group(1))
-            self._gens[num] = int(m.group(2))
             try:
-                val, pos = parse_value(data, m.end())
+                val, pos = parse_value(data, body)
             except PdfParseError:
                 continue
             pos2 = _skip_ws(data, pos)
@@ -442,36 +483,41 @@ class PdfDocument:
                     body_start += 2
                 elif data[body_start : body_start + 1] in (b"\n", b"\r"):
                     body_start += 1
-                raw, end = self._stream_extent(val, body_start)
+                raw, covered = self._stream_extent(val, body_start)
                 val = StreamObj(val, raw)
-                covered = end
             else:
                 covered = pos
+                if pos2 <= end:  # every byte read lies in key + "endobj"
+                    if _memo_bytes + len(key) > _MEMO_MAX_BYTES:
+                        _clear_memo()
+                    _memo[key] = (val, pos - body)
+                    _memo_bytes += len(key)
             self.objs[num] = val
+
+    def _parse_trailers(self) -> List[dict]:
+        out = []
+        for m in _TRAILER_RE.finditer(self.data):
+            try:
+                out.append(parse_value(self.data, m.end())[0])
+            except PdfParseError:
+                pass
+        return [d for d in out if isinstance(d, dict)]
 
     # -- encryption (standard security handler, RC4, empty user password) --
     def _encrypt_dict(self):
         """The /Encrypt dict + first file ID from the LAST trailer that
         carries one (classic ``trailer`` keyword or an XRef-stream dict)."""
         enc_ref, file_id = None, b""
-        for m in _TRAILER_RE.finditer(self.data):
-            try:
-                d, _ = parse_value(self.data, m.end())
-            except PdfParseError:
-                continue
-            if isinstance(d, dict) and "Encrypt" in d:
-                enc_ref = d["Encrypt"]
-                ids = d.get("ID")
-                if isinstance(ids, list) and ids and isinstance(ids[0], bytes):
-                    file_id = ids[0]
-        if enc_ref is None:
-            for v in self.objs.values():
-                d = v.dict if isinstance(v, StreamObj) else v
-                if isinstance(d, dict) and d.get("Type") == "XRef" and "Encrypt" in d:
-                    enc_ref = d["Encrypt"]
-                    ids = d.get("ID")
-                    if isinstance(ids, list) and ids and isinstance(ids[0], bytes):
-                        file_id = ids[0]
+        objs = (v.dict if isinstance(v, StreamObj) else v for v in self.objs.values())
+        holders = [d for d in self.trailers if "Encrypt" in d] or [
+            d for d in objs
+            if isinstance(d, dict) and d.get("Type") == "XRef" and "Encrypt" in d
+        ]
+        for d in holders:
+            enc_ref = d["Encrypt"]
+            ids = d.get("ID")
+            if isinstance(ids, list) and ids and isinstance(ids[0], bytes):
+                file_id = ids[0]
         if enc_ref is None:
             return None, b""
         enc = self.resolve(enc_ref)
@@ -507,8 +553,6 @@ class PdfDocument:
         key = _std_file_key(b"", o_entry, p, file_id, r, n)
         if not _check_user_password(key, u_entry, file_id, r):
             raise PdfParseError("encrypted with a non-empty user password")
-        import hashlib
-
         enc_id = id(enc)
         for num, val in self.objs.items():
             if not isinstance(val, StreamObj):
@@ -574,12 +618,8 @@ class PdfDocument:
     def _find_root(self) -> dict:
         # prefer the LAST trailer dict carrying /Root, else scan for Catalog
         root_ref = None
-        for m in _TRAILER_RE.finditer(self.data):
-            try:
-                d, _ = parse_value(self.data, m.end())
-            except PdfParseError:
-                continue
-            if isinstance(d, dict) and "Root" in d:
+        for d in self.trailers:
+            if "Root" in d:
                 root_ref = d["Root"]
         if root_ref is not None:
             root = self.resolve(root_ref)

@@ -55,7 +55,12 @@ def aggregate_simple(
     new_paragraph_threshold: float = 1.5,
     label_map: Optional[Dict[str, Union[str, List[str]]]] = None,
 ) -> DataFrame:
-    """blocs → aggregates(url, label, text, properties)."""
+    """blocs → aggregates(url, label, text, properties).
+
+    Groups by url, not by input record: two input records that share a url
+    become ONE aggregate set, their lines sorted together by
+    ``(page_num, bloc_ord)`` so they interleave. The fused path
+    (``operators.fused``) keeps one aggregate set per input record."""
 
     def flush(pdf: pd.DataFrame) -> pd.DataFrame:
         urls = pdf["url"].to_numpy()

@@ -11,7 +11,7 @@ from edspdf_spark.sources.writers import (
     write_files,
     write_training_shards,
 )
-from edspdf_spark.sources.bucketed import table_bucketing, write_bucketed_table
+from edspdf_spark.sources.bucketed import write_bucketed_table
 from edspdf_spark.sources.warc import (
     build_cdx,
     decode_payload,
@@ -42,5 +42,4 @@ __all__ = [
     "write_files",
     "write_training_shards",
     "write_bucketed_table",
-    "table_bucketing",
 ]

@@ -39,7 +39,7 @@ from __future__ import annotations
 
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed_table(
@@ -64,22 +64,3 @@ def write_bucketed_table(
     if sort_in_buckets:
         writer = writer.sortBy(key, *(extra_sort_cols or []))
     writer.saveAsTable(table)
-
-
-def table_bucketing(spark: SparkSession, table: str) -> dict:
-    """The catalog's recorded layout for ``table``:
-    ``{"n_buckets": int | None, "bucket_cols": [..], "sort_cols": [..]}``
-    (``n_buckets`` None when the table is not bucketed) — the probe tests
-    and tooling use to assert a corpus is join-ready."""
-    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
-    info = {r["col_name"]: r["data_type"] for r in rows}
-    out = {"n_buckets": None, "bucket_cols": [], "sort_cols": []}
-    if "Num Buckets" in info:
-        out["n_buckets"] = int(info["Num Buckets"])
-        out["bucket_cols"] = [
-            c.strip(" `") for c in info.get("Bucket Columns", "").strip("[]").split(",") if c.strip(" `")
-        ]
-        out["sort_cols"] = [
-            c.strip(" `") for c in info.get("Sort Columns", "").strip("[]").split(",") if c.strip(" `")
-        ]
-    return out

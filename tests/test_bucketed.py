@@ -10,7 +10,22 @@ only come from the bucketing itself.
 import pytest
 from pyspark.sql import functions as F
 
-from edspdf_spark.sources.bucketed import table_bucketing, write_bucketed_table
+from edspdf_spark.sources.bucketed import write_bucketed_table
+
+
+def table_bucketing(spark, table: str) -> dict:
+    """The catalog's recorded layout for ``table``:
+    ``{"n_buckets": int | None, "bucket_cols": [..], "sort_cols": [..]}``
+    (``n_buckets`` None when the table is not bucketed)."""
+    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
+    info = {r["col_name"]: r["data_type"] for r in rows}
+    out = {"n_buckets": None, "bucket_cols": [], "sort_cols": []}
+    if "Num Buckets" in info:
+        out["n_buckets"] = int(info["Num Buckets"])
+        for field, name in (("bucket_cols", "Bucket Columns"), ("sort_cols", "Sort Columns")):
+            cols = info.get(name, "").strip("[]").split(",")
+            out[field] = [c.strip(" `") for c in cols if c.strip(" `")]
+    return out
 
 
 @pytest.fixture()

@@ -95,6 +95,18 @@ class TestReadingOrder:
         assert reading_order_lt(left, right)
         assert not reading_order_lt(right, left)
 
+    @pytest.mark.parametrize("axis", ["y", "x"])
+    def test_tie_break_on_centres(self, axis):
+        # the two boxes overlap on both axes after the shrink, so only the
+        # (y-centre, x-centre) tie-break orders them; the centres differ by
+        # 0.01, so scaling any one of the four centres flips an answer
+        if axis == "y":
+            a, b = self.b(0, 0.2, 0.40, 0.4, 0.60), self.b(0, 0.2, 0.41, 0.4, 0.61)
+        else:
+            a, b = self.b(0, 0.20, 0.4, 0.40, 0.6), self.b(0, 0.21, 0.4, 0.41, 0.6)
+        assert reading_order_lt(a, b)
+        assert not reading_order_lt(b, a)
+
     def test_sort_full_page(self):
         rows = [
             self.b(0, 0.5, 0.5, 0.9, 0.6),  # row 2 right
@@ -221,6 +233,24 @@ class TestAggregateKernel:
         ]
         out = aggregate_doc(lines)
         assert out["body"][0] == "a\nb\n\nc"
+
+    @pytest.mark.parametrize(
+        "thresholds, sep",
+        [
+            ({"new_paragraph_threshold": 1.5}, "\n"),
+            ({"new_paragraph_threshold": 1.4999}, "\n\n"),
+            ({"new_line_threshold": 1.5, "new_paragraph_threshold": 9.0}, " "),
+            ({"new_line_threshold": 1.4999, "new_paragraph_threshold": 9.0}, "\n"),
+        ],
+    )
+    def test_ratio_equal_to_threshold_is_not_above(self, thresholds, sep):
+        # heights 2.0 and dy 3.0 give a ratio of exactly 1.5: only a ratio
+        # strictly above a threshold takes that threshold's separator
+        lines = [
+            self.line(0, 0.0, 0.0, 1.0, 2.0, "a"),
+            self.line(0, 0.0, 3.0, 1.0, 5.0, "b"),
+        ]
+        assert aggregate_doc(lines, **thresholds)["body"][0] == "a" + sep + "b"
 
     def test_same_line_space(self):
         lines = [

@@ -954,3 +954,156 @@ def test_mutated_pin_pdfs_never_escape_error_contract():
         False, True,
     }
     _assert_error_contract(_mutate(rng, files[t % len(files)]) for t in range(200))
+
+
+# --- object memo and anchored object scan --------------------------------
+# ``PdfDocument._scan`` shares parsed non-stream object bodies between the
+# documents of one process, keyed on their bytes. Sharing must never change
+# what a document parses to, whatever was parsed before it.
+
+
+def _tou_pdf(base: int) -> bytes:
+    """The ``_raw_pdf`` "Hi" document with a ToUnicode CMap that maps every
+    cid to ``base + cid``: all its non-stream objects stay byte-identical."""
+    import zlib
+
+    data = _raw_pdf(_ENC_CONTENT)
+    old = zlib.compress(b"1 beginbfrange <0000> <FFFF> <0000> endbfrange")
+    new = zlib.compress(b"1 beginbfrange <0000> <FFFF> <%04X> endbfrange" % base)
+    out = data.replace(
+        b"/Length %d>>\nstream\n%s\n" % (len(old), old),
+        b"/Length %d>>\nstream\n%s\n" % (len(new), new),
+    )
+    assert out != data
+    return out
+
+
+def _memo_corpus():
+    docs = [_pin_pdf(_PIN_CASES[k]) for k in sorted(_PIN_CASES)]
+    docs += [make_pdf(paginate(split_lines(f"doc {i} " * (3 + 9 * i)))) for i in range(6)]
+    docs += [_raw_pdf(_ENC_CONTENT, rotate=r) for r in (0, 90)]
+    docs += [_encrypted_pdf(_ENC_CONTENT, r=r) for r in (2, 3)] + [_tou_pdf(1)]
+    return docs
+
+
+def _parse_or_error(data: bytes):
+    try:
+        return parse_pdf(data)
+    except PdfParseError as e:
+        return str(e)
+
+
+def test_object_memo_is_independent_of_order_and_clearing():
+    from edspdf_spark.kernel import pdf
+
+    docs = _memo_corpus()
+    cold = []
+    for d in docs:
+        pdf._clear_memo()
+        cold.append(_parse_or_error(d))
+    pdf._clear_memo()
+    assert [_parse_or_error(d) for d in docs] == cold  # filling
+    assert pdf._memo  # non-vacuous: the corpus shares objects
+    assert [_parse_or_error(d) for d in docs] == cold  # warm
+    assert [_parse_or_error(d) for d in reversed(docs)] == cold[::-1]
+    # the shared objects are the same Python objects across documents
+    a, b = pdf.PdfDocument(docs[-5]), pdf.PdfDocument(docs[-4])
+    assert a.objs[5] is b.objs[5] and a.objs[1] is not b.objs[1]
+
+
+def test_shared_font_objects_keep_their_own_tounicode():
+    from edspdf_spark.kernel import pdf
+
+    def text(data):
+        return "".join(t for ln in parse_pdf(data)[1] for _, _, t in ln[5])
+
+    docs = [_raw_pdf(_ENC_CONTENT), _tou_pdf(1), _tou_pdf(0x20)]
+    for order in (docs, docs[::-1]):
+        pdf._clear_memo()
+        got = {d: text(d) for d in order}
+        assert [got[d] for d in docs] == ["Hi", "Ij", "h\x89"]
+    twins = [pdf.PdfDocument(d) for d in docs[:2]]
+    assert twins[0].objs[5] is twins[1].objs[5]  # the Type0 font dict
+    assert twins[0].objs[4].raw != twins[1].objs[4].raw
+
+
+@pytest.mark.parametrize("r", [2, 3])
+def test_rc4_document_after_its_plain_twin(r):
+    """Decryption rewrites stream bytes in place; streams are never shared,
+    so neither twin sees the other's bytes."""
+    from edspdf_spark.kernel import pdf
+
+    pdf._clear_memo()
+    plain = parse_pdf(_raw_pdf(_ENC_CONTENT))
+    twins = pdf.PdfDocument(_raw_pdf(_ENC_CONTENT)), pdf.PdfDocument(
+        _encrypted_pdf(_ENC_CONTENT, r=r)
+    )
+    assert twins[0].objs[5] is twins[1].objs[5]
+    assert twins[0].objs[1] is not twins[1].objs[1]
+    assert parse_pdf(_encrypted_pdf(_ENC_CONTENT, r=r)) == plain
+    assert parse_pdf(_raw_pdf(_ENC_CONTENT)) == plain
+    assert "".join(t for ln in plain[1] for _, _, t in ln[5]) == "Hi"
+
+
+def test_object_memo_stays_within_its_bound(monkeypatch):
+    from edspdf_spark.kernel import pdf
+
+    assert pdf._MEMO_MAX_BYTES == 1 << 20
+    monkeypatch.setattr(pdf, "_MEMO_MAX_BYTES", 700)
+    docs = [_tou_pdf(i) for i in range(1, 4)] + [
+        _raw_pdf(_ENC_CONTENT.replace(b"100 700", b"%d 700" % i)).replace(
+            b"/BaseFont/F", b"/BaseFont/F%d" % i
+        )
+        for i in range(20)
+    ]
+    cold = []
+    for d in docs:
+        pdf._clear_memo()
+        cold.append(parse_pdf(d))
+    pdf._clear_memo()
+    cleared = False
+    for d, want in zip(docs, cold):
+        before = len(pdf._memo)
+        assert parse_pdf(d) == want
+        cleared |= len(pdf._memo) < before
+        assert pdf._memo_bytes == sum(map(len, pdf._memo)) <= 700
+        assert all(len(k) <= pdf._MEMO_SPAN for k in pdf._memo)
+    assert cleared
+
+
+_OLD_OBJ_RE = re.compile(rb"(\d+)[\x00\t\n\x0c\r ]+(\d+)[\x00\t\n\x0c\r ]+obj\b")
+# the same spans with a lookbehind: a forward match never starts after a digit
+_FWD_OBJ_RE = re.compile(rb"(?<![0-9])(\d+)[\x00\t\n\x0c\r ]+(\d+)[\x00\t\n\x0c\r ]+obj\b")
+
+
+def test_anchored_object_scan_matches_forward_regex():
+    import random
+
+    from edspdf_spark.kernel.pdf import _obj_headers
+
+    def forward(data, regex=_OLD_OBJ_RE):
+        return [
+            (m.start(), m.end(), int(m[1]), int(m[2]))
+            for m in regex.finditer(data)
+        ]
+
+    rng = random.Random(7)
+    pieces = [b"0", b"1", b"42", b" ", b"\n", b"\r\n", b"\x00", b"\x0c", b"obj",
+              b"endobj", b"jbo", b"o", b"b", b"j", b"_", b"x", b"R", b"0" * 40]
+    cases = [_pin_pdf(_PIN_CASES[k]) for k in sorted(_PIN_CASES)[:3]]
+    cases.append(_raw_pdf(_ENC_CONTENT).replace(b"\n5 0 obj", b"\n" + b"0" * 900 + b"5 0 obj"))
+    cases += [b"".join(rng.choice(pieces) for _ in range(rng.randrange(30))) for _ in range(3000)]
+    for data in cases:
+        assert _obj_headers(data) == forward(data) == forward(data, _FWD_OBJ_RE), data
+
+
+def test_object_memo_skips_values_that_run_past_endobj():
+    # the memo key stops at the first "endobj", here inside a string, so
+    # the value reads bytes the key does not hold and must not be stored
+    from edspdf_spark.kernel import pdf
+
+    def doc(v):
+        return b"%PDF-1.4\n1 0 obj\n<</T(endobj)/V " + v + b">>\nendobj\ntrailer\n<</Root 1 0 R>>\n"
+
+    pdf._clear_memo()
+    assert [pdf.PdfDocument(doc(v)).objs[1]["V"] for v in (b"1", b"2")] == [1, 2]
